@@ -195,7 +195,7 @@ def run_pipeline_once(spark, corpus_path: str, out: str) -> tuple[float, int]:
     t0 = time.time()
     # n_buckets=None -> auto by input bytes (r6 floor fix: a 20k-row
     # floor run resolves to 1 bucket instead of writing a 100TB-sized
-    # (family, source, bucket) layout; the 5M corpus resolves by bytes)
+    # sink layout; the 5M corpus resolves by bytes)
     metrics = run_pipeline(spark, seq, out, n_buckets=None, resume=False,
                            input_clustered=False)
     dt = time.time() - t0

@@ -53,8 +53,8 @@ def resolve_n_buckets(scan_bytes: int, out: str) -> int:
 
     The (source, bucket) resume quantum only needs to be STABLE PER
     OUTPUT, not a global constant (VERDICT r5): a 20k-row run writing
-    the 3,432-file (family, source, bucket) layout sized for 100 TB
-    pays ~14 s of pure file-commit floor at 32 cores.  Sizing rule: one
+    a sink layout sized for 100 TB pays a file-commit floor per sink
+    dir (measured ~14 s at 32 cores for 3,432 files).  Sizing rule: one
     bucket per ~512 MB of measured compressed input, rounded up to a
     power of two, clamped to [1, 1024] — at 100 TB that is the 1024 cap
     (50 sources x 1024 buckets ≈ 2 GB resume quanta), at sandbox sizes
@@ -91,7 +91,7 @@ def _route_clustering(scan_bytes: int, input_clustered: bool) -> tuple[int, bool
     partitionBy fan-out needs — measured 27.5 s -> 109.7 s on the
     20k-row run).  > 512 MB measured: "rebalance" — files-per-dir must
     track each dir's BYTES, not a global constant (a fixed salt gives
-    the hottest family dir arbitrarily-large files and every cold dir
+    the hottest source's dirs arbitrarily-large files and every cold dir
     needless ones); AQE splits hot dirs at advisoryPartitionSizeInBytes
     and packs the cold tail.  UNKNOWN size (0: non-file inputs) takes
     the protective salt — failing toward extra small files and a
@@ -239,12 +239,11 @@ def run_pipeline(
             # runs keep the re-parse: their sinks contain PRIOR runs'
             # partitions too, and metrics must cover only this run's
             # pending rows.
-            # the sink tree is many small per-dir files (the write-side
-            # file-count discipline), so the default split size shreds
-            # the read-back into thousands of open-cost-padded tasks
-            # (measured: 2,582 splits over ~1,300 files at the 20M-row
-            # bench; ~3 scheduling-bound passes).  Widen splits for the
-            # metric phase only — restored in the finally block below.
+            # the sink tree is one or more files per (source, bucket)
+            # dir — up to 50 sources x 1024 buckets at 100 TB — so the
+            # default split size shreds the read-back into many
+            # open-cost-padded tasks.  Widen splits for the metric
+            # phase only — restored in the finally block below.
             readback_split_override = spark.conf.get(
                 "spark.sql.files.maxPartitionBytes")
             spark.conf.set("spark.sql.files.maxPartitionBytes",

@@ -4,11 +4,15 @@ Reference parity: the reference yields one event stream; its `north_rule`
 extension routes rows by family with an `unknown` sink so no row is ever
 dropped (systemlog.py tail rule [R-M]).
 
-Design: ONE single-pass write with ``partitionBy('family', ...)`` —
-Spark's dynamic partitioning fans out to every family in one job (no
-per-family filter loop re-scanning the fact table N times).  With
-dynamic partitionOverwriteMode, re-running a subset of partitions
-overwrites only those partitions → idempotent resume (P9).
+Design: ONE single-pass write partitioned by the resume quantum
+``(source, bucket)``, with ``family`` an in-file column sorted within
+each file.  A family sink is a ``family = x`` filter that parquet
+row-group statistics prune, so the fan-out costs one file per
+``(source, bucket)`` dir rather than one per ``(family, source,
+bucket)`` dir.  The unit of dynamic partition overwrite is then the
+ledger's resume quantum: re-running a pending ``(source, bucket)``
+replaces its one dir whole, so a row whose family changed between runs
+leaves no stale copy behind -> idempotent resume (P9).
 """
 
 from __future__ import annotations
@@ -18,7 +22,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SINK_PARTITIONS = ["family", "source", "bucket"]
+SINK_PARTITIONS = ["source", "bucket"]
+
+
+def _check_sink_layout(sinks_path: str, overwrite_mode: str) -> None:
+    """Refuse a dynamic overwrite into a tree laid out by the old
+    ``(family, source, bucket)`` partitioning: the rewritten
+    ``(source, bucket)`` dirs would sit beside ``family=*`` dirs still
+    holding the same rows, so every resumed row would read back twice.
+    A static write truncates the tree, so it may replace any layout."""
+    if overwrite_mode != "dynamic" or not os.path.isdir(sinks_path):
+        return
+    if any(d.startswith("family=") for d in os.listdir(sinks_path)):
+        raise ValueError(
+            f"{sinks_path} holds family=* partition dirs from the old "
+            "(family, source, bucket) sink layout; a dynamic overwrite would "
+            "duplicate every rewritten row - rerun fresh (resume=False) or "
+            "write to a new output dir"
+        )
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -30,15 +51,17 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
           write_salt: int = 2, cluster: bool | str = True,
           cluster_partitions: int | None = None,
           overwrite_mode: str = "dynamic") -> None:
-    """Write the fan-out sinks in one pass, partitioned by family.
+    """Write the fan-out sinks in one pass, partitioned by (source, bucket).
 
+    Every row lands in exactly one family sink: its ``(source, bucket)``
+    dir, in the family run of a file sorted by (source, bucket, family).
     `fields` (map) and `extra` (array) columns are parquet-native; the
     binding `tokens` column lands in every sink bit-identically.
 
     File-count discipline: without clustering, EVERY task writes a file
-    into EVERY (family, source, bucket) dir it sees -> O(tasks x dirs)
-    small files.  Repartitioning on the partition keys (+ a doc_id salt
-    so one hot dir never pins a single task) bounds files per dir to
+    into EVERY (source, bucket) dir it sees -> O(tasks x dirs) small
+    files.  Repartitioning on the partition keys (+ a doc_id salt so one
+    hot dir never pins a single task) bounds files per dir to
     `write_salt` and total files to dirs x salt — at 100 TB this is the
     difference between a working table and a small-files meltdown.
 
@@ -52,46 +75,47 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     cold dir co-hashed into a split slot pays one small file per slice
     — bounded by that slot's split count, never by the task count; at
     production advisory sizes this is a small constant on top of one
-    file per dir.)  A fixed salt is wrong in both directions at large scale: the
-    hottest family dir gets `write_salt` arbitrarily-large files while
-    every cold dir pays `write_salt` tiny ones (the datagen v2-layout
-    lesson, BENCH/RESULTS_r5.md §5b).  Below ~512 MB the salt path
-    stays the default because AQE's coalescing caps write parallelism
-    exactly when the whole input fits in a handful of advisory chunks
-    (measured 13% slower at local[32] on 2M rows; see
+    file per dir.)  A fixed salt is wrong in both directions at large
+    scale: the hottest source's dirs get `write_salt` arbitrarily-large
+    files while every cold dir pays `write_salt` tiny ones (the datagen
+    v2-layout lesson, BENCH/RESULTS_r5.md §5b).  Below ~512 MB the salt
+    path stays the default because AQE's coalescing caps write
+    parallelism exactly when the whole input fits in a handful of
+    advisory chunks (measured 13% slower at local[32] on 2M rows; see
     `cluster_partitions`).  `write_salt`/`cluster_partitions` are
     ignored in rebalance mode.
 
     `cluster=False` skips that shuffle: correct ONLY when the input is
     already laid out by (source, bucket) — e.g. scanning the production
     corpus, whose partition dirs align tasks with (source, bucket), so
-    each task fans out to at most |families| dirs.  The stateless parse
-    stage preserves partitioning 1:1, so the alignment survives it.
+    each task writes one dir.  The stateless parse stage preserves
+    partitioning 1:1, so the alignment survives it.
 
     `cluster_partitions` pins the clustering shuffle's partition count
     (default 2x defaultParallelism).  Without an explicit N, AQE
     coalesces the exchange toward 64 MB chunks — the same handful of
     write tasks at EVERY core count, which caps write parallelism and
     was measured 13% slower at local[32] on 2M rows.  File counts are
-    unaffected: each (family, source, bucket, salt) combo hashes to one
+    unaffected: each (source, bucket, salt) combo hashes to one
     partition regardless of N.
 
-    `overwrite_mode`: "dynamic" (default) is what makes PARTIAL reruns
-    idempotent — re-writing a pending (source, bucket) subset replaces
-    only those partition dirs (P9 resume).  A FRESH full run should pass
-    "static": dynamic's commit stages every partition dir and the driver
-    moves them one by one — measured ~3 s of serial driver time on a
-    2,400-dir sink layout that static (truncate once, normal committer)
-    does not pay.  Callers that resume keep dynamic.
+    `overwrite_mode` is passed as this write's `partitionOverwriteMode`
+    option; the session conf is left alone.  "dynamic" (default) is what
+    makes PARTIAL reruns idempotent — re-writing a pending (source,
+    bucket) subset replaces exactly those dirs (P9 resume).  A FRESH
+    full run should pass "static": dynamic's commit stages every
+    partition dir and the driver moves them one by one, which static
+    (truncate once, normal committer) does not pay.  Callers that resume
+    keep dynamic.  A dynamic write into a tree of the old (family,
+    source, bucket) layout raises ValueError.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", overwrite_mode)
+    _check_sink_layout(sinks_path, overwrite_mode)
     if "bucket" not in df.columns:
         df = with_bucket(df, n_buckets)
     if cluster == "rebalance":
         df = df.hint("rebalance", *SINK_PARTITIONS)
     elif cluster:
-        n = cluster_partitions or spark.sparkContext.defaultParallelism * 2
+        n = cluster_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
         # salt hash MUST be independent of the bucket hash: bucket is
         # crc32(doc_id) % n_buckets, so crc32(doc_id) % write_salt is
         # CONSTANT within a dir whenever write_salt divides n_buckets —
@@ -102,7 +126,14 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
             *[F.col(c) for c in SINK_PARTITIONS],
             F.pmod(F.crc32(F.concat(F.col("doc_id"), F.lit("#w"))), F.lit(write_salt)),
         )
-    df.write.mode("overwrite").partitionBy(*SINK_PARTITIONS).parquet(sinks_path)
+    # contiguous family runs per file keep read_sink(family) prunable;
+    # the sort also satisfies the writer's required (source, bucket)
+    # ordering, so the plan holds one local sort, not two
+    (df.sortWithinPartitions(*SINK_PARTITIONS, "family")
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", overwrite_mode)
+     .partitionBy(*SINK_PARTITIONS)
+     .parquet(sinks_path))
 
 
 def compact_sinks(spark: SparkSession, sinks_path: str,
@@ -111,11 +142,11 @@ def compact_sinks(spark: SparkSession, sinks_path: str,
                   cluster: bool | str = True) -> dict:
     """Post-ingest small-file compaction — the maintenance job every
     partitioned production table needs: N streaming/incremental writes
-    leave `salt x runs` files per (family, source, bucket) dir; this
-    rewrites each dir's files into `write_salt` (default 1) without
-    changing a single row.  (`cluster="rebalance"` passes through to
-    route(): at 100 TB a compaction wants advisory-sized files per dir,
-    not a fixed count.)
+    leave `salt x runs` files per (source, bucket) dir; this rewrites
+    each dir's files into `write_salt` (default 1), family-sorted as
+    route() writes them, without changing a single row.
+    (`cluster="rebalance"` passes through to route(): at 100 TB a
+    compaction wants advisory-sized files per dir, not a fixed count.)
 
     Mechanics: one clustered read-rewrite into a staging dir (the same
     single-pass partitionBy shape as route(), static overwrite — this
@@ -159,13 +190,8 @@ def compact_sinks(spark: SparkSession, sinks_path: str,
 
 
 def read_sink(spark: SparkSession, sinks_path: str, family: str | None = None) -> DataFrame:
+    """The routed rows, or one family's sink: a filter on the in-file
+    `family` column that row-group statistics prune."""
     df = spark.read.option("basePath", sinks_path).parquet(sinks_path)
     return df.where(F.col("family") == family) if family else df
 
-
-def list_families(sinks_path: str) -> list[str]:
-    return sorted(
-        d.split("=", 1)[1]
-        for d in os.listdir(sinks_path)
-        if d.startswith("family=")
-    )

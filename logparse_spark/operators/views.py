@@ -50,5 +50,7 @@ def typed_view(parsed: DataFrame, family: str,
 
 
 def sink_view(spark: SparkSession, sinks_path: str, family: str) -> DataFrame:
-    """Partition-pruned typed view over one family's routed sink."""
+    """Typed view over one family's routed sink: the sink files are
+    family-sorted within each (source, bucket) dir, so the family filter
+    prunes by parquet row groups, not by directory."""
     return typed_view(read_sink(spark, sinks_path, family), family)

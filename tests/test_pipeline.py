@@ -100,10 +100,11 @@ def test_fields_map_matches_oracle(spark, pipeline_out, oracle_events):
 
 
 def test_compact_sinks_preserves_rows_and_reduces_files(spark, tmp_path):
-    """compact_sinks must rewrite the (family, source, bucket) tree into
-    fewer files without changing a single row — tokens bit-identical,
+    """compact_sinks must rewrite the (source, bucket) tree into fewer
+    files without changing a single row — tokens bit-identical,
     partition dirs preserved, old tree gone."""
     import os
+    import re
 
     from logparse_spark.operators.route import compact_sinks, read_sink
 
@@ -130,9 +131,17 @@ def test_compact_sinks_preserves_rows_and_reduces_files(spark, tmp_path):
     after = {r["doc_id"]: r["tokens"]
              for r in after_df.select("doc_id", "tokens").collect()}
     assert after == before  # bit-identical tokens, no row lost or duped
-    # partition tree shape preserved (family dirs still prunable)
-    fams = {d for d in os.listdir(sinks) if d.startswith("family=")}
-    assert "family=unknown" in fams and len(fams) > 3
+    # partition tree shape preserved: source=*/bucket=* dirs, one file
+    # each, and the unknown family still readable from its sorted runs
+    files_per_dir = {}
+    for root, _, files in os.walk(sinks):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            files_per_dir[os.path.relpath(root, sinks)] = n
+    assert files_per_dir and all(re.fullmatch(r"source=[^/]+/bucket=\d+", d)
+                                 for d in files_per_dir), sorted(files_per_dir)
+    assert set(files_per_dir.values()) == {1}, files_per_dir
+    assert read_sink(spark, sinks, "unknown").count() > 0
     assert not os.path.exists(sinks + "__compacting")
     assert not os.path.exists(sinks + "__precompact")
 
@@ -156,7 +165,9 @@ def test_route_rebalance_mode_bytes_proportional(spark, tmp_path):
     sinks = str(tmp_path / "rebalance_sinks")
     adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     old = spark.conf.get(adv)
-    spark.conf.set(adv, "64k")  # tiny advisory -> hot dirs must split
+    # tiny advisory -> the zipf-hot dirs must split; each (source,
+    # bucket) dir holds every family, so 64k would split cold dirs too
+    spark.conf.set(adv, "128k")
     try:
         route(enriched, sinks, n_buckets=2, cluster="rebalance")
     finally:
@@ -171,7 +182,7 @@ def test_route_rebalance_mode_bytes_proportional(spark, tmp_path):
         for f in files:
             if f.endswith(".parquet"):
                 per_dir[root] += 1
-    # the zipf-hot slots exceeded 64k and were split by AQE...
+    # the zipf-hot slots exceeded 128k and were split by AQE...
     assert max(per_dir.values()) > 1, dict(per_dir)
     # ...while fully-cold slots coalesce to one file per dir
     assert min(per_dir.values()) == 1

@@ -1,9 +1,14 @@
 """P9 resume: kill after K partitions, re-run, outputs identical to an
 uninterrupted run; re-running a completed pipeline is a no-op."""
 
+import os
+import re
+
+import pytest
+
 from logparse_spark.ledger import Ledger
 from logparse_spark.main import run_pipeline
-from logparse_spark.operators.route import read_sink, with_bucket
+from logparse_spark.operators.route import read_sink, route, with_bucket
 from logparse_spark.sources.datagen import generate_sequences
 
 N = 2000
@@ -56,7 +61,8 @@ def test_overwrite_mode_split_fresh_static_resume_dynamic(spark, tmp_path, monke
     # VERDICT r5 #6: fresh full runs (resume=False) must take the cheap
     # static-overwrite commit; resume runs must keep dynamic (partial
     # idempotent partition rewrite).  Spy on route() to pin which mode
-    # each path requests AND check the session conf route() actually set.
+    # each path requests; the mode is a per-write option, so the session
+    # conf must be left at its prior value.
     import logparse_spark.main as mainmod
     from logparse_spark.operators import route as routemod
 
@@ -68,13 +74,50 @@ def test_overwrite_mode_split_fresh_static_resume_dynamic(spark, tmp_path, monke
         return real_route(df, sinks_path, **kw)
 
     monkeypatch.setattr(mainmod, "route", spy)
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(conf)
     seq = generate_sequences(spark, 300, partitions=2)
     run_pipeline(spark, seq, str(tmp_path / "fresh"), n_buckets=2, resume=False)
     assert seen == ["static"]
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+    assert spark.conf.get(conf) == prior
     run_pipeline(spark, seq, str(tmp_path / "res"), n_buckets=2, resume=True)
     assert seen == ["static", "dynamic"]
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "dynamic"
+    assert spark.conf.get(conf) == prior
+
+
+def _route_rows(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, source string, family string, tokens array<int>")
+
+
+def test_dynamic_rewrite_replaces_quantum_after_family_change(spark, tmp_path):
+    """A resumed (source, bucket) replaces its one sink dir whole: a row
+    whose family changed between runs is read back exactly once, with
+    its new family, and other quanta are untouched."""
+    sinks = str(tmp_path / "sinks")
+    rows = [("d1", "s1", "gc", [1]), ("d2", "s1", "flush", [2]), ("d3", "s2", "gc", [3])]
+    route(_route_rows(spark, rows), sinks, n_buckets=1, overwrite_mode="static")
+    redo = [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2])]
+    route(_route_rows(spark, redo), sinks, n_buckets=1, overwrite_mode="dynamic")
+    got = sorted(map(tuple, read_sink(spark, sinks).select(
+        "doc_id", "source", "family", "tokens").collect()))
+    assert got == [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2]),
+                   ("d3", "s2", "gc", [3])]
+    assert [r["doc_id"] for r in read_sink(spark, sinks, "gc").collect()] == ["d3"]
+
+
+def test_dynamic_write_refuses_family_partitioned_tree(spark, tmp_path):
+    """A tree laid out by (family, source, bucket) must not take a
+    dynamic (resume) overwrite — its family=* dirs would keep a second
+    copy of every rewritten row; a static (fresh) write replaces it."""
+    sinks = str(tmp_path / "old_layout")
+    df = with_bucket(_route_rows(spark, [("d1", "s1", "gc", [1]), ("d2", "s2", "flush", [2])]), 1)
+    df.write.partitionBy("family", "source", "bucket").parquet(sinks)
+    with pytest.raises(ValueError, match=re.escape(sinks)):
+        route(df, sinks, n_buckets=1, overwrite_mode="dynamic")
+    route(df, sinks, n_buckets=1, overwrite_mode="static")
+    assert not any(d.startswith("family=") for d in os.listdir(sinks))
+    assert sorted(r["doc_id"] for r in read_sink(spark, sinks).collect()) == ["d1", "d2"]
 
 
 def test_auto_n_buckets_resolution(spark, tmp_path):
