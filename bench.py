@@ -196,8 +196,7 @@ def run_pipeline_once(spark, corpus_path: str, out: str) -> tuple[float, int]:
     # n_buckets=None -> auto by input bytes (r6 floor fix: a 20k-row
     # floor run resolves to 1 bucket instead of writing a 100TB-sized
     # sink layout; the 5M corpus resolves by bytes)
-    metrics = run_pipeline(spark, seq, out, n_buckets=None, resume=False,
-                           input_clustered=False)
+    metrics = run_pipeline(spark, seq, out, n_buckets=None, resume=False)
     dt = time.time() - t0
     return dt, int(metrics["routed_rows"])
 
@@ -425,8 +424,7 @@ def versioned_bench(runs: int = 3, n: int | None = None) -> dict:
             shutil.rmtree(o, ignore_errors=True)
             os.sync()
             t0 = time.time()
-            m = run_pipeline(spark, seq, o, n_buckets=None, resume=False,
-                             input_clustered=False)
+            m = run_pipeline(spark, seq, o, n_buckets=None, resume=False)
             times.append(time.time() - t0)
             routed, unknown = int(m["routed_rows"]), int(m["unknown_rows"])
         med, disc = _median_of_clean(times)

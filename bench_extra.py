@@ -96,8 +96,7 @@ def pipeline_bench(runs: int, sf_dir: str) -> dict:
         os.sync()
         probe = _settle() if i >= 1 else host_probe()
         t0 = time.time()
-        m = run_pipeline(spark, seq, out, n_buckets=None, resume=False,
-                         input_clustered=False)
+        m = run_pipeline(spark, seq, out, n_buckets=None, resume=False)
         legs.append({
             "wall": round(time.time() - t0, 2),
             "route_sec": m.get("route_sec"),

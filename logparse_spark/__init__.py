@@ -12,8 +12,8 @@ Architecture is Spark-first, NOT a port:
 
 - the ordered rule table is *data* (broadcast), not code;
 - detokenize + ordered-first-match-regex-extract run in ONE
-  ``mapInPandas`` stage (Arrow batches, vectorized ``Series.str.extract``,
-  zero per-row Python UDFs);
+  ``mapInArrow`` stage (Arrow batches, zero-copy ``tokens``, direct
+  ``re`` loops over class-masked rows, zero per-row Python UDFs);
 - enrichment is a broadcast hash join; routing is a partitioned fan-out
   write; aggregates are plain ``groupBy``/``rollup`` (partial+final,
   whole-stage codegen);

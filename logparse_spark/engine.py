@@ -14,8 +14,8 @@ into a single Arrow-batched stage:
   biggest throughput lever.
 - detokenize reads the ListArray's flattened values buffer once per
   batch (one contiguous bytes buffer, C-level per-row slices);
-- extraction is pandas ``Series.str.extract`` over class-masked string
-  Series (strings must become Python objects for `re` anyway);
+- extraction is a direct ``re`` search loop over the class-masked rows'
+  object arrays (strings must become Python objects for `re` anyway);
 - first-match-wins preserved by ordered iteration + mask update
   (rules.py §capture/§switch semantics);
 - NO per-row Python UDFs (BASELINE.json mandate).
@@ -258,38 +258,6 @@ def parse_texts(texts: pd.Series, compiled: dict) -> dict:
         "fields": fields,
         "promoted": promoted,
     }
-
-
-def parse_batch(pdf: pd.DataFrame, compiled: dict) -> pd.DataFrame:
-    """pandas-path wrapper (tests/profiling); production uses Arrow path."""
-    from logparse_spark.tokenizer import detokenize_series
-
-    n = len(pdf)
-    idx = pd.RangeIndex(n)
-    texts = detokenize_series(pdf["tokens"].reset_index(drop=True))
-    cols = parse_texts(texts, compiled)
-    out = pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"].reset_index(drop=True),
-            "source": pdf["source"].reset_index(drop=True),
-            "tokens": pdf["tokens"].reset_index(drop=True),
-            "n_tok": pdf["n_tok"].reset_index(drop=True),
-            "level": cols["level"],
-            "thread_name": cols["thread_name"],
-            "thread_id": cols["thread_id"],
-            "ts": cols["ts"],
-            "source_file": cols["source_file"],
-            "source_line": cols["source_line"].astype("Int32"),
-            "message": cols["message"],
-            "extra": cols["extra"],
-            "rule_id": cols["rule_id"],
-            "family": cols["family"],
-            "fields": pd.Series(cols["fields"], index=idx),
-        }
-    )
-    for c, _ in PROMOTED_COLUMNS:
-        out[c] = pd.Series(cols["promoted"][c], index=idx, dtype=object)
-    return out
 
 
 def _arrow_output_schema(tz: str) -> pa.Schema:

@@ -1,6 +1,6 @@
 """spark-submit entrypoint (P10): the full parse -> enrich -> route ->
-aggregate pipeline with skew salting, lineage manifests, Observation
-metrics and ledger-based idempotent resume.
+aggregate pipeline with lineage manifests, Observation metrics and
+ledger-based idempotent resume.
 
     spark-submit --py-files logparse_spark.zip -m logparse_spark.main \
         --input /data/sequences --out /data/pipeline_out
@@ -27,10 +27,9 @@ from pyspark.sql import functions as F
 from logparse_spark.engine import parse_sequences
 from logparse_spark.ledger import Ledger
 from logparse_spark.manifests import observed, partition_manifests, write_manifests
-from logparse_spark.operators.aggregate import write_metrics
+from logparse_spark.operators.aggregate import grain_counts, write_metrics
 from logparse_spark.operators.enrich import enrich, rules_dim
-from logparse_spark.operators.route import route, with_bucket
-from logparse_spark.operators.skew import salted_repartition
+from logparse_spark.operators.route import quantum_dir, route, with_bucket
 from logparse_spark.session import get_spark
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim, write_sequences
 
@@ -84,7 +83,7 @@ def resolve_n_buckets(scan_bytes: int, out: str) -> int:
     return n
 
 
-def _route_clustering(scan_bytes: int, input_clustered: bool) -> tuple[int, bool | str]:
+def _route_clustering(scan_bytes: int) -> tuple[int, bool | str]:
     """(write_salt, cluster_mode) for the sink write, by MEASURED input
     size.  <= 512 MB: pinned-salt shuffle, one file per dir (AQE
     rebalance coalescing collapses the write parallelism a wide
@@ -96,8 +95,6 @@ def _route_clustering(scan_bytes: int, input_clustered: bool) -> tuple[int, bool
     and packs the cold tail.  UNKNOWN size (0: non-file inputs) takes
     the protective salt — failing toward extra small files and a
     parallel write, never toward a serialized tiny-input rebalance."""
-    if input_clustered:
-        return 1, False
     if scan_bytes > 512 << 20:
         return 1, "rebalance"
     return (1 if scan_bytes > 0 else 2), True
@@ -109,24 +106,18 @@ def run_pipeline(
     out: str,
     n_buckets: int | None = None,
     resume: bool = True,
-    salt: int = 8,
-    repartition_to: int | None = None,
     fail_after_partitions: int | None = None,
-    input_clustered: bool = False,
-    cache_mode: str = "auto",
 ) -> dict:
     """Run the full pipeline; returns the Observation metrics dict.
 
     `fail_after_partitions` (tests only) processes just K pending
     partitions then stops — simulating a mid-run crash for resume tests.
 
-    `cache_mode` picks how the metric aggregations see the parsed data:
-    - "full": persist the whole enriched frame (cache fills during the
-      route action's map side — zero extra parse; best when it fits RAM)
-    - "narrow": after the route write, one extra parse pass fills a
-      ~100-bytes/row projection cache (best when full rows would spill:
-      measured at 10M rows the full persist costs ~25% of wall clock)
-    - "auto": "narrow" when the scanned input exceeds ~2 GB, else "full"
+    The metric tables, manifests and ledger rows derive from a
+    column-pruned read-back of the `(source, bucket)` sink dirs this run
+    wrote.  A fresh run's static overwrite truncated the tree, so that
+    is the whole tree; a resumed run's dynamic overwrite replaced
+    exactly its pending dirs, so it reads those.
     """
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
@@ -154,6 +145,8 @@ def run_pipeline(
                 )
     df = with_bucket(sequences_df, n_buckets)
     ledger = Ledger(spark, f"{out}/ledger")
+    sinks = f"{out}/sinks"
+    read_paths = [sinks]
     if resume:
         # pending is ledger-small (<= sources x buckets): collect, then
         # broadcast-semi-join — keeps the big side shuffle-free, and at
@@ -168,9 +161,10 @@ def run_pipeline(
             }
         pending = spark.createDataFrame(pending_rows, "source string, bucket int")
         df = df.join(F.broadcast(pending), ["source", "bucket"], "left_semi")
-
-    if repartition_to:
-        df = salted_repartition(df, repartition_to, salt=salt)
+        # the metric read-back names the pending dirs: a (source, bucket)
+        # filter over the whole tree measured ~1 s slower on the 3k-row
+        # perfbench resumed tail (4 cores)
+        read_paths = [quantum_dir(sinks, s, b) for s, b in pending_rows]
 
     parsed = parse_sequences(df)
     enriched = enrich(parsed, nodes_dim(spark), rules_dim(spark))
@@ -178,91 +172,34 @@ def run_pipeline(
     # expression) so routing and the metric grain share it
     enriched = with_bucket(enriched, n_buckets)
     enriched, obs = observed(enriched)
+    write_salt, cluster_mode = _route_clustering(scan_bytes)
 
-    # The big table is touched exactly twice: (1) the routed sink write,
-    # (2) one narrow column-pruned pass that fills a small cache (metric
-    # columns only, ~100B/row) from which grain/histogram/rollup/
-    # family-metrics/manifests/ledger all derive.  (At true 10^12 scale
-    # pass (2) would instead re-read the committed Iceberg sinks —
-    # metadata-cheap listing; on local parquet dirs recompute is faster.)
-    from pyspark import StorageLevel
-
-    from logparse_spark.operators.aggregate import grain_counts
-
-    if cache_mode == "auto":
-        # threshold on COMPRESSED scan bytes; token sequences expand
-        # ~6-10x from parquet to in-memory rows
-        cache_mode = "narrow" if scan_bytes > 512 << 20 else "full"
-    # sink-write clustering is scale-adaptive too (_route_clustering)
-    write_salt, cluster_mode = _route_clustering(scan_bytes, input_clustered)
-
-    if cache_mode == "full":
-        # full-frame persist fills during the route action's map side —
-        # zero extra parse; the metric aggregations read the cache
-        metric_src = enriched
-        enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        metric_src = None  # built after the route action
-
-    timings: dict[str, float] = {}
-    readback_split_override = None  # set iff the metric read-back widens splits
+    t_route = time.time()
+    # fresh full runs (resume off) take the cheaper static-overwrite
+    # commit; resumed runs need dynamic for partial idempotent rewrite
+    route(enriched, sinks, n_buckets=n_buckets,
+          cluster=cluster_mode, write_salt=write_salt,
+          overwrite_mode="dynamic" if resume else "static")  # the one big action
+    timings = {"route_sec": round(time.time() - t_route, 2)}
     try:
-        t_route = time.time()
-        # fresh full runs (resume off) take the cheaper static-overwrite
-        # commit; resumed runs need dynamic for partial idempotent rewrite
-        route(enriched, f"{out}/sinks", n_buckets=n_buckets,
-              cluster=cluster_mode, write_salt=write_salt,
-              overwrite_mode="dynamic" if resume else "static")  # the one big action
-        timings["route_sec"] = round(time.time() - t_route, 2)
-        try:
-            metrics = dict(obs.get)
-        except Exception:  # noqa: BLE001 - zero-row plans never run the
-            # CollectMetrics node (AQE empty-relation), so the
-            # Observation has nothing to report
-            metrics = {"routed_rows": 0, "total_tokens": 0,
-                       "unknown_rows": 0, "families": 0}
+        metrics = dict(obs.get)
+    except Exception:  # noqa: BLE001 - zero-row plans never run the
+        # CollectMetrics node (AQE empty-relation), so the
+        # Observation has nothing to report
+        metrics = {"routed_rows": 0, "total_tokens": 0,
+                   "unknown_rows": 0, "families": 0}
 
-        narrow_cols = [
-            "doc_id", "source", "bucket", "family", "rule_id", "level",
-            "n_tok", "duration_ms", "bytes_in", "bytes_out", "count",
-        ]
-        if metric_src is None and not resume and metrics.get("routed_rows"):
-            # narrow mode, FRESH full run: the sinks just written ARE the
-            # enriched rows, so the metric pass re-reads them column-
-            # pruned (the heavy tokens/message/fields columns never leave
-            # parquet) instead of RE-PARSING the whole corpus through the
-            # Python engine a second time.  Measured at the 20M-row
-            # sf1.0 bench: the re-parse metric pass was 68-70 s of the
-            # 190 s wall; the pruned read-back is seconds.  This is also
-            # the 100 TB design (re-read the committed table; at scale
-            # the listing is metadata-cheap under Iceberg).  Resumed
-            # runs keep the re-parse: their sinks contain PRIOR runs'
-            # partitions too, and metrics must cover only this run's
-            # pending rows.
-            # the sink tree is one or more files per (source, bucket)
-            # dir — up to 50 sources x 1024 buckets at 100 TB — so the
-            # default split size shreds the read-back into many
-            # open-cost-padded tasks.  Widen splits for the metric
-            # phase only — restored in the finally block below.
-            readback_split_override = spark.conf.get(
-                "spark.sql.files.maxPartitionBytes")
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           str(256 << 20))
-            metric_src = (
-                spark.read.option("basePath", f"{out}/sinks")
-                .parquet(f"{out}/sinks")
-                .select(*narrow_cols)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        elif metric_src is None:
-            # narrow mode on a resumed run: one extra parse pass fills a
-            # tiny projection cache instead of spilling full rows to disk
-            metric_src = enriched.select(*narrow_cols).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-
-        t_metrics = time.time()
-        grain = grain_counts(metric_src).cache()
+    # the explicit schema keeps partition values as written (no type
+    # inference: source "007" stays "007") and reads an empty tree
+    narrow = enriched.select(
+        "doc_id", "source", "bucket", "family", "rule_id", "level",
+        "n_tok", "duration_ms", "bytes_in", "bytes_out", "count",
+    ).schema
+    metric_src = (spark.read.schema(narrow).option("basePath", sinks)
+                  .parquet(*read_paths))
+    t_metrics = time.time()
+    grain = grain_counts(metric_src).cache()
+    try:
         write_metrics(metric_src, f"{out}/metrics", grain=grain)
         write_manifests(metric_src, f"{out}/manifests", grain=grain)
         ledger.commit(
@@ -270,15 +207,9 @@ def run_pipeline(
             .select("source", "bucket", F.col("routed_rows").alias("rows")),
             run_id,
         )
-        grain.unpersist()
-        timings["metrics_sec"] = round(time.time() - t_metrics, 2)
     finally:
-        if metric_src is not None:
-            metric_src.unpersist()
-        enriched.unpersist()
-        if readback_split_override is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           readback_split_override)
+        grain.unpersist()
+    timings["metrics_sec"] = round(time.time() - t_metrics, 2)
 
     metrics["wall_sec"] = time.time() - t0
     metrics["run_id"] = run_id
@@ -297,7 +228,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=None,
                     help="resume-granularity bucket count (default: auto "
                          "by input bytes, persisted per output dir)")
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()
@@ -320,12 +250,7 @@ def main() -> None:
 
     metrics = run_pipeline(
         spark, seq, args.out, n_buckets=args.buckets,
-        resume=not args.no_resume, salt=args.salt,
-        # keep the routing shuffle even though the corpus is laid out by
-        # (source, bucket): with zipf-hot sources the shuffle doubles as
-        # the skew-split (measured: skipping it made one task carry the
-        # whole hot source and the run 2.3x slower)
-        input_clustered=False,
+        resume=not args.no_resume,
     )
     print(json.dumps(metrics, default=str))
     spark.stop()

@@ -24,6 +24,23 @@ from pyspark.sql import functions as F
 
 SINK_PARTITIONS = ["source", "bucket"]
 
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as
+# %XX in a partition dir name (its non-Windows set)
+_PATH_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def _escape(value: str | None) -> str:
+    """A partition value as Spark names its dir; null and "" land in
+    Spark's default partition."""
+    if not value:
+        return "__HIVE_DEFAULT_PARTITION__"
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value)
+
+
+def quantum_dir(sinks_path: str, source: str, bucket: int) -> str:
+    """The sink dir route() writes for one (source, bucket) quantum."""
+    return f"{sinks_path}/source={_escape(source)}/bucket={bucket}"
+
 
 def _check_sink_layout(sinks_path: str, overwrite_mode: str) -> None:
     """Refuse a dynamic overwrite into a tree laid out by the old

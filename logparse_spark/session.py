@@ -21,9 +21,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the pipeline's standard confs.
 
-    - AQE on (runtime shuffle coalesce + skew-join split: half of the
-      skew story, see operators/skew.py for the salted other half).
-    - Arrow on with a bounded batch size so the mapInPandas parse stage
+    - AQE on (runtime shuffle coalesce + skew-join split; the sink
+      write's hot-source split is route's clustering shuffle).
+    - Arrow on with a bounded batch size so the mapInArrow parse stage
       streams fixed-size batches instead of whole partitions.
     - Session timezone pinned UTC: fixture timestamps are naive UTC and
       the DuckDB oracle compares naive values.

@@ -39,9 +39,11 @@ class Catalog:
 
     def write(self, df: DataFrame, table: str, partition_by: list[str],
               mode: str = "overwrite") -> None:
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        """Write `df` partitioned by `partition_by`; an overwrite replaces
+        only the partitions `df` holds (dynamic overwrite, requested as a
+        write option, so the session conf is left alone)."""
         w = df.write.mode(mode).partitionBy(*partition_by)
         if self.iceberg:
-            w.format("iceberg").save(self.path(table))
+            w.format("iceberg").option("overwrite-mode", "dynamic").save(self.path(table))
         else:
-            w.parquet(self.path(table))
+            w.option("partitionOverwriteMode", "dynamic").parquet(self.path(table))

@@ -1,6 +1,6 @@
 """Structured Streaming mode (SURVEY.md §2.3 streaming row, milestone M7).
 
-The SAME ``parse_sequences`` engine (mapInPandas is stateless, so it
+The SAME ``parse_sequences`` engine (mapInArrow is stateless, so it
 lifts to streaming unchanged) over a file-source stream of sequence
 parquet, with:
 

@@ -5,15 +5,12 @@ equality on every routed row (BASELINE.json input_hint) — is checkable:
 ``detokenize(encode(s)) == s`` and the ``tokens`` column passes through
 the pipeline untouched.
 
-Vectorized decode: one bytes buffer per Arrow batch, sliced at offsets
-(C-level ``bytes.decode`` per row; no Python object churn beyond the
-unavoidable output strings).
+The pipeline's batch decode is ``engine.decode_tokens_arrow``: one
+bytes buffer per Arrow batch, sliced at offsets (C-level
+``bytes.decode`` per row).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 VOCAB_SIZE = 256
 
@@ -26,22 +23,3 @@ def encode(text: str) -> list[int]:
 def decode(tokens) -> str:
     """Invert :func:`encode` for a single row (oracle / tests)."""
     return bytes(bytearray(int(t) & 0xFF for t in tokens)).decode("utf-8", "replace")
-
-
-def detokenize_series(tokens: pd.Series) -> pd.Series:
-    """Vectorized detokenize of a Series of int32 arrays -> str Series.
-
-    Arrow hands mapInPandas a Series of np.ndarray(int32).  We flatten
-    once, cast to uint8, materialize ONE contiguous bytes buffer, then
-    slice per row — the per-row work is a C-level bytes slice + decode.
-    """
-    if len(tokens) == 0:
-        return pd.Series([], dtype=object)
-    arrs = [np.asarray(a, dtype=np.int64) for a in tokens]
-    lengths = np.fromiter((a.size for a in arrs), dtype=np.int64, count=len(arrs))
-    flat = np.concatenate(arrs) if lengths.sum() else np.empty(0, dtype=np.int64)
-    buf = (flat & 0xFF).astype(np.uint8).tobytes()
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    out = [buf[s:e].decode("utf-8", "replace") for s, e in zip(starts, ends)]
-    return pd.Series(out, index=tokens.index, dtype=object)

@@ -23,9 +23,15 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
 
 
 def test_dynamic_partition_overwrite_is_partial(spark, tmp_path):
+    # dynamic overwrite is a per-write option: the session keeps its
+    # default (static) mode
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(conf)
+    prior = spark.conf.get(conf)
     cat = Catalog(spark, str(tmp_path))
     df = generate_sequences(spark, 300, partitions=2)
     cat.write(df, "seq", partition_by=["source"])
+    assert spark.conf.get(conf) == prior
     one_source = df.where("source = 'node-000'")
     n0 = one_source.count()
     cat.write(one_source, "seq", partition_by=["source"])  # overwrite ONE partition
@@ -35,8 +41,9 @@ def test_dynamic_partition_overwrite_is_partial(spark, tmp_path):
 
 def test_iceberg_write_branch_contract(spark, tmp_path, monkeypatch):
     """iceberg=True must route through format('iceberg').save(<root>/<t>)
-    with the requested partitioning and dynamic overwrite set."""
-    rec = {}
+    with the requested partitioning and Iceberg's dynamic-overwrite write
+    option."""
+    rec = {"options": {}}
 
     def fake_format(self, source):
         rec["format"] = source
@@ -44,6 +51,12 @@ def test_iceberg_write_branch_contract(spark, tmp_path, monkeypatch):
 
     def fake_save(self, path=None, **kwargs):
         rec["path"] = path
+
+    orig_option = DataFrameWriter.option
+
+    def spy_option(self, key, value):
+        rec["options"][key] = value
+        return orig_option(self, key, value)
 
     orig_partition_by = DataFrameWriter.partitionBy
 
@@ -54,14 +67,15 @@ def test_iceberg_write_branch_contract(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(DataFrameWriter, "format", fake_format)
     monkeypatch.setattr(DataFrameWriter, "save", fake_save)
     monkeypatch.setattr(DataFrameWriter, "partitionBy", spy_partition_by)
+    monkeypatch.setattr(DataFrameWriter, "option", spy_option)
 
     cat = Catalog(spark, str(tmp_path))
     cat.iceberg = True  # force the production branch
     cat.write(generate_sequences(spark, 50, partitions=1), "seq",
               partition_by=["source"])
     assert rec == {"format": "iceberg", "path": f"{tmp_path}/seq",
-                   "partition_by": ["source"]}
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+                   "partition_by": ["source"],
+                   "options": {"overwrite-mode": "dynamic"}}
 
 
 def test_iceberg_read_branch_contract(spark, monkeypatch):

@@ -198,38 +198,38 @@ def test_route_clustering_mode_selection():
     """Scale-adaptivity contract: measured-small inputs keep the pinned
     salt (one file per dir, parallel write); measured-big inputs take
     AQE rebalance (bytes-proportional files); unknown size fails toward
-    the protective salt, never toward a serialized tiny rebalance;
-    pre-clustered inputs skip the shuffle entirely."""
+    the protective salt, never toward a serialized tiny rebalance."""
     from logparse_spark.main import _route_clustering
 
-    assert _route_clustering(215 << 20, False) == (1, True)
-    assert _route_clustering(2 << 30, False) == (1, "rebalance")
-    assert _route_clustering(0, False) == (2, True)
-    assert _route_clustering(2 << 30, True)[1] is False
+    assert _route_clustering(215 << 20) == (1, True)
+    assert _route_clustering(2 << 30) == (1, "rebalance")
+    assert _route_clustering(0) == (2, True)
 
 
-def test_narrow_fresh_run_metrics_from_sink_readback(spark, tmp_path):
-    """r7: a FRESH narrow-mode run derives the metric tables from a
-    column-pruned read-back of the just-written sinks (no second parse
-    pass).  Every metric output must equal the full-cache mode's on the
-    same corpus."""
+def test_fresh_run_metrics_from_sink_readback(spark, tmp_path):
+    """A fresh run derives its metric tables and ledger rows from a
+    column-pruned read-back of the sinks it wrote; every one must equal
+    the same aggregates computed directly on the enriched frame."""
+    from logparse_spark.engine import parse_sequences
+    from logparse_spark.manifests import partition_manifests
+    from logparse_spark.operators.aggregate import write_metrics
+    from logparse_spark.operators.enrich import enrich, rules_dim
+    from logparse_spark.operators.route import with_bucket
+    from logparse_spark.sources.datagen import nodes_dim
+
     seq = generate_sequences(spark, 1200, partitions=4)
-    out_a = str(tmp_path / "narrow")
-    out_b = str(tmp_path / "full")
-    m_a = run_pipeline(spark, seq, out_a, n_buckets=2, resume=False,
-                       cache_mode="narrow")
-    m_b = run_pipeline(spark, seq, out_b, n_buckets=2, resume=False,
-                       cache_mode="full")
-    for k in ("routed_rows", "total_tokens", "unknown_rows", "families"):
-        assert m_a[k] == m_b[k]
+    out = str(tmp_path / "run")
+    run_pipeline(spark, seq, out, n_buckets=2, resume=False)
+    direct = with_bucket(enrich(parse_sequences(seq), nodes_dim(spark), rules_dim(spark)), 2)
+    ref = str(tmp_path / "direct")
+    write_metrics(direct, ref)
     for tbl in ("rule_histogram", "source_level_rollup", "family_metrics"):
         # rollup rows contain NULL grouping cells -> sort None-safe
-        a = sorted(map(tuple, spark.read.parquet(f"{out_a}/metrics/{tbl}").collect()), key=repr)
-        b = sorted(map(tuple, spark.read.parquet(f"{out_b}/metrics/{tbl}").collect()), key=repr)
-        assert a == b, f"{tbl} diverged between sink read-back and full cache"
-    # the ledger must commit the same (source, bucket, rows) rows
-    a = sorted(map(tuple, spark.read.parquet(f"{out_a}/ledger").select(
+        a = sorted(map(tuple, spark.read.parquet(f"{out}/metrics/{tbl}").collect()), key=repr)
+        b = sorted(map(tuple, spark.read.parquet(f"{ref}/{tbl}").collect()), key=repr)
+        assert a == b, f"{tbl}: sink read-back diverged from the enriched frame"
+    a = sorted(map(tuple, spark.read.parquet(f"{out}/ledger").select(
         "source", "bucket", "rows").collect()))
-    b = sorted(map(tuple, spark.read.parquet(f"{out_b}/ledger").select(
-        "source", "bucket", "rows").collect()))
+    b = sorted(map(tuple, partition_manifests(direct).select(
+        "source", "bucket", "routed_rows").collect()))
     assert a == b

@@ -1,14 +1,16 @@
 """P9 resume: kill after K partitions, re-run, outputs identical to an
 uninterrupted run; re-running a completed pipeline is a no-op."""
 
+import json
 import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from logparse_spark.ledger import Ledger
 from logparse_spark.main import run_pipeline
-from logparse_spark.operators.route import read_sink, route, with_bucket
+from logparse_spark.operators.route import quantum_dir, read_sink, route, with_bucket
 from logparse_spark.sources.datagen import generate_sequences
 
 N = 2000
@@ -17,6 +19,16 @@ N = 2000
 def _fingerprint(spark, out):
     df = read_sink(spark, f"{out}/sinks").select("doc_id", "rule_id", "family", "n_tok")
     return sorted(map(tuple, df.collect()))
+
+
+def _ledger_rows(spark, out):
+    return sorted(map(tuple, spark.read.parquet(f"{out}/ledger").select(
+        "source", "bucket", "rows").collect()))
+
+
+def _manifest_quanta(spark, out):
+    manifests = (json.loads(r["value"]) for r in spark.read.text(f"{out}/manifests").collect())
+    return sorted((m["source"], m["bucket"]) for m in manifests)
 
 
 def test_resume_after_partial_failure(spark, tmp_path):
@@ -31,10 +43,43 @@ def test_resume_after_partial_failure(spark, tmp_path):
     ledger = Ledger(spark, f"{out_resumed}/ledger")
     done_before = ledger.done().count()
     assert done_before == 5
+    pending = sorted(map(tuple, ledger.pending(with_bucket(seq, 2)).collect()))
     # ...then resume: only pending partitions re-run
     run_pipeline(spark, seq, out_resumed, n_buckets=2)
 
     assert _fingerprint(spark, out_resumed) == _fingerprint(spark, out_full)
+    # the resumed run's metrics cover exactly the quanta it wrote, so the
+    # ledger counts every quantum once, as an uninterrupted run's does
+    assert _manifest_quanta(spark, out_resumed) == pending
+    assert _ledger_rows(spark, out_resumed) == _ledger_rows(spark, out_full)
+
+
+@pytest.mark.parametrize("sources", [
+    ["007", "010", "123"],          # partition inference would retype these
+    ["a/b", "x=y", "50%", "q:r"],   # written as %XX escapes in dir names
+], ids=["numeric", "escaped"])
+def test_source_names_round_trip(spark, tmp_path, sources):
+    """Sinks, manifests and ledger carry the original source strings on
+    fresh, crashed and resumed runs, and the sinks hold every row once."""
+    seq = generate_sequences(spark, 300, partitions=2).withColumn(
+        "source", F.element_at(F.array(*map(F.lit, sources)),
+                               F.pmod(F.crc32("doc_id"), F.lit(len(sources))).cast("int") + 1))
+    expected = sorted(map(tuple, with_bucket(seq, 2).groupBy("source", "bucket").count().collect()))
+    quanta = [(s, b) for s, b, _ in expected]
+    fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    run_pipeline(spark, seq, fresh, n_buckets=2, resume=False)
+    assert _manifest_quanta(spark, fresh) == quanta
+    run_pipeline(spark, seq, resumed, n_buckets=2, fail_after_partitions=3)
+    assert _manifest_quanta(spark, resumed) == quanta[:3]
+    run_pipeline(spark, seq, resumed, n_buckets=2)
+    assert _manifest_quanta(spark, resumed) == quanta[3:]
+    for out in (fresh, resumed):
+        sinks = f"{out}/sinks"
+        back = spark.read.schema("doc_id string, source string, bucket int").option(
+            "basePath", sinks).parquet(sinks)
+        assert back.select("doc_id").distinct().count() == back.count() == 300
+        assert sorted(map(tuple, back.groupBy("source", "bucket").count().collect())) == expected
+        assert _ledger_rows(spark, out) == expected
 
 
 def test_rerun_completed_is_noop(spark, tmp_path):
@@ -104,6 +149,20 @@ def test_dynamic_rewrite_replaces_quantum_after_family_change(spark, tmp_path):
     assert got == [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2]),
                    ("d3", "s2", "gc", [3])]
     assert [r["doc_id"] for r in read_sink(spark, sinks, "gc").collect()] == ["d3"]
+
+
+def test_quantum_dir_names_the_dir_route_writes(spark, tmp_path):
+    """quantum_dir escapes a source exactly as Spark names the partition
+    dir: every printable and control ASCII character, non-ASCII, and ""
+    (Spark's default partition)."""
+    sinks = str(tmp_path / "sinks")
+    sources = [chr(c) + "x" for c in range(1, 128)] + ["é/ü", ""]
+    route(_route_rows(spark, [(f"d{i}", s, "gc", [i]) for i, s in enumerate(sources)]),
+          sinks, n_buckets=1, overwrite_mode="static")
+    written = {os.path.join(sinks, d, "bucket=0") for d in os.listdir(sinks)
+               if d.startswith("source=")}
+    assert written == {quantum_dir(sinks, s, 0) for s in sources}
+    assert all(os.path.isdir(d) for d in written)
 
 
 def test_dynamic_write_refuses_family_partitioned_tree(spark, tmp_path):

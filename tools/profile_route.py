@@ -23,7 +23,6 @@ def main() -> None:
     import shutil
 
     from logparse_spark.engine import parse_sequences
-    from logparse_spark.main import _route_clustering
     from logparse_spark.operators.enrich import enrich, rules_dim
     from logparse_spark.operators.route import SINK_PARTITIONS, route, with_bucket
     from logparse_spark.session import get_spark
