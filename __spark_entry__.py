@@ -500,7 +500,7 @@ def q_dedup_simhash(spark, sf):
     """60-bit md5-based SimHash (pure SQL) with pigeonhole banding +
     exact hamming verify — DuckDB replicates the hash bit-for-bit."""
     docs = _t(spark, sf, "documents")
-    return dd.simhash_near_dups(docs, max_hamming=3, impl="sql").select(
+    return dd.simhash_near_dups(docs, max_hamming=3).select(
         "id_a", "id_b"
     )
 

@@ -1,28 +1,1 @@
-"""Column-function helpers mirroring the reference's converters
-(rules.py §convert [R-H]) as JVM expressions, plus shared expression
-utilities used by queries."""
-
-from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def comma_int(col: Column) -> Column:
-    """'60,016,741' -> 60016741 (the reference's comma-stripping int)."""
-    return F.regexp_replace(col, ",", "").cast("long")
-
-
-def pct_int(col: Column) -> Column:
-    """'~99%' / '99' -> 99."""
-    return F.regexp_extract(col, r"(\d+)", 1).cast("int")
-
-
-def log_timestamp(col: Column) -> Column:
-    """Cassandra log date '2015-03-30 22:24:34,843' -> timestamp."""
-    return F.to_timestamp(col, "yyyy-MM-dd HH:mm:ss,SSS")
-
-
-def rate_mb_s(bytes_col: Column, duration_ms: Column) -> Column:
-    """The reference's derived compaction rate: bytes/ms -> MB/s."""
-    return F.when(duration_ms > 0, (bytes_col / duration_ms) / 1048.576)
+"""Python UDTFs registered for SQL use (see `udtfs.py`)."""

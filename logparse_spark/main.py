@@ -29,7 +29,7 @@ from logparse_spark.ledger import Ledger
 from logparse_spark.manifests import observed, partition_manifests, write_manifests
 from logparse_spark.operators.aggregate import grain_counts, write_metrics
 from logparse_spark.operators.enrich import enrich, rules_dim
-from logparse_spark.operators.route import quantum_dir, route, with_bucket
+from logparse_spark.operators.route import _route_clustering, quantum_dir, route, with_bucket
 from logparse_spark.session import get_spark
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim, write_sequences
 
@@ -81,23 +81,6 @@ def resolve_n_buckets(scan_bytes: int, out: str) -> int:
     with open(meta_path, "w") as f:
         json.dump({"n_buckets": n, "resolved_from_bytes": scan_bytes}, f)
     return n
-
-
-def _route_clustering(scan_bytes: int) -> tuple[int, bool | str]:
-    """(write_salt, cluster_mode) for the sink write, by MEASURED input
-    size.  <= 512 MB: pinned-salt shuffle, one file per dir (AQE
-    rebalance coalescing collapses the write parallelism a wide
-    partitionBy fan-out needs — measured 27.5 s -> 109.7 s on the
-    20k-row run).  > 512 MB measured: "rebalance" — files-per-dir must
-    track each dir's BYTES, not a global constant (a fixed salt gives
-    the hottest source's dirs arbitrarily-large files and every cold dir
-    needless ones); AQE splits hot dirs at advisoryPartitionSizeInBytes
-    and packs the cold tail.  UNKNOWN size (0: non-file inputs) takes
-    the protective salt — failing toward extra small files and a
-    parallel write, never toward a serialized tiny-input rebalance."""
-    if scan_bytes > 512 << 20:
-        return 1, "rebalance"
-    return (1 if scan_bytes > 0 else 2), True
 
 
 def run_pipeline(

@@ -1,16 +1,18 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are JVM built-ins (whole-stage codegen) — the MinHash
-signature computation is pure SQL expressions (higher-order functions
-over the shingle array), NOT a Python UDF; only SimHash uses a
-vectorized pandas UDF (64 bit-counters don't express well in SQL).
+Each operator has one kernel.  The MinHash signature is an Arrow
+pandas UDF over numpy (a dense numeric kernel: factorize the batch's
+shingles, then one Mersenne-reduced permutation matrix); SimHash, the
+LSH band/bucket joins and every verify step are JVM built-ins
+(whole-stage codegen), SimHash computed so that DuckDB reproduces it
+bit-for-bit.
 
 Scale design:
-- exact: one hash-shuffle on a 64-bit content hash (not the text);
+- exact: one hash-shuffle on a 256-bit content hash (not the text);
 - MinHash-LSH: candidates come from an equi-join on (band, band_hash)
   buckets — never an O(n^2) cross join; verification touches only
   bucket collisions;
-- SimHash: banding on 16-bit chunks (pigeonhole: hamming<=3 over 64
+- SimHash: banding on 15-bit chunks (pigeonhole: hamming<=3 over 60
   bits guarantees one of 4 chunks equal) -> equi-join, then exact
   hamming verify;
 - embedding near-dup: random-hyperplane LSH buckets -> in-bucket
@@ -42,11 +44,11 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 # ---------------------------------------------------------------------------
-# shingling + MinHash + LSH (all JVM expressions)
+# shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
 
-# 2^31-1: keeps a*h+b < 2^62 — no int64 overflow (Spark 4 ANSI mode
-# makes arithmetic overflow a runtime ERROR, not a silent wrap)
+# 2^31-1: keeps a*h+b < 2^62, so the signature kernel's uint64 products
+# never wrap and two shift-add folds reduce them exactly
 _MERSENNE = (1 << 31) - 1
 
 
@@ -61,43 +63,16 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32, seed: int = 42) -> Column:
-    """num_hashes-wide MinHash signature as array<bigint> — pure SQL.
-
-    h_i(s) = (a_i * xxhash64(s) + b_i) mod M  (Carter-Wegman family);
-    signature[i] = min over shingles.  ONE aggregate pass over the
-    shingle array computes all num_hashes mins simultaneously
-    (elementwise zip_with/least against the running signature).
-    """
-    import random
-
-    rnd = random.Random(seed)
-    a = [rnd.randrange(1, _MERSENNE) for _ in range(num_hashes)]
-    b = [rnd.randrange(0, _MERSENNE) for _ in range(num_hashes)]
-
-    def hashes_of(s):
-        base = F.pmod(F.xxhash64(s), F.lit(_MERSENNE))  # pmod: always >= 0
-        return F.array(
-            *[F.pmod(F.lit(a[i]) * base + F.lit(b[i]), F.lit(_MERSENNE))
-              for i in range(num_hashes)]
-        )
-
-    init = F.array(*[F.lit(_MERSENNE).cast("bigint")] * num_hashes)
-    return F.aggregate(
-        shingles, init,
-        lambda acc, s: F.zip_with(acc, hashes_of(s), lambda x, y: F.least(x, y)),
-    )
-
-
 def minhash_signature_np(
     text_col: str, num_hashes: int = 32, shingle_n: int = 3, seed: int = 42,
 ) -> Column:
     """Vectorized MinHash signature via Arrow pandas UDF + numpy.
 
-    Same hash family as :func:`minhash_signature` in spirit but computed
-    as one (n_shingles x num_hashes) numpy broadcast per doc — measured
-    ~10x the SQL higher-order-function version (interpreted lambda per
-    element there).  The UDF path wins here because the inner loop is a
+    h_i(s) = (a_i * hash(s) + b_i) mod M (Carter-Wegman family, M =
+    2^31-1); signature[i] = min over the doc's distinct word n-grams.
+    Computed as one (unique shingles x num_hashes) numpy matrix per
+    Arrow batch — measured ~10x a SQL higher-order-function version
+    (one interpreted lambda per element there): the inner loop is a
     dense numeric kernel, exactly the case Arrow-batched numpy is for.
     """
     import random
@@ -181,7 +156,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     shingle_n: int = 3,
     seed: int = 42,
-    impl: str = "np",
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH (id_a < id_b).
@@ -199,11 +173,9 @@ def minhash_lsh_candidates(
     exact duplicates should be collapsed by :func:`exact_dedup` first.
     NOT silent: monitor `minhash_dropped_buckets` with the same args.
 
-    impl='np' (default): Arrow/numpy signature kernel; impl='sql': pure
-    JVM higher-order expressions (zero Python, ~10x slower per row —
-    kept as the no-Python-runtime option and as a semantic cross-check).
+    Signatures come from :func:`minhash_signature_np`.
     """
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n, seed, impl)
+    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n, seed)
     if max_bucket is not None:
         # window count over the SAME shuffle the self-join needs, so the
         # cap never forces an extra full evaluation of the signature
@@ -243,12 +215,11 @@ def minhash_dropped_buckets(
     bands: int = 8,
     shingle_n: int = 3,
     seed: int = 42,
-    impl: str = "np",
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """(band, band_hash, size) of buckets the cap would drop — the
     accounting side of `max_bucket` so capping is never silent."""
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n, seed, impl)
+    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n, seed)
     return (
         banded.groupBy("band", "band_hash").agg(F.count("*").alias("size"))
         .where(F.col("size") > max_bucket)
@@ -328,16 +299,12 @@ def _is_direct_file_scan(df: DataFrame) -> bool:
 
 def _minhash_banded(
     df: DataFrame, text_col: str, id_col: str, num_hashes: int,
-    bands: int, shingle_n: int, seed: int, impl: str,
+    bands: int, shingle_n: int, seed: int,
 ) -> DataFrame:
     """(id, band, band_hash) — one row per document per band."""
     rows_per_band = num_hashes // bands
-    narrow = _spread_text(df, id_col, text_col)
-    if impl == "np":
-        sig_col = minhash_signature_np("_t", num_hashes, shingle_n, seed)
-    else:
-        sig_col = minhash_signature(word_shingles(F.col("_t"), shingle_n), num_hashes, seed)
-    sig = narrow.select("id", sig_col.alias("sig"))
+    sig = _spread_text(df, id_col, text_col).select(
+        "id", minhash_signature_np("_t", num_hashes, shingle_n, seed).alias("sig"))
     return sig.select(
         "id",
         F.explode(
@@ -382,7 +349,7 @@ def minhash_near_dups(
     """
     cand = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n, seed,
-        impl="np", max_bucket=max_bucket,
+        max_bucket=max_bucket,
     )
     # verify via melt-join: ONE scan of `documents` (round 2 joined two
     # separate shingle projections — two full scans of the corpus for
@@ -671,36 +638,8 @@ def dedup_clusters(
 
 
 # ---------------------------------------------------------------------------
-# SimHash (vectorized pandas UDF for the 64 bit-counters)
+# SimHash (pure SQL, DuckDB-exact)
 # ---------------------------------------------------------------------------
-
-
-def simhash_col(text_col: str = "text") -> Column:
-    """64-bit SimHash of whitespace tokens as a bigint column."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _simhash(texts):
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            if not t:
-                continue
-            words = str(t).lower().split()
-            if not words:
-                continue
-            # pd.util.hash_array is deterministic across processes
-            # (fixed siphash key) — NEVER builtin hash() (PYTHONHASHSEED)
-            hs = pd.util.hash_array(np.array(words, dtype=object))
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).sum(axis=0)
-            sim = np.where(bits * 2 >= hs.size, np.uint64(1), np.uint64(0))
-            out[i] = np.int64((sim << np.arange(64, dtype=np.uint64)).sum().astype(np.uint64))
-        return pd.Series(out)
-
-    # `from __future__ import annotations` stringifies hints, which the
-    # pandas_udf type-hint inspector rejects — set them concretely.
-    _simhash.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_simhash, "long")(F.col(text_col))
 
 
 def simhash_sql(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -710,8 +649,8 @@ def simhash_sql(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Per-word hash = first 15 hex chars of md5 = 60 bits, chosen because
     DuckDB computes the IDENTICAL value
     (``CAST('0x' || substring(md5(w),1,15) AS BIGINT)``), which makes the
-    whole operator exactly oracle-checkable — and it removes the pandas
-    UDF from the hot path entirely.
+    whole operator exactly oracle-checkable, with no Python on the hot
+    path.
 
     Shape: explode words -> `bits` conditional sums.  A document's words
     stay in its input partition, so partial aggregation collapses each
@@ -750,28 +689,22 @@ def simhash_sql(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 def simhash_near_dups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, impl: str = "sql",
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming.
 
-    Pigeonhole banding: split the hash into 4 chunks; any pair within
-    hamming 3 shares >=1 exact chunk -> equi-join per chunk, union,
-    exact hamming verify (bit_count is a JVM builtin).
-
-    impl='sql' (default): 60-bit md5-based simhash, zero Python, exactly
-    reproducible in DuckDB; impl='pandas': the 64-bit siphash variant.
+    The hash is :func:`simhash_sql`'s 60-bit md5 simhash (zero Python,
+    exactly reproducible in DuckDB).  Pigeonhole banding: split it into
+    4 chunks of 15 bits; any pair within hamming 3 shares >=1 exact
+    chunk -> equi-join per chunk, union, exact hamming verify (bit_count
+    is a JVM builtin).
     """
-    if impl == "sql":
-        s = simhash_sql(df, text_col, id_col)
-        width = 15
-    else:
-        s = df.select(F.col(id_col).alias("id"), simhash_col(text_col).alias("sh"))
-        width = 16
+    width = 15
     # materialize before the chunk self-join: both sides otherwise
     # re-evaluate the full 60-counter bitsum aggregation (one subtree
     # per side in the physical plan — see minhash_lsh_candidates).
     # (id, sh) is 16 bytes/doc.
-    s = s.localCheckpoint()
+    s = simhash_sql(df, text_col, id_col).localCheckpoint()
     mask = (1 << width) - 1
     chunks = s.select(
         "id", "sh",

@@ -17,6 +17,9 @@ jpeg/h264 would need PIL/ffmpeg, which are NOT in this container:
 payloads are treated as opaque containers (byte checksum + metadata
 features).
 
+The one extraction path is `extract_media_features`: the typed decode
+above, run per row inside one mapInPandas stage.
+
 Scale notes: binary payloads dominate partition size — size partitions
 by bytes (spark.sql.files.maxPartitionBytes), keep metadata in typed
 columns so filters prune BEFORE the decode stage, and never collect
@@ -34,15 +37,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int, codec:string>"
 )
-
-FEATURE_DIM = 16
-FEATURES_SCHEMA = "media_id string, kind string, n_bytes int, feature array<float>"
 
 # typed decode features: width/height (image+video), sample_rate (audio),
 # n_units = pixels / samples / frames, content_sum = sum of decoded pixel
@@ -421,7 +420,7 @@ def decode_media_row(kind: str, payload: bytes, meta) -> dict:
             "content_sum": int(arr.astype(np.int64).sum())}
 
 
-def extract_media_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas typed decode over binary payloads: REAL BMP/WAV
     parsing (numpy), opaque-container checksums for compressed video.
     Map-only — no shuffle; output is small typed columns, the binary
@@ -442,70 +441,3 @@ def extract_media_features(media: DataFrame, batch_rows: int = 256) -> DataFrame
             yield out
 
     return media.mapInPandas(fn, MEDIA_FEATURES_SCHEMA)
-
-
-def deterministic_fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Stand-in embedding 'feature extraction': content-hash-seeded unit
-    vector (deterministic in payload bytes; partitioning-independent).
-    Kept alongside the real typed decode for the ANN-style plumbing."""
-    h = hashlib.sha256(payload).digest()
-    raw = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype=np.uint32)
-    v = (raw.astype(np.float64) / np.iinfo(np.uint32).max) - 0.5
-    n = np.linalg.norm(v)
-    return (v / n if n else v).astype(np.float32)
-
-
-def extract_features(media: DataFrame, batch_rows: int = 256) -> DataFrame:
-    """mapInPandas hash-embedding extraction over binary payloads (the
-    vector-feature sibling of extract_media_features)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            feats = [
-                deterministic_fake_features(bytes(p)).tolist()
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(fn, FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 5) -> DataFrame:
-    """Frame-sampling plan for video rows: one output row per kept frame
-    index — pure SQL explode of the frame index sequence; the per-frame
-    decode (env-blocked for compressed codecs) would hang off the
-    exploded rows."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )
-
-
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Typed resize arithmetic (scale factors) — metadata-only, prunable;
-    the pixel work would use the BMP decode above (or PIL for
-    compressed codecs)."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.when(
-        F.greatest(w, h) > max_side, max_side / F.greatest(w, h)
-    ).otherwise(F.lit(1.0))
-    return media.where(F.col("kind") == "image").select(
-        "media_id", w.alias("width"), h.alias("height"),
-        F.round(scale, 6).alias("scale"),
-        F.ceil(w * scale).cast("int").alias("out_width"),
-        F.ceil(h * scale).cast("int").alias("out_height"),
-    )

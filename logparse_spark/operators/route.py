@@ -64,9 +64,25 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.crc32(F.col("doc_id")), F.lit(n_buckets)).cast("int"))
 
 
+def _route_clustering(scan_bytes: int) -> tuple[int, bool | str]:
+    """(write_salt, cluster_mode) for the sink write, by MEASURED input
+    size.  <= 512 MB: pinned-salt shuffle, one file per dir (AQE
+    rebalance coalescing collapses the write parallelism a wide
+    partitionBy fan-out needs — measured 27.5 s -> 109.7 s on the
+    20k-row run).  > 512 MB measured: "rebalance" — files-per-dir must
+    track each dir's BYTES, not a global constant (a fixed salt gives
+    the hottest source's dirs arbitrarily-large files and every cold dir
+    needless ones); AQE splits hot dirs at advisoryPartitionSizeInBytes
+    and packs the cold tail.  UNKNOWN size (0: non-file inputs) takes
+    the protective salt — failing toward extra small files and a
+    parallel write, never toward a serialized tiny-input rebalance."""
+    if scan_bytes > 512 << 20:
+        return 1, "rebalance"
+    return (1 if scan_bytes > 0 else 2), True
+
+
 def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
           write_salt: int = 2, cluster: bool | str = True,
-          cluster_partitions: int | None = None,
           overwrite_mode: str = "dynamic") -> None:
     """Write the fan-out sinks in one pass, partitioned by (source, bucket).
 
@@ -75,12 +91,19 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     `fields` (map) and `extra` (array) columns are parquet-native; the
     binding `tokens` column lands in every sink bit-identically.
 
+    Callers pick `write_salt`/`cluster` with :func:`_route_clustering`
+    from the measured input bytes.
+
     File-count discipline: without clustering, EVERY task writes a file
     into EVERY (source, bucket) dir it sees -> O(tasks x dirs) small
-    files.  Repartitioning on the partition keys (+ a doc_id salt so one
-    hot dir never pins a single task) bounds files per dir to
+    files.  `cluster=True` repartitions on the partition keys (+ a
+    doc_id salt so one hot dir never pins a single task) into 2x
+    defaultParallelism partitions, which bounds files per dir to
     `write_salt` and total files to dirs x salt — at 100 TB this is the
-    difference between a working table and a small-files meltdown.
+    difference between a working table and a small-files meltdown.  The
+    explicit partition count keeps AQE from coalescing the exchange
+    toward a handful of 64 MB write tasks (measured 13% slower at
+    local[32] on 2M rows).
 
     `cluster="rebalance"` replaces the fixed salt with AQE's REBALANCE
     shuffle on the partition keys: runtime statistics split any dir
@@ -96,25 +119,9 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     scale: the hottest source's dirs get `write_salt` arbitrarily-large
     files while every cold dir pays `write_salt` tiny ones (the datagen
     v2-layout lesson, BENCH/RESULTS_r5.md §5b).  Below ~512 MB the salt
-    path stays the default because AQE's coalescing caps write
-    parallelism exactly when the whole input fits in a handful of
-    advisory chunks (measured 13% slower at local[32] on 2M rows; see
-    `cluster_partitions`).  `write_salt`/`cluster_partitions` are
-    ignored in rebalance mode.
-
-    `cluster=False` skips that shuffle: correct ONLY when the input is
-    already laid out by (source, bucket) — e.g. scanning the production
-    corpus, whose partition dirs align tasks with (source, bucket), so
-    each task writes one dir.  The stateless parse stage preserves
-    partitioning 1:1, so the alignment survives it.
-
-    `cluster_partitions` pins the clustering shuffle's partition count
-    (default 2x defaultParallelism).  Without an explicit N, AQE
-    coalesces the exchange toward 64 MB chunks — the same handful of
-    write tasks at EVERY core count, which caps write parallelism and
-    was measured 13% slower at local[32] on 2M rows.  File counts are
-    unaffected: each (source, bucket, salt) combo hashes to one
-    partition regardless of N.
+    path stays because AQE's coalescing caps write parallelism exactly
+    when the whole input fits in a handful of advisory chunks.
+    `write_salt` is ignored in rebalance mode.
 
     `overwrite_mode` is passed as this write's `partitionOverwriteMode`
     option; the session conf is left alone.  "dynamic" (default) is what
@@ -131,15 +138,14 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
         df = with_bucket(df, n_buckets)
     if cluster == "rebalance":
         df = df.hint("rebalance", *SINK_PARTITIONS)
-    elif cluster:
-        n = cluster_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    else:
         # salt hash MUST be independent of the bucket hash: bucket is
         # crc32(doc_id) % n_buckets, so crc32(doc_id) % write_salt is
         # CONSTANT within a dir whenever write_salt divides n_buckets —
         # i.e. the salt was inert and the hottest dir was written by one
         # task.  Salting a distinct string decorrelates the two.
         df = df.repartition(
-            n,
+            df.sparkSession.sparkContext.defaultParallelism * 2,
             *[F.col(c) for c in SINK_PARTITIONS],
             F.pmod(F.crc32(F.concat(F.col("doc_id"), F.lit("#w"))), F.lit(write_salt)),
         )
@@ -153,17 +159,22 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
      .parquet(sinks_path))
 
 
-def compact_sinks(spark: SparkSession, sinks_path: str,
-                  write_salt: int = 1,
-                  cluster_partitions: int | None = None,
-                  cluster: bool | str = True) -> dict:
+def _data_files(sinks_path: str) -> list[str]:
+    """Paths of the sink tree's data files (no _SUCCESS/.crc markers)."""
+    return [os.path.join(root, f) for root, _, fs in os.walk(sinks_path)
+            for f in fs if not f.startswith(("_", "."))]
+
+
+def compact_sinks(spark: SparkSession, sinks_path: str) -> dict:
     """Post-ingest small-file compaction — the maintenance job every
     partitioned production table needs: N streaming/incremental writes
     leave `salt x runs` files per (source, bucket) dir; this rewrites
-    each dir's files into `write_salt` (default 1), family-sorted as
-    route() writes them, without changing a single row.
-    (`cluster="rebalance"` passes through to route(): at 100 TB a
-    compaction wants advisory-sized files per dir, not a fixed count.)
+    each dir's files, family-sorted as route() writes them, without
+    changing a single row.  The clustering is :func:`_route_clustering`
+    of the tree's data bytes: up to 512 MB, one file per dir; above it,
+    AQE rebalance, so files-per-dir tracks each dir's bytes.  Partition
+    values are read as written (see :func:`read_sink`), so every dir
+    keeps its name.
 
     Mechanics: one clustered read-rewrite into a staging dir (the same
     single-pass partitionBy shape as route(), static overwrite — this
@@ -181,17 +192,13 @@ def compact_sinks(spark: SparkSession, sinks_path: str,
     """
     import shutil
 
-    def _data_files(p: str) -> int:
-        return sum(1 for _, _, fs in os.walk(p)
-                   for f in fs if not f.startswith(("_", ".")))
-
-    df = spark.read.option("basePath", sinks_path).parquet(sinks_path)
+    files = _data_files(sinks_path)
+    write_salt, cluster = _route_clustering(sum(map(os.path.getsize, files)))
+    df = read_sink(spark, sinks_path)
     rows = df.count()
-    before = _data_files(sinks_path)
     staging = sinks_path.rstrip("/") + "__compacting"
     shutil.rmtree(staging, ignore_errors=True)
-    route(df, staging, write_salt=write_salt, cluster=cluster,
-          cluster_partitions=cluster_partitions, overwrite_mode="static")
+    route(df, staging, write_salt=write_salt, cluster=cluster, overwrite_mode="static")
     old = sinks_path.rstrip("/") + "__precompact"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(sinks_path, old)
@@ -202,13 +209,22 @@ def compact_sinks(spark: SparkSession, sinks_path: str,
         shutil.rmtree(staging, ignore_errors=True)  # no stranded staging
         raise
     shutil.rmtree(old, ignore_errors=True)
-    return {"files_before": before, "files_after": _data_files(sinks_path),
+    return {"files_before": len(files), "files_after": len(_data_files(sinks_path)),
             "rows": rows}
 
 
 def read_sink(spark: SparkSession, sinks_path: str, family: str | None = None) -> DataFrame:
     """The routed rows, or one family's sink: a filter on the in-file
-    `family` column that row-group statistics prune."""
-    df = spark.read.option("basePath", sinks_path).parquet(sinks_path)
+    `family` column that row-group statistics prune.
+
+    The read schema is explicit: the data columns of one data file's
+    footer plus ``source string, bucket int``.  Partition values come
+    back as written — with type inference a source named "007" would
+    read back as the integer 7."""
+    files = _data_files(sinks_path)
+    if not files:
+        raise FileNotFoundError(f"no sink data files under {sinks_path}")
+    schema = spark.read.parquet(files[0]).schema.add("source", "string").add("bucket", "integer")
+    df = spark.read.schema(schema).option("basePath", sinks_path).parquet(sinks_path)
     return df.where(F.col("family") == family) if family else df
 

@@ -16,10 +16,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def assert_broadcast_join(df: DataFrame, count: int | None = None) -> None:
     plan = executed_plan(df)
     found = plan.count("BroadcastHashJoin")

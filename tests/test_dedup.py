@@ -34,18 +34,6 @@ def test_minhash_lsh_finds_planted_pair(spark):
     assert ("d4", "d5") not in pairs
 
 
-def test_minhash_sql_impl_agrees_on_planted_pairs(spark):
-    """The pure-SQL implementation is a different hash family but must
-    find the same planted near-dups."""
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             dd.minhash_lsh_candidates(
-                 _docs(spark), shingle_n=2, num_hashes=32, bands=16,
-                 impl="sql").collect()}
-    assert ("d1", "d2") in pairs
-    assert ("d1", "d3") in pairs
-    assert ("d4", "d5") not in pairs
-
-
 def test_minhash_deterministic_across_partitioning(spark):
     a = sorted(map(tuple, dd.minhash_lsh_candidates(_docs(spark).repartition(1)).collect()))
     b = sorted(map(tuple, dd.minhash_lsh_candidates(_docs(spark).repartition(5)).collect()))
@@ -80,9 +68,9 @@ def test_simhash_near_dups(spark):
 
 def test_simhash_deterministic_rerun(spark):
     df = _docs(spark)
-    a = sorted(r["sh"] for r in df.select(dd.simhash_col("text").alias("sh")).collect())
-    b = sorted(r["sh"] for r in df.repartition(3).select(dd.simhash_col("text").alias("sh")).collect())
-    assert a == b
+    a = sorted(map(tuple, dd.simhash_sql(df.repartition(1)).collect()))
+    b = sorted(map(tuple, dd.simhash_sql(df.repartition(3)).collect()))
+    assert len(a) == len(DOCS) and a == b
 
 
 def test_minhash_near_dups_verified(spark):

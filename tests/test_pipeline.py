@@ -124,7 +124,7 @@ def test_compact_sinks_preserves_rows_and_reduces_files(spark, tmp_path):
         r["doc_id"]: r["tokens"]
         for r in read_sink(spark, sinks).select("doc_id", "tokens").collect()
     }
-    stats = compact_sinks(spark, sinks, write_salt=1)
+    stats = compact_sinks(spark, sinks)
     assert stats["rows"] == len(before) == 2500
     assert stats["files_after"] < stats["files_before"]
     after_df = read_sink(spark, sinks)
@@ -199,7 +199,7 @@ def test_route_clustering_mode_selection():
     salt (one file per dir, parallel write); measured-big inputs take
     AQE rebalance (bytes-proportional files); unknown size fails toward
     the protective salt, never toward a serialized tiny rebalance."""
-    from logparse_spark.main import _route_clustering
+    from logparse_spark.operators.route import _route_clustering
 
     assert _route_clustering(215 << 20) == (1, True)
     assert _route_clustering(2 << 30) == (1, "rebalance")

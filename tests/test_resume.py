@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 
 from logparse_spark.ledger import Ledger
 from logparse_spark.main import run_pipeline
-from logparse_spark.operators.route import quantum_dir, read_sink, route, with_bucket
+from logparse_spark.operators.route import compact_sinks, quantum_dir, read_sink, route, with_bucket
+from logparse_spark.operators.views import sink_view
 from logparse_spark.sources.datagen import generate_sequences
 
 N = 2000
@@ -80,6 +81,23 @@ def test_source_names_round_trip(spark, tmp_path, sources):
         assert back.select("doc_id").distinct().count() == back.count() == 300
         assert sorted(map(tuple, back.groupBy("source", "bucket").count().collect())) == expected
         assert _ledger_rows(spark, out) == expected
+
+    # the sink readers return partition values as written...
+    sinks = f"{resumed}/sinks"
+    routed = read_sink(spark, sinks)
+    assert sorted(map(tuple, routed.groupBy("source", "bucket").count().collect())) == expected
+    gc = {r["source"] for r in sink_view(spark, sinks, "gc").select("source").distinct().collect()}
+    assert gc and gc <= set(sources)
+    # ...so compaction keeps every quantum's dir name, and a resume
+    # finds every ledger quantum already done
+    compact_sinks(spark, sinks)
+    dirs = {os.path.relpath(root, sinks) for root, _, files in os.walk(sinks)
+            if any(f.endswith(".parquet") for f in files)}
+    assert dirs == {os.path.relpath(quantum_dir(sinks, s, b), sinks) for s, b in quanta}
+    assert sorted(map(tuple, read_sink(spark, sinks).groupBy("source", "bucket").count()
+                      .collect())) == expected
+    assert Ledger(spark, f"{resumed}/ledger").pending(with_bucket(seq, 2)).count() == 0
+    assert run_pipeline(spark, seq, resumed, n_buckets=2)["routed_rows"] == 0
 
 
 def test_rerun_completed_is_noop(spark, tmp_path):
