@@ -14,12 +14,13 @@ the synthetic corpus only exists inside Spark, so:
    parse in SQL: header split (both Cassandra formats), class dispatch,
    ordered first-match over ALL rulebook rules (nested CASE of
    ``regexp_matches``), unknown fallback — semantics mirroring
-   oracle.parse_text exactly (RE2 runs the same ^-anchored patterns; the
-   rulebook contains no optional capture groups, so search-success ==
-   the engine's all-groups-matched criterion).
+   oracle.parse_text exactly (RE2 runs each pattern ^-anchored, and a
+   match is a hit whatever its optional groups did, as in the engine
+   and the oracle).
 
 This is intentionally the THIRD independent implementation of the rule
-semantics (engine.py vectorized pandas, oracle.py per-row re, this SQL)
+semantics (engine.py class-grouped Arrow batches, oracle.py per-row re,
+this SQL)
 — three-way agreement is the strongest correctness evidence the repo
 can produce for the parse engine.
 """
@@ -157,7 +158,7 @@ def parsed_cte(n: int = 5000, seed: int = 42) -> str:
     """WITH-clause prefix producing `parsed_ev(doc_id, source, n_tok,
     level, ts, rule_id, family, msg)` — the SQL twin of parse_sequences
     over the same deterministic corpus (level is null when no header
-    format matches, mirroring engine.parse_texts)."""
+    format matches, as in engine.parse_texts)."""
     path = materialize_corpus(n, seed)
     hdr = _q(HEADER_SQL_REGEX)
     return f"""

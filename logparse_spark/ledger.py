@@ -1,10 +1,13 @@
 """P9 checkpoint ledger: partition-granular idempotent resume.
 
-A tiny append-only parquet log keyed by (source, bucket).  On start,
-pending = input partitions LEFT ANTI JOIN committed partitions; after
-the sink write succeeds for a batch, one commit batch is appended.
-Re-running a committed partition is a no-op at the ledger level and an
-idempotent overwrite at the sink level (dynamic partition overwrite).
+A tiny append-only parquet log keyed by (source, bucket), one row per
+committed quantum with its row count.  On start, pending = the input's
+per-quantum row counts LEFT ANTI JOIN the latest committed count of each
+quantum, so a quantum whose input gained or lost rows since its commit
+runs again; after the sink write succeeds, one commit batch is appended.
+Re-running a quantum is an idempotent overwrite at the sink level
+(dynamic partition overwrite replaces its one dir whole).  An edit that
+keeps a quantum's row count is not detected.
 
 Scale: at 10^12 rows with (50 sources x 1024 buckets) the ledger is
 ~50k rows — driver-trivial, broadcast-trivial; the anti-join prunes the
@@ -33,21 +36,23 @@ class Ledger:
         )
 
     def done(self) -> DataFrame:
-        """Committed (source, bucket) pairs."""
+        """Committed quanta: (source, bucket, rows) of each one's latest commit."""
         if not self._exists():
-            return self.spark.createDataFrame([], "source string, bucket int")
+            return self.spark.createDataFrame([], "source string, bucket int, rows long")
         return (
             self.spark.read.parquet(self.path)
             .where(F.col("status") == "done")
-            .select("source", "bucket")
-            .distinct()
+            .groupBy("source", "bucket")
+            .agg(F.max_by("rows", "committed_at").alias("rows"))
         )
 
     def pending(self, all_partitions: DataFrame) -> DataFrame:
-        """all (source,bucket) minus committed — the resume frontier."""
-        return all_partitions.select("source", "bucket").distinct().join(
-            F.broadcast(self.done()), ["source", "bucket"], "left_anti"
-        )
+        """(source, bucket) of every input quantum not committed with its
+        current row count — the resume frontier."""
+        counts = all_partitions.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("rows"))
+        return counts.join(
+            F.broadcast(self.done()), ["source", "bucket", "rows"], "left_anti"
+        ).select("source", "bucket")
 
     def commit(self, partition_counts: DataFrame, run_id: str) -> None:
         """Append done-markers (one row per partition) AFTER sinks landed."""

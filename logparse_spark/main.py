@@ -89,12 +89,8 @@ def run_pipeline(
     out: str,
     n_buckets: int | None = None,
     resume: bool = True,
-    fail_after_partitions: int | None = None,
 ) -> dict:
     """Run the full pipeline; returns the Observation metrics dict.
-
-    `fail_after_partitions` (tests only) processes just K pending
-    partitions then stops — simulating a mid-run crash for resume tests.
 
     The metric tables, manifests and ledger rows derive from a
     column-pruned read-back of the `(source, bucket)` sink dirs this run
@@ -135,8 +131,6 @@ def run_pipeline(
         # broadcast-semi-join — keeps the big side shuffle-free, and at
         # 10^12 rows the same predicate prunes partitions at scan time
         pending_rows = sorted(map(tuple, ledger.pending(df).collect()))
-        if fail_after_partitions is not None:
-            pending_rows = pending_rows[:fail_after_partitions]
         if not pending_rows:
             return {
                 "routed_rows": 0, "total_tokens": 0, "unknown_rows": 0,

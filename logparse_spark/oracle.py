@@ -1,12 +1,15 @@
 """Pure-Python per-row oracle: the reference's semantics, one string at
-a time, interpreted with ``re`` — deliberately the OPPOSITE architecture
-of engine.py so agreement between the two is meaningful evidence.
+a time, interpreted with ``re`` — a per-row walk over the rulebook,
+unlike engine.py's batched, class-grouped kernel, so agreement between
+the two is evidence about the semantics, not about shared code.
 
-Stands in for riptano/logparse's ``parse_log`` (the /root/reference
-mount was empty — SURVEY.md §0); when the real reference is available,
-swap ``parse_event`` for its ``systemlog.parse_log`` and re-run the same
-equality tests.  Shares the rule table with the Spark path (single
-source of truth: rulebook.py).
+Stands in for riptano/logparse's ``parse_log`` (SURVEY.md §0); when the
+real reference is available, swap ``parse_event`` for its
+``systemlog.parse_log`` and re-run the same equality tests.  Shares the
+rule table with the Spark path (single source of truth: rulebook.py).
+It never raises on a parsed header: an invalid date gives ``ts`` None,
+an unparseable thread gives no thread name/id, and a capture its
+converter cannot parse keeps its text (``rulebook.convert``).
 """
 
 from __future__ import annotations
@@ -15,12 +18,12 @@ import re
 from datetime import datetime
 
 from logparse_spark.rulebook import (
-    CONVERTERS,
     DATE_FORMAT,
     HEADER_FORMATS,
     RULES,
     UNKNOWN_FAMILY,
     UNKNOWN_RULE_ID,
+    convert,
 )
 from logparse_spark.tokenizer import decode
 
@@ -51,14 +54,20 @@ def parse_text(text: str) -> dict:
         ev["extra"] = rest.split("\n") if rest else None
         return ev
     g = m.groupdict()
-    thread = g["thread"]
-    tm = re.match(r"^(.*?)(?::(\d+))?$", thread)
     ev["level"] = g["level"]
-    ev["thread_name"] = tm.group(1)
-    ev["thread_id"] = tm.group(2)
-    ev["ts"] = datetime.strptime(g["date"], DATE_FORMAT)
+    tm = re.match(r"^(.*?)(?::(\d+))?$", g["thread"])
+    if tm:  # a thread with an inner newline has no name/id
+        ev["thread_name"] = tm.group(1)
+        ev["thread_id"] = tm.group(2)
+    try:
+        ev["ts"] = datetime.strptime(g["date"], DATE_FORMAT)
+    except ValueError:  # e.g. 2015-02-30
+        pass
     ev["source_file"] = g["source_file"]
-    ev["source_line"] = int(g["source_line"])
+    try:
+        ev["source_line"] = int(g["source_line"])
+    except ValueError:  # more digits than int() accepts
+        pass
     first, _, rest = g["message"].partition("\n")
     ev["message"] = first
     ev["extra"] = rest.split("\n") if rest else None
@@ -72,7 +81,7 @@ def parse_text(text: str) -> dict:
             fields = {k: v for k, v in rm.groupdict().items() if v is not None}
             for fname, conv in convs.items():
                 if fname in fields:
-                    fields[fname] = CONVERTERS[conv](fields[fname])
+                    fields[fname] = convert(conv, fields[fname])
             ev["fields"] = fields
             break
     return ev

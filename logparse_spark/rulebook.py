@@ -1,7 +1,7 @@
 """The rule table: riptano/logparse's ``capture_message`` recast as DATA.
 
-Reference parity (reconstructed — /root/reference was empty; see
-SURVEY.md §0/§2.1 [R-H] and FIXTURES.md §2):
+Reference parity (reconstructed — see SURVEY.md §0/§2.1 [R-H] and
+FIXTURES.md §2):
 
 - ``rules.py §rule/§capture/§convert/§update/§case/§switch`` combinators
   collapse into one declarative :class:`Rule` row: ordered regexes with
@@ -12,15 +12,16 @@ SURVEY.md §0/§2.1 [R-H] and FIXTURES.md §2):
 - ``systemlog.py §capture_message`` becomes RULES, ordered
   first-match-wins within each class.
 
-At runtime the compiled table is broadcast and interpreted *vectorized*
-(pandas ``Series.str.extract`` over class-masked subsets) inside one
-``mapInPandas`` stage — see engine.py.  This module stays pure-Python /
+At runtime the compiled table is broadcast and interpreted per Arrow
+batch inside one ``mapInArrow`` stage: each class's rules run in order
+over that class's still-unmatched rows (``re`` match) — see engine.py.
+Captured values convert through :func:`convert`, the one conversion path
+of the engine and the oracle.  This module stays pure-Python /
 picklable: no Spark imports.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 # ---------------------------------------------------------------------------
@@ -68,6 +69,16 @@ CONVERTERS = {
     "comma_int": _canon_comma_int,
     "float": _canon_float,
 }
+
+
+def convert(conv: str, value: str) -> str:
+    """``CONVERTERS[conv](value)``; a capture the converter cannot parse
+    (``","`` for comma_int, ``"1..5"`` for float, an int past ``int()``'s
+    digit limit) keeps its captured text, so no line fails the parse."""
+    try:
+        return CONVERTERS[conv](value)
+    except ValueError:
+        return value
 
 
 @dataclass(frozen=True)
@@ -2070,7 +2081,6 @@ def compile_rulebook(rules: list[Rule] | None = None) -> dict:
                 "rule_id": r.rule_id,
                 "family": r.family,
                 "regex": r.regex,
-                "groups": list(re.compile(r.regex).groupindex),
                 "converters": r.converters,
                 "promote": r.promote,
             }

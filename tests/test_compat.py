@@ -55,6 +55,19 @@ def test_compat_capture_never_overwrites_header_keys():
     assert ev["compaction_level"] == "0"
 
 
+def test_compat_streams_past_an_invalid_date():
+    """A header whose date does not exist (Feb 30) still emits its event,
+    without `ts`, and the stream goes on."""
+    log = (
+        "INFO [main] 2015-02-30 22:24:34,843 GCInspector.java (line 116) GC for ParNew: "
+        "241 ms for 1 collections, 4315386160 used; max is 8000634880\n"
+        "INFO [main] 2015-03-30 22:24:36,000 NovelClass.java (line 1) nothing matches this\n"
+    )
+    first, second = _parse_lines(log)
+    assert "ts" not in first and first["rule_id"] == 1
+    assert second["ts"] == "2015-03-30 22:24:36"
+
+
 def test_rulebook_capture_groups_avoid_reserved_keys():
     """No rule capture group may collide with a header/taxonomy key —
     flattened fields would silently overwrite it in the emitted JSON."""

@@ -1,65 +1,61 @@
-"""r7 parse-kernel rewrite pin: the direct `re`-loop extraction must be
-semantically identical to the pandas ``str.extract`` machinery it
-replaced — including the subtle hit rules:
+"""Parse-kernel edge shapes, pinned on ``engine.parse_texts`` itself over
+small custom rulebooks:
 
-- header hit  == extract + ``level`` notna (optional groups may be None)
-- rule hit    == extract + ``notna().all(axis=1)`` (a regex MATCH with an
-  unmatched optional group is NOT a hit and must fall through to later
-  rules / unknown)
-- no-group rules use ``str.match`` (anchored-at-start) semantics, not
-  search.
+- a rule hit is a regex MATCH; named groups that took no part in it are
+  left out of ``fields`` (``oracle.parse_text`` and the DuckDB replica's
+  ``regexp_matches`` count it the same way);
+- every rule is matched at the start of the message, with or without
+  capture groups, anchored or not;
+- a promoted float field is ``int(float(v))`` when it fits int64, else
+  null.
 
 (The full-rulebook equivalence is carried by test_rules.py's 1:1
-fixtures and the DuckDB SQL replica; this file pins the edge shapes
-directly.)
+fixtures, test_property.py's engine-vs-oracle fuzz and the DuckDB SQL
+replica.)
 """
 
-import re
-
-import numpy as np
-import pandas as pd
-
 from logparse_spark.engine import parse_texts
-from logparse_spark.rulebook import compile_rulebook
+from logparse_spark.rulebook import Rule, compile_rulebook
 
 
-def _reference_rule_pass(messages: list[str], regex: str) -> list[bool]:
-    """The pandas semantics the kernel must reproduce for group rules."""
-    ext = pd.Series(messages, dtype=object).str.extract(re.compile(regex))
-    return ext.notna().all(axis=1).tolist()
+def _line(msg: str, cls: str = "Custom") -> str:
+    return f"INFO  [main] 2024-03-01 10:00:00,123 {cls}.java:12 - {msg}"
 
 
-def test_optional_group_match_is_not_a_hit():
-    # a regex that MATCHES but leaves an optional named group unmatched
-    # must not count as a hit (pandas notna().all(axis=1) contract)
-    regex = r"event (?P<kind>\w+)(?: id=(?P<id>\d+))?"
-    msgs = ["event start id=7", "event start", "no event here"]
-    ref = _reference_rule_pass(msgs, regex)
-    assert ref == [True, False, False]
-
-    # kernel path: hit iff search matches AND no group is None
-    pat = re.compile(regex)
-    got = []
-    for m in msgs:
-        mo = pat.search(m)
-        got.append(mo is not None and None not in mo.groups())
-    assert got == ref
+def _parse(rules: list[Rule], msgs: list[str]) -> dict:
+    return parse_texts([_line(m) for m in msgs], compile_rulebook(rules))
 
 
-def test_no_group_rule_uses_match_not_search():
-    # str.match anchors at the start; search does not — the kernel must
-    # keep match semantics for group-less rules
-    s = pd.Series(["INFO starting", "prefix INFO starting"], dtype=object)
-    ref = s.str.match(re.compile(r"INFO")).tolist()
-    pat = re.compile(r"INFO")
-    got = [pat.match(x) is not None for x in s]
-    assert got == ref == [True, False]
+def test_optional_group_match_is_a_hit():
+    rule = Rule(5000, "Custom", "custom", r"^event (?P<kind>\w+)(?: id=(?P<id>\d+))?",
+                converters={"id": "int"}, promote={"id": "count"})
+    cols = _parse([rule], ["event start id=007", "event start", "no event here"])
+    assert cols["rule_id"] == [5000, 5000, -1]
+    assert cols["fields"] == [{"kind": "start", "id": "7"}, {"kind": "start"}, {}]
+    assert cols["promoted"]["count"] == [7, None, None]
+
+
+def test_unanchored_rules_match_only_at_message_start():
+    rules = [
+        Rule(5001, "Custom", "custom", r"(?P<n>\d+) done", converters={"n": "int"}),
+        Rule(5002, "Custom", "custom", r"done"),
+    ]
+    cols = _parse(rules, ["12 done", "x 12 done", "done now", "not done"])
+    assert cols["rule_id"] == [5001, -1, 5002, -1]
+    assert cols["fields"] == [{"n": "12"}, {}, {}, {}]
+
+
+def test_promoted_float_field_truncates_to_int():
+    rule = Rule(5003, "Custom", "custom", r"^took (?P<ms>[0-9.e+]+)ms",
+                converters={"ms": "float"}, promote={"ms": "count"})
+    cols = _parse([rule], ["took 12.9ms", "took 1e30ms", "took 1..5ms"])
+    assert cols["fields"] == [{"ms": "12.9"}, {"ms": "1e+30"}, {"ms": "1..5"}]
+    assert cols["promoted"]["count"] == [12, None, None]  # 1e30 is past int64
 
 
 def test_parse_texts_smoke_on_real_rulebook_lines():
     """End-to-end kernel sanity on representative header + body shapes,
     including an unmatched header and a continuation line."""
-    compiled = compile_rulebook()
     lines = [
         "INFO  [main] 2024-03-01 10:00:00,123 StorageService.java:123 - "
         "Starting up server",
@@ -67,8 +63,7 @@ def test_parse_texts_smoke_on_real_rulebook_lines():
         "WARN  [ReadStage-2:7] 2024-03-01 10:00:01,000 NoSpamLogger.java:94 - "
         "Out of 1 commit log syncs\ncontinuation detail line",
     ]
-    texts = pd.Series(lines, dtype=object)
-    cols = parse_texts(texts, compiled)
+    cols = parse_texts(lines, compile_rulebook())
     assert cols["level"][0] == "INFO"
     assert cols["level"][1] is None          # header missed -> unknown path
     assert cols["rule_id"][1] == -1

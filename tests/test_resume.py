@@ -32,7 +32,17 @@ def _manifest_quanta(spark, out):
     return sorted((m["source"], m["bucket"]) for m in manifests)
 
 
-def test_resume_after_partial_failure(spark, tmp_path):
+def _run_crashing_after(monkeypatch, k, spark, seq, out):
+    """A run that processes only its first k pending quanta, as one that
+    crashed after committing them would have."""
+    real = Ledger.pending
+    with monkeypatch.context() as m:
+        m.setattr(Ledger, "pending",
+                  lambda self, parts: real(self, parts).orderBy("source", "bucket").limit(k))
+        run_pipeline(spark, seq, out, n_buckets=2)
+
+
+def test_resume_after_partial_failure(spark, tmp_path, monkeypatch):
     out_full = str(tmp_path / "full")
     out_resumed = str(tmp_path / "resumed")
     seq = generate_sequences(spark, N, partitions=4)
@@ -40,7 +50,7 @@ def test_resume_after_partial_failure(spark, tmp_path):
     run_pipeline(spark, seq, out_full, n_buckets=2)
 
     # crash after only 5 partitions committed...
-    run_pipeline(spark, seq, out_resumed, n_buckets=2, fail_after_partitions=5)
+    _run_crashing_after(monkeypatch, 5, spark, seq, out_resumed)
     ledger = Ledger(spark, f"{out_resumed}/ledger")
     done_before = ledger.done().count()
     assert done_before == 5
@@ -59,7 +69,7 @@ def test_resume_after_partial_failure(spark, tmp_path):
     ["007", "010", "123"],          # partition inference would retype these
     ["a/b", "x=y", "50%", "q:r"],   # written as %XX escapes in dir names
 ], ids=["numeric", "escaped"])
-def test_source_names_round_trip(spark, tmp_path, sources):
+def test_source_names_round_trip(spark, tmp_path, monkeypatch, sources):
     """Sinks, manifests and ledger carry the original source strings on
     fresh, crashed and resumed runs, and the sinks hold every row once."""
     seq = generate_sequences(spark, 300, partitions=2).withColumn(
@@ -70,7 +80,7 @@ def test_source_names_round_trip(spark, tmp_path, sources):
     fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
     run_pipeline(spark, seq, fresh, n_buckets=2, resume=False)
     assert _manifest_quanta(spark, fresh) == quanta
-    run_pipeline(spark, seq, resumed, n_buckets=2, fail_after_partitions=3)
+    _run_crashing_after(monkeypatch, 3, spark, seq, resumed)
     assert _manifest_quanta(spark, resumed) == quanta[:3]
     run_pipeline(spark, seq, resumed, n_buckets=2)
     assert _manifest_quanta(spark, resumed) == quanta[3:]
@@ -114,10 +124,39 @@ def test_pending_partitions_anti_join(spark, tmp_path):
     out = str(tmp_path / "pending")
     seq = with_bucket(generate_sequences(spark, 500, partitions=2), 2)
     ledger = Ledger(spark, f"{out}/ledger")
-    all_parts = seq.select("source", "bucket").distinct()
-    assert ledger.pending(seq).count() == all_parts.count()
-    ledger.commit(all_parts.limit(3).selectExpr("source", "bucket", "1 as rows"), "run0")
-    assert ledger.pending(seq).count() == all_parts.count() - 3
+    counts = seq.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("rows"))
+    n = counts.count()
+    assert ledger.pending(seq).count() == n
+    first3 = counts.orderBy("source", "bucket").limit(3).cache()
+    ledger.commit(first3, "run0")
+    assert ledger.pending(seq).count() == n - 3
+    # a quantum's latest commit decides: a stale count puts it back
+    ledger.commit(first3.limit(1).withColumn("rows", F.col("rows") + 1), "run1")
+    assert ledger.pending(seq).count() == n - 2
+    ledger.commit(first3.limit(1), "run2")
+    assert ledger.pending(seq).count() == n - 3
+    first3.unpersist()
+
+
+def test_resume_routes_rows_appended_to_committed_quanta(spark, tmp_path):
+    """Resuming over the committed input plus new doc_ids reruns every
+    quantum whose row count changed: the sinks hold each row once."""
+    def quantum_counts(seq):
+        return {(s, b): c for s, b, c in
+                with_bucket(seq, 2).groupBy("source", "bucket").count().collect()}
+
+    out = str(tmp_path / "append")
+    committed = generate_sequences(spark, 1000, partitions=2)
+    run_pipeline(spark, committed, out, n_buckets=2)
+    grown = generate_sequences(spark, 1300, partitions=2)  # same first 1000 doc_ids
+    before = quantum_counts(committed)
+    changed = sum(c for q, c in quantum_counts(grown).items() if before.get(q) != c)
+
+    assert run_pipeline(spark, grown, out, n_buckets=2)["routed_rows"] == changed
+    back = read_sink(spark, f"{out}/sinks").select("doc_id")
+    assert back.count() == back.distinct().count() == 1300
+    assert back.join(grown, "doc_id", "left_anti").count() == 0
+    assert Ledger(spark, f"{out}/ledger").pending(with_bucket(grown, 2)).count() == 0
 
 
 def test_overwrite_mode_split_fresh_static_resume_dynamic(spark, tmp_path, monkeypatch):
