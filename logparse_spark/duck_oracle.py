@@ -40,7 +40,8 @@ HEADER_SQL_REGEX = (
     r"(\w+)\.java(?: \(line \d+\) |:\d+ - )(.*)$"
 )
 
-CORPUS_DIR = "/root/repo/data"
+# <checkout>/data: each checkout materializes its own oracle corpus
+CORPUS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data")
 
 
 def _q(s: str) -> str:
@@ -91,8 +92,9 @@ def promoted_case_sql(target: str, msg: str = "msg", rule_id: str = "rule_id") -
     """CASE over every rule that promotes a captured field into typed
     column `target` — the SQL twin of the engine's promote step
     (engine.py: converted canonical value -> int64).  Both the `int` and
-    `comma_int` converters reduce to strip-commas-then-CAST; the
-    rulebook promotes no float fields (asserted)."""
+    `comma_int` converters reduce to strip-commas-then-TRY_CAST, NULL
+    where the engine's promotion is null (a comma-only capture, a value
+    past int64); the rulebook promotes no float fields (asserted)."""
     parts = [f"CASE {rule_id}"]
     for r in RULES:
         hits = [f for f, tgt in r.promote.items() if tgt == target]
@@ -102,7 +104,7 @@ def promoted_case_sql(target: str, msg: str = "msg", rule_id: str = "rule_id") -
         assert r.converters.get(hits[0]) in ("int", "comma_int"), (r.rule_id, hits)
         ex = capture_sql(r, hits[0], msg)
         parts.append(
-            f"WHEN {r.rule_id} THEN CAST(replace({ex}, ',', '') AS BIGINT)"
+            f"WHEN {r.rule_id} THEN TRY_CAST(replace({ex}, ',', '') AS BIGINT)"
         )
     parts.append("ELSE NULL END")
     return "\n".join(parts)

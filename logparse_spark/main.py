@@ -1,6 +1,6 @@
 """spark-submit entrypoint (P10): the full parse -> enrich -> route ->
-aggregate pipeline with lineage manifests, Observation metrics and
-ledger-based idempotent resume.
+aggregate pipeline with lineage manifests and ledger-based idempotent
+resume.
 
     spark-submit --py-files logparse_spark.zip -m logparse_spark.main \
         --input /data/sequences --out /data/pipeline_out
@@ -10,8 +10,9 @@ Local / sandbox:
     python -m logparse_spark.main --rows 200000 --out /tmp/lp_out --cores 32
 
 Driver-side logic is deliberately thin: build the plan declaratively,
-trigger ONE write action per output, collect only the Observation
-scalars and the tiny ledger/manifest tables.  No .collect() over data.
+trigger ONE write action per output, and collect only the per-quantum
+manifest rows (at most sources x buckets) the run's counts are summed
+from.  No .collect() over data.
 """
 
 from __future__ import annotations
@@ -26,12 +27,16 @@ from pyspark.sql import functions as F
 
 from logparse_spark.engine import parse_sequences
 from logparse_spark.ledger import Ledger
-from logparse_spark.manifests import observed, partition_manifests, write_manifests
+from logparse_spark.manifests import partition_manifests, save_manifests
 from logparse_spark.operators.aggregate import grain_counts, write_metrics
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.operators.route import _route_clustering, quantum_dir, route, with_bucket
 from logparse_spark.session import get_spark
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim, write_sequences
+
+
+# the counts run_pipeline returns: sums over the run's manifest rows
+_TOTALS = ("routed_rows", "total_tokens", "unknown_rows")
 
 
 def _input_bytes(df) -> int:
@@ -47,7 +52,7 @@ def _input_bytes(df) -> int:
         return 0
 
 
-def resolve_n_buckets(scan_bytes: int, out: str) -> int:
+def resolve_n_buckets(scan_bytes: int, out: str, n_buckets: int | None = None) -> int:
     """Adaptive resume-granularity bucket count, stable per output dir.
 
     The (source, bucket) resume quantum only needs to be STABLE PER
@@ -59,20 +64,34 @@ def resolve_n_buckets(scan_bytes: int, out: str) -> int:
     (50 sources x 1024 buckets ≈ 2 GB resume quanta), at sandbox sizes
     it is 1-4; unknown size (non-file sources) takes the protective 4.
 
-    Stability: the resolved count is persisted to
-    ``<out>/ledger/_meta.json`` on first resolution and ALWAYS reused
-    when present, so resumes and appends into the same output keep the
-    ledger key space and the sink dir layout consistent even as the
-    input grows.  Callers that pass an explicit ``n_buckets`` bypass
-    this entirely (tests pin their own).
+    Stability: this is the one reader and writer of
+    ``<out>/ledger/_meta.json``.  Whatever it resolves — an explicit
+    ``n_buckets`` or the sized count — is persisted when the file is
+    absent, and a persisted count is ALWAYS reused, so resumes into the
+    same output keep the ledger key space and the sink dir layout
+    consistent even as the input grows.  An explicit ``n_buckets`` that
+    contradicts the persisted count raises: recomputing pending against
+    a different key space than the committed ledger rows would
+    duplicate or skip quanta silently.
     """
     import math
 
     meta_path = os.path.join(out, "ledger", "_meta.json")
     if os.path.isfile(meta_path):
         with open(meta_path) as f:
-            return int(json.load(f)["n_buckets"])
-    if scan_bytes <= 0:
+            persisted = int(json.load(f)["n_buckets"])
+        if n_buckets is not None and n_buckets != persisted:
+            raise ValueError(
+                f"n_buckets={n_buckets} conflicts with the bucket count "
+                f"persisted for this output dir ({persisted}, "
+                f"{meta_path}); the ledger resume key space must stay "
+                "stable per output - pass n_buckets=None to reuse it, "
+                "or write to a fresh output dir"
+            )
+        return persisted
+    if n_buckets is not None:
+        n = n_buckets
+    elif scan_bytes <= 0:
         n = 4
     else:
         target = scan_bytes / (512 << 20)
@@ -90,38 +109,22 @@ def run_pipeline(
     n_buckets: int | None = None,
     resume: bool = True,
 ) -> dict:
-    """Run the full pipeline; returns the Observation metrics dict.
+    """Run the full pipeline; returns the run's counts and timings.
 
-    The metric tables, manifests and ledger rows derive from a
-    column-pruned read-back of the `(source, bucket)` sink dirs this run
-    wrote.  A fresh run's static overwrite truncated the tree, so that
-    is the whole tree; a resumed run's dynamic overwrite replaced
-    exactly its pending dirs, so it reads those.
+    Every number the run reports derives from a column-pruned read-back
+    of the `(source, bucket)` sink dirs this run wrote: the metric
+    tables, and the per-quantum manifest rows, which are evaluated once
+    and feed the manifests, the ledger commit and the returned
+    `routed_rows` / `total_tokens` / `unknown_rows` sums.  A fresh
+    run's static overwrite truncated the tree, so that is the whole
+    tree; a resumed run's dynamic overwrite replaced exactly its
+    pending dirs, so it reads those.
     """
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
     scan_bytes = _input_bytes(sequences_df)
-    if n_buckets is None:
-        n_buckets = resolve_n_buckets(scan_bytes, out)
-    else:
-        # ADVICE r6 (medium): an explicit n_buckets that contradicts the
-        # count persisted for this output dir would recompute pending
-        # against a different key space than the committed ledger rows —
-        # silent duplicate/skipped partitions on resume.  Refuse loudly;
-        # explicit callers on fresh dirs are unaffected.
-        meta_path = os.path.join(out, "ledger", "_meta.json")
-        if os.path.isfile(meta_path):
-            with open(meta_path) as f:
-                persisted = int(json.load(f)["n_buckets"])
-            if persisted != n_buckets:
-                raise ValueError(
-                    f"n_buckets={n_buckets} conflicts with the bucket count "
-                    f"persisted for this output dir ({persisted}, "
-                    f"{meta_path}); the ledger resume key space must stay "
-                    "stable per output - pass n_buckets=None to reuse it, "
-                    "or write to a fresh output dir"
-                )
+    n_buckets = resolve_n_buckets(scan_bytes, out, n_buckets)
     df = with_bucket(sequences_df, n_buckets)
     ledger = Ledger(spark, f"{out}/ledger")
     sinks = f"{out}/sinks"
@@ -133,8 +136,9 @@ def run_pipeline(
         pending_rows = sorted(map(tuple, ledger.pending(df).collect()))
         if not pending_rows:
             return {
-                "routed_rows": 0, "total_tokens": 0, "unknown_rows": 0,
-                "families": 0, "wall_sec": time.time() - t0, "run_id": run_id,
+                **dict.fromkeys(_TOTALS, 0),
+                "wall_sec": time.time() - t0, "run_id": run_id,
+                "route_sec": 0.0, "metrics_sec": 0.0,
             }
         pending = spark.createDataFrame(pending_rows, "source string, bucket int")
         df = df.join(F.broadcast(pending), ["source", "bucket"], "left_semi")
@@ -148,7 +152,6 @@ def run_pipeline(
     # parse's fixed output schema drops bucket; re-derive (pure crc32 JVM
     # expression) so routing and the metric grain share it
     enriched = with_bucket(enriched, n_buckets)
-    enriched, obs = observed(enriched)
     write_salt, cluster_mode = _route_clustering(scan_bytes)
 
     t_route = time.time()
@@ -157,14 +160,7 @@ def run_pipeline(
     route(enriched, sinks, n_buckets=n_buckets,
           cluster=cluster_mode, write_salt=write_salt,
           overwrite_mode="dynamic" if resume else "static")  # the one big action
-    timings = {"route_sec": round(time.time() - t_route, 2)}
-    try:
-        metrics = dict(obs.get)
-    except Exception:  # noqa: BLE001 - zero-row plans never run the
-        # CollectMetrics node (AQE empty-relation), so the
-        # Observation has nothing to report
-        metrics = {"routed_rows": 0, "total_tokens": 0,
-                   "unknown_rows": 0, "families": 0}
+    route_sec = round(time.time() - t_route, 2)
 
     # the explicit schema keeps partition values as written (no type
     # inference: source "007" stays "007") and reads an empty tree
@@ -176,22 +172,25 @@ def run_pipeline(
                   .parquet(*read_paths))
     t_metrics = time.time()
     grain = grain_counts(metric_src).cache()
+    manifests = partition_manifests(metric_src, grain=grain).cache()
     try:
         write_metrics(metric_src, f"{out}/metrics", grain=grain)
-        write_manifests(metric_src, f"{out}/manifests", grain=grain)
-        ledger.commit(
-            partition_manifests(metric_src, grain=grain)
-            .select("source", "bucket", F.col("routed_rows").alias("rows")),
-            run_id,
-        )
+        save_manifests(manifests, f"{out}/manifests")
+        ledger.commit(manifests.select(
+            "source", "bucket", F.col("routed_rows").alias("rows")), run_id)
+        # one row per quantum this run wrote (<= the pending set); an
+        # empty run has none and sums to 0s
+        totals = manifests.select(*_TOTALS).collect()
     finally:
+        manifests.unpersist()
         grain.unpersist()
-    timings["metrics_sec"] = round(time.time() - t_metrics, 2)
+    metrics_sec = round(time.time() - t_metrics, 2)
 
-    metrics["wall_sec"] = time.time() - t0
-    metrics["run_id"] = run_id
-    metrics.update(timings)
-    return metrics
+    return {
+        **{k: sum(r[k] or 0 for r in totals) for k in _TOTALS},
+        "wall_sec": time.time() - t0, "run_id": run_id,
+        "route_sec": route_sec, "metrics_sec": metrics_sec,
+    }
 
 
 def main() -> None:

@@ -1,35 +1,21 @@
-"""P8 lineage manifests + global metrics.
+"""P8 lineage manifests.
 
 Per-partition lineage: one JSON-serializable row per (source, bucket)
-with input rows, routed rows, the rule histogram, and a content
-checksum — enough to audit that every input row landed in exactly one
-sink and to diff two runs without re-reading the sinks.
+with routed rows, tokens, unknown rows, the rule histogram, and a
+content checksum — enough to audit that every input row landed in
+exactly one sink and to diff two runs without re-reading the sinks.
 
-Global counters use the DataFrame ``Observation`` API (the modern,
-structured replacement for raw accumulators): metrics ride the same
-action that writes the sinks — zero extra passes over the data.
+The manifest rows are also the run's global counters: ``run_pipeline``
+sums them for the counts it returns and commits them to the ledger, so
+every number a run reports comes from the read-back of what it wrote.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """Attach global pipeline counters; read obs.get after the write action."""
-    obs = Observation("pipeline")
-    return (
-        df.observe(
-            obs,
-            F.count(F.lit(1)).alias("routed_rows"),
-            F.sum("n_tok").alias("total_tokens"),
-            F.sum(F.when(F.col("rule_id") == -1, 1).otherwise(0)).alias("unknown_rows"),
-            # DISTINCT is not allowed in observed metrics; approx_ is
-            F.approx_count_distinct("family").alias("families"),
-        ),
-        obs,
-    )
+from logparse_spark.operators.aggregate import grain_counts
 
 
 def partition_manifests(parsed: DataFrame, grain: DataFrame | None = None) -> DataFrame:
@@ -39,11 +25,9 @@ def partition_manifests(parsed: DataFrame, grain: DataFrame | None = None) -> Da
     overflow-safe at any scale (bigint sum of 32-bit values), and
     sensitive to both membership and per-row rule assignment.
 
-    Derives from the (cached) grain_counts table when supplied — no
-    extra pass over the routed data.
+    Derives from the grain_counts table (built from `parsed` when not
+    supplied) — no extra pass over the routed data when it is cached.
     """
-    from logparse_spark.operators.aggregate import grain_counts
-
     if grain is None:
         grain = grain_counts(parsed)
     per_rule = grain.groupBy("source", "bucket", "rule_id").agg(
@@ -62,9 +46,13 @@ def partition_manifests(parsed: DataFrame, grain: DataFrame | None = None) -> Da
     )
 
 
-def write_manifests(parsed: DataFrame, path: str, grain: DataFrame | None = None) -> None:
-    mf = partition_manifests(parsed, grain)
-    # JSON lines: small (one row per partition key), human-auditable
+def save_manifests(mf: DataFrame, path: str) -> None:
+    """Write partition_manifests rows as JSON lines: small (one row per
+    partition key), human-auditable."""
     mf.select(F.to_json(F.struct(*mf.columns)).alias("manifest")).coalesce(1).write.mode(
         "overwrite"
     ).text(path)
+
+
+def write_manifests(parsed: DataFrame, path: str, grain: DataFrame | None = None) -> None:
+    save_manifests(partition_manifests(parsed, grain), path)

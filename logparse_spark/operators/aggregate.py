@@ -33,18 +33,20 @@ def grain_counts(parsed: DataFrame) -> DataFrame:
 
 
 def rule_histogram(parsed: DataFrame, grain: DataFrame | None = None) -> DataFrame:
-    """Rule-hit histogram (== oracle Counter over the same corpus)."""
-    if grain is not None:
-        return grain.groupBy("family", "rule_id").agg(F.sum("cnt").alias("cnt"))
-    return parsed.groupBy("family", "rule_id").agg(F.count("*").alias("cnt"))
+    """Rule-hit histogram (== oracle Counter over the same corpus), summed
+    from the grain (built from `parsed` when not supplied)."""
+    if grain is None:
+        grain = grain_counts(parsed)
+    return grain.groupBy("family", "rule_id").agg(F.sum("cnt").alias("cnt"))
 
 
 def source_level_rollup(parsed: DataFrame, grain: DataFrame | None = None) -> DataFrame:
     """GROUP BY ROLLUP(source, level): per-source, per-source-level and
-    grand-total counts in one pass (NULL-padded grouping columns)."""
-    if grain is not None:
-        return grain.rollup("source", "level").agg(F.sum("cnt").alias("cnt"))
-    return parsed.rollup("source", "level").agg(F.count("*").alias("cnt"))
+    grand-total counts (NULL-padded grouping columns), summed from the
+    grain (built from `parsed` when not supplied)."""
+    if grain is None:
+        grain = grain_counts(parsed)
+    return grain.rollup("source", "level").agg(F.sum("cnt").alias("cnt"))
 
 
 def family_metrics(parsed: DataFrame) -> DataFrame:

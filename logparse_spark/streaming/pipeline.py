@@ -6,9 +6,11 @@ parquet, with:
 
 - watermarked event-time windowed aggregation (late data dropped past
   the watermark);
-- fan-out routing via ``foreachBatch`` (per-micro-batch partitionBy
-  write — the streaming twin of operators/route.py);
+- stateful running totals and exact / watermark-bounded dedup;
 - ``availableNow`` trigger for bounded catch-up runs (tests/CI).
+
+Routing to sinks stays batch-only (operators/route.py): the sink tree
+has one layout, the ``(source, bucket)`` resume quantum.
 
 The reference is strictly batch (one-pass generator); streaming is an
 extension the Spark architecture gives nearly for free.
@@ -73,41 +75,6 @@ def dedup_stream(df: DataFrame, text_col: str = "text",
     return keyed.dropDuplicates(["fp"])
 
 
-def route_stream(parsed: DataFrame, sinks_path: str, checkpoint: str):
-    """Streaming fan-out: per-micro-batch partitioned write.
-
-    foreachBatch is at-least-once: a micro-batch retried after a crash
-    between write and checkpoint commit would duplicate rows under
-    mode('append').  Partitioning by (family, batch_id) with dynamic
-    partition overwrite makes the retry idempotent — the replayed batch
-    overwrites exactly its own partitions.
-
-    LAYOUT v2 (breaking): sinks gained a `batch_id` partition column vs
-    the round-1 family-partitioned append layout.  Do not mix layouts in
-    one `sinks_path` — old appended files are not overwrite-managed and
-    would survive as stale rows; point v2 runs at a fresh (or versioned)
-    directory.  Idempotency further assumes a deterministic REPLAYABLE
-    source (the file source here): a non-replayable source can re-batch
-    rows under a different batch_id on retry.
-    """
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("family", "batch_id")
-            .parquet(sinks_path)
-        )
-
-    return (
-        parsed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stateful_family_totals(parsed: DataFrame) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
     running per-(source, family) event totals maintained across
@@ -138,11 +105,3 @@ def stateful_family_totals(parsed: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_available_now(spark: SparkSession, input_path: str, sinks_path: str,
-                      checkpoint: str) -> None:
-    """Bounded streaming run: process everything currently available."""
-    q = route_stream(parse_stream(stream_sequences(spark, input_path)),
-                     sinks_path, checkpoint)
-    q.awaitTermination()

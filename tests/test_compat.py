@@ -3,10 +3,13 @@ semantics identical to the engine (shared rulebook)."""
 
 import io
 import json
+import os
 import subprocess
 import sys
 
 from logparse_spark.compat import main as compat_main
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 LOG = """\
 INFO [ScheduledTasks:1] 2015-03-30 22:24:34,843 GCInspector.java (line 116) GC for ParNew: 241 ms for 1 collections, 4315386160 used; max is 8000634880
@@ -86,7 +89,7 @@ def test_compat_cli_pipe():
     """The actual reference invocation shape: pipe a log through the module."""
     out = subprocess.run(
         [sys.executable, "-m", "logparse_spark.compat", "node-007"],
-        input=LOG, capture_output=True, text=True, check=True, cwd="/root/repo",
+        input=LOG, capture_output=True, text=True, check=True, cwd=ROOT,
     )
     evs = [json.loads(line) for line in out.stdout.splitlines()]
     assert len(evs) == 3

@@ -11,8 +11,10 @@ from logparse_spark.duck_oracle import (
     HEADER_SQL_REGEX,
     family_case_sql,
     materialize_corpus,
+    promoted_case_sql,
     rule_case_sql,
 )
+from logparse_spark.engine import compile_rulebook, parse_texts
 from logparse_spark.oracle import parse_text
 from tests.test_rules import FIXTURE_LINES, HDR20, HDR21
 
@@ -69,3 +71,34 @@ def test_materialized_corpus_matches_python_oracle(duck):
     assert len(got) == 500
     for doc_id, text, rid in got:
         assert parse_text(text)["rule_id"] == rid, (doc_id, text[:90], rid)
+
+
+def test_promoted_cast_is_null_where_the_engine_is_null(duck):
+    """A comma_int-promoted capture the engine cannot promote (a comma
+    alone, a value past int64) is NULL in the SQL replica too, not a
+    ConversionException that fails the whole oracle query."""
+    compacted = ("Compacted 4 sstables to [x].  1,024 bytes to 512 (~50% of original) "
+                 "in {dur}ms = 1.5MB/s.  10 total partitions merged to 5.  "
+                 "Partition merge counts were {{1:5}}")
+    texts = [HDR20.format(thread="CompactionExecutor:1", cls="CompactionTask",
+                          msg=compacted.format(dur=d))
+             for d in (",", "1234567890123456789012", "1,234")]
+    eng = parse_texts(texts, compile_rulebook())
+    assert eng["rule_id"] == [11, 11, 11]
+    assert eng["promoted"]["duration_ms"] == [None, None, 1234]
+
+    duck.execute("CREATE OR REPLACE TABLE promo(i INT, text VARCHAR)")
+    duck.executemany("INSERT INTO promo VALUES (?, ?)", list(enumerate(texts)))
+    hdr = HEADER_SQL_REGEX.replace("'", "''")
+    got = duck.execute(f"""
+        WITH hdr AS (
+            SELECT i, regexp_extract(text, '{hdr}', 2) AS cls,
+                   regexp_extract(text, '{hdr}', 3) AS msg
+            FROM promo
+        ), ruled AS (
+            SELECT i, msg, {rule_case_sql("msg", "cls")} AS rid FROM hdr
+        )
+        SELECT rid, {promoted_case_sql("duration_ms", "msg", "rid")}
+        FROM ruled ORDER BY i
+    """).fetchall()
+    assert got == [(11, d) for d in eng["promoted"]["duration_ms"]]

@@ -286,3 +286,21 @@ def test_explicit_n_buckets_conflict_with_persisted_meta_raises(spark, tmp_path)
         run_pipeline(spark, seq, out, n_buckets=persisted + 1, resume=True)
     # same explicit value as persisted: fine
     run_pipeline(spark, seq, out, n_buckets=persisted, resume=True)
+
+
+def test_explicit_n_buckets_persists_for_a_later_auto_resume(spark, tmp_path):
+    """An explicit n_buckets is persisted like a sized one, so a later
+    run that leaves n_buckets to auto resolution reuses it: resuming
+    the same input routes nothing and every doc_id stays in the sinks
+    exactly once."""
+    src = str(tmp_path / "seq_src")
+    generate_sequences(spark, 1000, partitions=2).write.parquet(src)
+    seq = spark.read.parquet(src)
+    out = str(tmp_path / "o")
+    run_pipeline(spark, seq, out, n_buckets=2, resume=False)
+    m2 = run_pipeline(spark, seq, out, n_buckets=None, resume=True)
+    routed = read_sink(spark, f"{out}/sinks")
+    assert routed.count() == routed.select("doc_id").distinct().count() == 1000
+    assert m2["routed_rows"] == 0
+    with open(os.path.join(out, "ledger", "_meta.json")) as f:
+        assert json.load(f)["n_buckets"] == 2
