@@ -55,7 +55,7 @@ PARSED_SCHEMA = (
     + ", ".join(f"{c} {'bigint' if t == 'long' else t}" for c, t in PROMOTED_COLUMNS)
 )
 
-_THREAD = re.compile(r"^(.*?)(?::(\d+))?$")  # "name[:id]"
+_THREAD = re.compile(r"^(.*?)(?::(\d+))?$", re.ASCII)  # "name[:id]"
 _INT32 = (-(1 << 31), 1 << 31)
 _INT64 = (-(1 << 63), 1 << 63)
 
@@ -107,7 +107,7 @@ def parse_texts(texts: Iterable[str], compiled: dict) -> dict:
         "level", "thread_name", "thread_id", "ts", "source_file",
         "source_line", "message", "extra")}
     level, thread_name, thread_id, ts, source_file, source_line, message, extra = cols.values()
-    headers = [_pat(h, re.DOTALL) for h in compiled["headers"]]
+    headers = [_pat(h, re.DOTALL | re.ASCII) for h in compiled["headers"]]
     rows_by_class: dict[str, list[int]] = {}
 
     # --- header parse (capture_line [R-H]): ordered format alternatives ----
@@ -142,7 +142,7 @@ def parse_texts(texts: Iterable[str], compiled: dict) -> dict:
     promoted = {c: [None] * n for c, _ in PROMOTED_COLUMNS}
     for cls, rows in rows_by_class.items():
         for rule in compiled["by_class"].get(cls, ()):
-            pat = _pat(rule["regex"])
+            pat = _pat(rule["regex"], re.ASCII)
             convs, promote = rule["converters"], rule["promote"]
             missed = []
             for i in rows:

@@ -22,6 +22,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logparse_spark.session import local_frame
+
 LEDGER_SCHEMA = "source string, bucket int, status string, rows long, committed_at double, run_id string"
 
 
@@ -36,9 +38,10 @@ class Ledger:
         )
 
     def done(self) -> DataFrame:
-        """Committed quanta: (source, bucket, rows) of each one's latest commit."""
+        """Committed quanta: (source, bucket, rows) of each one's latest
+        commit; with no ledger yet, an empty ``LocalRelation``."""
         if not self._exists():
-            return self.spark.createDataFrame([], "source string, bucket int, rows long")
+            return local_frame(self.spark, [], "source string, bucket int, rows long")
         return (
             self.spark.read.parquet(self.path)
             .where(F.col("status") == "done")

@@ -17,6 +17,11 @@ Scale design:
   hamming verify;
 - embedding near-dup: random-hyperplane LSH buckets -> in-bucket
   cosine, hyperplanes derived deterministically from a seed.
+
+Durability: every ``localCheckpoint`` below keeps its blocks in
+executor storage, outside the lineage.  A lost executor fails the query
+instead of recomputing the table; that is the trade accepted for
+evaluating a self-join's (or an iteration's) shared side once.
 """
 
 from __future__ import annotations
@@ -195,7 +200,8 @@ def minhash_lsh_candidates(
     # other side's shuffle Exchange).  localCheckpoint is per-invocation
     # state (plan-keyed cache reuse across runs would be result
     # caching); the table is (id, band, band_hash) — tens of bytes per
-    # doc-band, never the text.
+    # doc-band, never the text.  Executor-local: a lost executor fails
+    # the query (module docstring).
     banded = banded.localCheckpoint()
     a, b = banded.alias("a"), banded.alias("b")
     return (
@@ -434,6 +440,11 @@ def ngram_jaccard_pairs(
     cap (real prose, n>=2 shingles) or a non-positive threshold (the
     mask path drops never-matching all-null/empty docs that
     threshold<=0 would keep) falls back to the array path unchanged.
+
+    Precondition: `id_col` is unique.  Both paths pair rows by `id`, but
+    the mask path folds every row of one id into one bitmask (a set
+    union) while the array path compares each row on its own, so
+    duplicate ids give different pairs and scores on the two paths.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     narrow = df.select(
@@ -448,9 +459,12 @@ def ngram_jaccard_pairs(
     sh = narrow.select(
         "id", "blk", word_shingles(F.col("_t"), shingle_n).alias("sh"),
     ).localCheckpoint()  # shingle HOF would otherwise run once per join side
+    # (executor-local: a lost executor fails the query, module docstring)
     if threshold > 0:
         vocab = sh.select(F.explode("sh").alias("w")).distinct()
-        n_words = vocab.count()  # driver-tiny scalar (gate decision only)
+        # the gate stops counting at the cap: a large vocabulary is never
+        # counted in full just to be rejected
+        n_words = vocab.limit(max_mask_words + 1).count()
         if 0 < n_words <= max_mask_words:
             return _jaccard_pairs_masked(sh, vocab, n_words, threshold)
     a, b = sh.alias("a"), sh.alias("b")
@@ -493,7 +507,7 @@ def _jaccard_pairs_masked(sh: DataFrame, vocab: DataFrame, n_words: int,
             f"THEN shiftleft(1L, r - {j * 64}) ELSE 0L END"
         )).alias(f"m{j}")
         for j in range(lanes)
-    ]).localCheckpoint()  # tiny (id, blk, lanes) table; one eval, not per side
+    ]).localCheckpoint()  # tiny (id, blk, lanes), one eval; executor-local
     # spread the probe side: the checkpointed table is 1-2 partitions, so
     # the O(pairs-per-block) expansion would otherwise run on one task
     # (AQE still picks the join strategy; the build side broadcasts when
@@ -547,7 +561,9 @@ def connected_components(
     (labels x edges, labels x labels) + one groupBy min — no
     collect_list, so a high-degree hub never materializes its
     neighbourhood in one task.  `localCheckpoint` cuts the lineage per
-    round (an iterative plan otherwise doubles every iteration);
+    round (an iterative plan otherwise doubles every iteration); its
+    blocks live in executor storage, so a lost executor fails the run
+    rather than recomputing a round;
     convergence is detected with a cheap `where(changed).isEmpty()`
     probe, not a full count.  Superseded rounds' checkpoint blocks
     become unreferenced as `labels` is rebound and are reclaimed
@@ -703,7 +719,7 @@ def simhash_near_dups(
     # materialize before the chunk self-join: both sides otherwise
     # re-evaluate the full 60-counter bitsum aggregation (one subtree
     # per side in the physical plan — see minhash_lsh_candidates).
-    # (id, sh) is 16 bytes/doc.
+    # (id, sh) is 16 bytes/doc; executor-local (module docstring).
     s = simhash_sql(df, text_col, id_col).localCheckpoint()
     mask = (1 << width) - 1
     chunks = s.select(
@@ -796,6 +812,7 @@ def embedding_near_dups(
     bucket = sum(bits[1:], bits[0]).alias("bucket")
     # materialize before the bucket self-join: the n_planes interpreted
     # dot products per row otherwise evaluate once per join side
+    # (executor-local: a lost executor fails the query, module docstring)
     v = narrow.select(F.col("id"), vec.alias("v"), bucket).localCheckpoint()
     a, b = v.alias("a"), v.alias("b")
     cos = _dot(F.col("a.v"), F.col("b.v")) / (_norm(F.col("a.v")) * _norm(F.col("b.v")))

@@ -15,11 +15,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logparse_spark.rulebook import RULES_DIM_SCHEMA, rules_dim_rows
+from logparse_spark.session import local_frame
 
 
 def rules_dim(spark: SparkSession) -> DataFrame:
-    """The compiled rulebook as a dimension table (taxonomy join)."""
-    return spark.createDataFrame(rules_dim_rows(), schema=RULES_DIM_SCHEMA)
+    """The compiled rulebook as a dimension table (taxonomy join): one
+    row per rule plus the unknown fallback, a ``LocalRelation`` built
+    from an Arrow table, so its broadcast runs no Python job."""
+    return local_frame(spark, rules_dim_rows(), RULES_DIM_SCHEMA)
 
 
 def enrich(parsed: DataFrame, nodes: DataFrame, rules: DataFrame | None = None) -> DataFrame:

@@ -27,11 +27,11 @@ from logparse_spark.rulebook import (
 )
 from logparse_spark.tokenizer import decode
 
-_HEADERS = [re.compile(h, re.DOTALL) for h in HEADER_FORMATS]
+_HEADERS = [re.compile(h, re.DOTALL | re.ASCII) for h in HEADER_FORMATS]
 _BY_CLASS: dict[str, list] = {}
 for _r in RULES:
     _BY_CLASS.setdefault(_r.source_class, []).append(
-        (_r.rule_id, _r.family, re.compile(_r.regex), _r.converters)
+        (_r.rule_id, _r.family, re.compile(_r.regex, re.ASCII), _r.converters)
     )
 
 
@@ -55,7 +55,7 @@ def parse_text(text: str) -> dict:
         return ev
     g = m.groupdict()
     ev["level"] = g["level"]
-    tm = re.match(r"^(.*?)(?::(\d+))?$", g["thread"])
+    tm = re.match(r"^(.*?)(?::(\d+))?$", g["thread"], re.ASCII)
     if tm:  # a thread with an inner newline has no name/id
         ev["thread_name"] = tm.group(1)
         ev["thread_id"] = tm.group(2)

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -72,3 +75,22 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-held rows (tuples in ``schema``'s DDL column order) as a
+    DataFrame planned as a ``LocalRelation``.
+
+    The rows go through an Arrow table typed by ``schema``.
+    ``createDataFrame`` of a Python list (or ``[]``) plans a
+    ``LogicalRDD`` over a pickled PythonRDD instead: every job that reads
+    it, a broadcast build included, runs through a second Python worker
+    daemon and pool beside the parse stage's ``mapInArrow`` one.  On the
+    3,000-row perfbench corpus at local[4] that cost a process's first
+    pipeline run ~1.8 s of route time and every run ~170 MB of RSS.
+    """
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

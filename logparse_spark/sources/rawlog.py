@@ -26,7 +26,8 @@ from logparse_spark.rulebook import HEADER_FORMATS
 
 # header detection only needs the line prefix shape, not the full parse
 _HEADER_PROBE = re.compile(
-    r"^[A-Z]+\s+\[[^\]]+\]\s+\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2},\d{3}\s+\w+\.java"
+    r"^[A-Z]+\s+\[[^\]]+\]\s+\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2},\d{3}\s+\w+\.java",
+    re.ASCII,
 )
 
 

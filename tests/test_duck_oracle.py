@@ -4,11 +4,14 @@ this is what makes the q_pipeline_* driver oracles trustworthy, and it
 catches any Python-re construct RE2 can't replicate the moment a rule
 is added."""
 
+import re
+
 import duckdb
 import pytest
 
 from logparse_spark.duck_oracle import (
     HEADER_SQL_REGEX,
+    capture_sql,
     family_case_sql,
     materialize_corpus,
     promoted_case_sql,
@@ -16,6 +19,7 @@ from logparse_spark.duck_oracle import (
 )
 from logparse_spark.engine import compile_rulebook, parse_texts
 from logparse_spark.oracle import parse_text
+from logparse_spark.rulebook import RULES, convert
 from tests.test_rules import FIXTURE_LINES, HDR20, HDR21
 
 
@@ -102,3 +106,49 @@ def test_promoted_cast_is_null_where_the_engine_is_null(duck):
         FROM ruled ORDER BY i
     """).fetchall()
     assert got == [(11, d) for d in eng["promoted"]["duration_ms"]]
+
+
+def test_non_ascii_digits_miss_in_the_engine_as_in_the_sql_replica(duck):
+    """`\\d` and `\\w` are ASCII in all three implementations (`re.ASCII`
+    in the engine and the oracle, RE2 in the replica): a non-ASCII digit
+    in a shipped rule's `\\d` capture, or in the header's line number, is
+    the same rule_id and fields everywhere."""
+    gc = "GC for {t}: {d} ms for 1 collections, 43 used; max is 8000634880"
+    texts = [
+        HDR20.format(thread="T:1", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
+        HDR20.format(thread="T:2", cls="GCInspector", msg=gc.format(t="ParNew", d="24٣")),
+        HDR21.format(thread="T:3", cls="GCInspector", msg=gc.format(t="ParNew", d="２41")),
+        HDR21.format(thread="T:4", cls="GCInspector", msg=gc.format(t="ParNéw", d="241")),
+        HDR20.replace("(line 116)", "(line 4٣)").format(
+            thread="T:5", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
+    ]
+    eng = parse_texts(texts, compile_rulebook())
+    assert eng["rule_id"][0] == 1  # the ASCII control line is a hit
+    assert [parse_text(t)["rule_id"] for t in texts] == eng["rule_id"]
+
+    rule = next(r for r in RULES if r.rule_id == 1)
+    groups = list(re.compile(rule.regex).groupindex)
+    duck.execute("CREATE OR REPLACE TABLE nonascii(i INT, text VARCHAR)")
+    duck.executemany("INSERT INTO nonascii VALUES (?, ?)", list(enumerate(texts)))
+    hdr = HEADER_SQL_REGEX.replace("'", "''")
+    got = duck.execute(f"""
+        WITH hdr AS (
+            SELECT i, regexp_matches(text, '{hdr}') AS hdr_ok,
+                   regexp_extract(text, '{hdr}', 2) AS cls,
+                   regexp_extract(text, '{hdr}', 3) AS msg
+            FROM nonascii
+        ), ruled AS (
+            SELECT i, msg, CASE WHEN hdr_ok THEN {rule_case_sql("msg", "cls")}
+                                ELSE -1 END AS rid
+            FROM hdr
+        )
+        SELECT rid, {", ".join(capture_sql(rule, g, "msg") for g in groups)}
+        FROM ruled ORDER BY i
+    """).fetchall()
+    sql_fields = [
+        {g: convert(rule.converters[g], v) if g in rule.converters else v
+         for g, v in zip(groups, caps)} if rid == 1 else {}
+        for rid, *caps in got
+    ]
+    assert [rid for rid, *_ in got] == eng["rule_id"]
+    assert sql_fields == eng["fields"]

@@ -3,7 +3,9 @@ pipeline survive a 100x scale-up, pinned as assertions."""
 
 from pyspark.sql import functions as F
 
+from logparse_spark import main
 from logparse_spark.engine import parse_sequences
+from logparse_spark.ledger import Ledger
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.plans import (
     assert_broadcast_join,
@@ -12,6 +14,7 @@ from logparse_spark.plans import (
     assert_pushed_filters,
     assert_wholestage_codegen,
 )
+from logparse_spark.rulebook import rules_dim_rows
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim
 
 SF = "/root/testdata/sf0.001"
@@ -21,6 +24,61 @@ def test_enrich_is_broadcast_only(spark):
     parsed = parse_sequences(generate_sequences(spark, 100))
     out = enrich(parsed, nodes_dim(spark), rules_dim(spark))
     assert_broadcast_join(out, count=2)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _parquet_input(spark, path, n=100):
+    generate_sequences(spark, n).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_driver_local_tables_are_local_relations(spark, tmp_path):
+    """rules_dim and the empty ledger are planned from local rows: a
+    Python-list DataFrame would plan as a LogicalRDD, whose every job
+    runs a second Python worker pool."""
+    for df in (rules_dim(spark), Ledger(spark, str(tmp_path / "no_ledger")).done()):
+        plan = _optimized(df)
+        assert plan.startswith("LocalRelation"), plan
+
+
+def test_rules_dim_rows_survive_the_arrow_conversion(spark):
+    got = [tuple(r) for r in rules_dim(spark).collect()]
+    want = rules_dim_rows()
+    assert got == want
+    assert [tuple(map(type, r)) for r in got] == [tuple(map(type, r)) for r in want]
+
+
+def test_enrich_over_a_parquet_scan_has_no_python_rdd(spark, tmp_path):
+    seq = _parquet_input(spark, str(tmp_path / "seq"))
+    out = enrich(parse_sequences(seq), nodes_dim(spark), rules_dim(spark))
+    assert "LogicalRDD" not in _optimized(out)
+
+
+def test_resumed_run_builds_its_frontier_as_a_local_relation(spark, tmp_path, monkeypatch):
+    """A resume into an output with no ledger: the frontier frame is a
+    LocalRelation and nothing the run routes plans a LogicalRDD."""
+    built, routed = [], []
+    real_local_frame, real_route = main.local_frame, main.route
+
+    def spy_local_frame(*args, **kwargs):
+        built.append(real_local_frame(*args, **kwargs))
+        return built[-1]
+
+    def spy_route(df, *args, **kwargs):
+        routed.append(_optimized(df))
+        return real_route(df, *args, **kwargs)
+
+    monkeypatch.setattr(main, "local_frame", spy_local_frame)
+    monkeypatch.setattr(main, "route", spy_route)
+    seq = _parquet_input(spark, str(tmp_path / "seq"), n=200)
+    m = main.run_pipeline(spark, seq, str(tmp_path / "out"), n_buckets=1, resume=True)
+    assert m["routed_rows"] == 200
+    assert [df.columns for df in built] == [["source", "bucket"]]
+    assert _optimized(built[0]).startswith("LocalRelation")
+    assert len(routed) == 1 and "LogicalRDD" not in routed[0], routed
 
 
 def test_parse_stage_has_no_shuffle(spark):

@@ -156,7 +156,8 @@ _OK = {"date": "2015-03-30 22:24:34,843", "src": ":116 -"}
 _ADVERSARIAL = {
     # a year past pandas' nanosecond range (2262)
     "year_2415": _HDR.format(**{**_OK, "date": "2415-03-30 22:24:34,843"}) + _GC.format(d=241, u=43),
-    # a non-ASCII digit in the line number: int() reads it as 43
+    # a non-ASCII digit in the line number: ASCII \d rejects it, so no
+    # header format matches and the whole line is an unknown message
     "line_4_arabic_3": _HDR.format(**{**_OK, "src": " (line 4٣)"}) + _GC.format(d=241, u=43),
     # a message ending in a newline has no continuation lines
     "trailing_newline": _HDR.format(**_OK) + _GC.format(d=241, u=43) + "\n",

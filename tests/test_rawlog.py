@@ -42,6 +42,14 @@ def test_fold_orphan_continuation_first():
     assert len(events) == 2  # orphan kept as its own (unknown) event
 
 
+def test_fold_reads_header_digits_as_ascii():
+    """The fold's header probe reads `\\d` as ASCII, as the parse does: a
+    line whose date holds a non-ASCII digit continues the event before it."""
+    first, gc = LOG.splitlines()[:2]
+    odd = gc.replace("2015", "２015")
+    assert fold_lines(f"{first}\n{odd}") == [f"{first}\n{odd}"]
+
+
 def test_raw_logs_end_to_end(spark, tmp_path):
     node_dir = tmp_path / "node-042"
     os.makedirs(node_dir)
