@@ -42,7 +42,7 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     costs one few-MB shuffle and fires only when the scan under-splits
     the cluster; results are partitioning-independent so every oracle
     hash is unchanged."""
-    from logparse_spark.operators.similarity import _spread
+    from logparse_spark.operators.dedup import _spread
 
     df = _t(spark, sf_dir, name)
     return _spread(df, *df.columns)

@@ -10,7 +10,7 @@ and pinned by the pure-Python oracle in ``logparse_spark.oracle``.
 
 Architecture is Spark-first, NOT a port:
 
-- the ordered rule table is *data* (broadcast), not code;
+- the ordered rule table is *data*, not code, compiled once per worker;
 - detokenize + ordered-first-match-regex-extract run in ONE
   ``mapInArrow`` stage (Arrow batches, zero-copy ``tokens``, direct
   ``re`` loops over class-masked rows, zero per-row Python UDFs);

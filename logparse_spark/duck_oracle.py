@@ -32,14 +32,6 @@ import re
 
 from logparse_spark.rulebook import RULES, Rule
 
-# combined line-1 header regex (both formats as ordered alternation):
-# group 1 = date, 2 = emitting class, 3 = message
-HEADER_SQL_REGEX = (
-    r"^[A-Z]+\s+\[[^\]]+\]\s+"
-    r"(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2},\d{3})\s+"
-    r"(\w+)\.java(?: \(line \d+\) |:\d+ - )(.*)$"
-)
-
 # <checkout>/data: each checkout materializes its own oracle corpus
 CORPUS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data")
 
@@ -49,13 +41,47 @@ def _q(s: str) -> str:
     return s.replace("'", "''")
 
 
+# RE2's \s is [\t\n\f\r ]; Python's ASCII \s also holds the vertical tab
+_RE2_SPACE = {r"\s": r"[\t\n\v\f\r ]", r"\S": r"[^\t\n\v\f\r ]"}
+# an escape, a class opener (with its ^ and a literal leading ]), a
+# class closer, or a run of other characters
+_RE_TOKEN = re.compile(r"\\.|\[\^?\]?|\]|[^\\\[\]]+", re.DOTALL)
+
+
+def _re2(regex: str) -> str:
+    r"""``regex`` spelled so RE2 reads it as Python's ``re.ASCII`` does:
+    ``\s``/``\S`` become explicit classes.  Raises on ``\s``/``\S``
+    inside a ``[...]`` class, where that spelling does not nest."""
+    out, in_class = [], False
+    for tok in _RE_TOKEN.findall(regex):
+        if tok in _RE2_SPACE:
+            if in_class:
+                raise ValueError(rf"\s or \S inside a character class: {regex!r}")
+            tok = _RE2_SPACE[tok]
+        elif tok[0] == "[":
+            in_class = True
+        elif tok == "]":
+            in_class = False
+        out.append(tok)
+    return "".join(out)
+
+
+# combined line-1 header regex (both formats as ordered alternation):
+# group 1 = date, 2 = emitting class, 3 = message
+HEADER_SQL_REGEX = _re2(
+    r"^[A-Z]+\s+\[[^\]]+\]\s+"
+    r"(\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2},\d{3})\s+"
+    r"(\w+)\.java(?: \(line \d+\) |:\d+ - )(.*)$"
+)
+
+
 def _anchored(regex: str) -> str:
-    return regex if regex.startswith("^") else "^" + regex
+    return _re2(regex if regex.startswith("^") else "^" + regex)
 
 
-def rules_by_class(rules: list[Rule] | None = None) -> dict[str, list[Rule]]:
+def rules_by_class() -> dict[str, list[Rule]]:
     by: dict[str, list[Rule]] = {}
-    for r in rules or RULES:
+    for r in RULES:
         by.setdefault(r.source_class, []).append(r)
     return by
 

@@ -37,6 +37,7 @@ from datetime import datetime
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from logparse_spark.rulebook import (
     DATE_FORMAT,
@@ -47,13 +48,28 @@ from logparse_spark.rulebook import (
     convert,
 )
 
-PARSED_SCHEMA = (
-    "doc_id string, source string, tokens array<int>, n_tok int, "
-    "level string, thread_name string, thread_id string, ts timestamp, "
-    "source_file string, source_line int, message string, extra array<string>, "
-    "rule_id int, family string, fields map<string,string>, "
-    + ", ".join(f"{c} {'bigint' if t == 'long' else t}" for c, t in PROMOTED_COLUMNS)
+# the stage's output schema, declared once; the Spark type derives from it
+PARSED_ARROW_SCHEMA = pa.schema(
+    [
+        ("doc_id", pa.string()),
+        ("source", pa.string()),
+        ("tokens", pa.list_(pa.int32())),
+        ("n_tok", pa.int32()),
+        ("level", pa.string()),
+        ("thread_name", pa.string()),
+        ("thread_id", pa.string()),
+        ("ts", pa.timestamp("us", tz="UTC")),
+        ("source_file", pa.string()),
+        ("source_line", pa.int32()),
+        ("message", pa.string()),
+        ("extra", pa.list_(pa.string())),
+        ("rule_id", pa.int32()),
+        ("family", pa.string()),
+        ("fields", pa.map_(pa.string(), pa.string())),
+    ]
+    + [(c, pa.int64()) for c, _ in PROMOTED_COLUMNS]
 )
+PARSED_SCHEMA = from_arrow_schema(PARSED_ARROW_SCHEMA)
 
 _THREAD = re.compile(r"^(.*?)(?::(\d+))?$", re.ASCII)  # "name[:id]"
 _INT32 = (-(1 << 31), 1 << 31)
@@ -166,29 +182,6 @@ def parse_texts(texts: Iterable[str], compiled: dict) -> dict:
             "promoted": promoted}
 
 
-def _arrow_output_schema(tz: str) -> pa.Schema:
-    return pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("source", pa.string()),
-            pa.field("tokens", pa.list_(pa.int32())),
-            pa.field("n_tok", pa.int32()),
-            pa.field("level", pa.string()),
-            pa.field("thread_name", pa.string()),
-            pa.field("thread_id", pa.string()),
-            pa.field("ts", pa.timestamp("us", tz=tz)),
-            pa.field("source_file", pa.string()),
-            pa.field("source_line", pa.int32()),
-            pa.field("message", pa.string()),
-            pa.field("extra", pa.list_(pa.string())),
-            pa.field("rule_id", pa.int32()),
-            pa.field("family", pa.string()),
-            pa.field("fields", pa.map_(pa.string(), pa.string())),
-        ]
-        + [pa.field(c, pa.int64()) for c, _ in PROMOTED_COLUMNS]
-    )
-
-
 def parse_batch_arrow(batch: pa.RecordBatch, compiled: dict, schema: pa.Schema) -> pa.RecordBatch:
     tokens = batch.column("tokens")
     cols = parse_texts(decode_tokens_arrow(tokens), compiled)
@@ -204,28 +197,25 @@ def parse_batch_arrow(batch: pa.RecordBatch, compiled: dict, schema: pa.Schema) 
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def parse_sequences(df: DataFrame, rules=None) -> DataFrame:
+@functools.cache
+def _compiled() -> dict:
+    """The shipped rulebook, compiled once per process."""
+    return compile_rulebook()
+
+
+def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        if batch.num_rows:
+            yield parse_batch_arrow(batch, _compiled(), PARSED_ARROW_SCHEMA)
+
+
+def parse_sequences(df: DataFrame) -> DataFrame:
     """sequences(doc_id, tokens, n_tok, source) -> parsed events DataFrame.
 
-    The compiled rule table ships via ``sparkContext.broadcast`` — one
-    serialized copy per executor, not per task.  At 274+ rules with
-    compiled regexes the per-task closure cost is O(tasks x rulebook)
-    and the broadcast is O(executors); on a 1000-executor cluster with
-    100k tasks per stage that is the difference between shipping the
-    rulebook 100k times and 1000 times.  (compile_rulebook emits plain
-    dicts of strings — regexes recompile worker-side, once each, behind
-    the module's cached ``_pat`` — so the broadcast value round-trips
-    cleanly.)
+    The stage depends on its batches alone: the ``mapInArrow`` function
+    is module-level, so the plan ships a reference to it, and each
+    Python worker compiles ``rulebook.RULES`` once (``_compiled``, 0.3 ms)
+    and recompiles each regex once behind the cached ``_pat``.  Nothing
+    is broadcast.
     """
-    compiled = compile_rulebook(rules)
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    out_schema = _arrow_output_schema(tz)
-    bc = df.sparkSession.sparkContext.broadcast(compiled)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rb = bc.value
-        for batch in batches:
-            if batch.num_rows:
-                yield parse_batch_arrow(batch, rb, out_schema)
-
-    return df.mapInArrow(fn, schema=PARSED_SCHEMA)
+    return df.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)

@@ -232,18 +232,21 @@ def minhash_dropped_buckets(
     )
 
 
-def _spread_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, _t) projection, repartitioned iff the input under-splits the
-    cluster.  The per-doc signature kernels (minhash UDF, simhash
-    explode+md5 map side) are the CPU-heavy stages of their operators:
-    never let them run at input-FILE parallelism.  A small corpus in one
-    parquet file would otherwise compute every signature in a single
-    task (measured at sf0.1: 15 s serial vs ~1 s spread over the cores)
-    — and a serial stage is also maximally exposed to single-core
-    noisy-neighbor slowdowns.  The repartition shuffles only the
-    (id, text) projection, and only when needed; a large input already
-    split into >= cores/2 tasks passes through untouched (no extra
-    Exchange at 100 TB, where inputs arrive in thousands of splits).
+def _spread(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """Projection of ``cols``, repartitioned iff the input under-splits
+    the cluster — the one under-split guard of the query layer.  The
+    per-doc kernels (minhash UDF, simhash explode+md5 map side, shingle
+    HOFs, GEMM batches, interpreted higher-order cosine) are the
+    CPU-heavy stages of their operators: never let them run at
+    input-FILE parallelism.  A small corpus in one parquet file would
+    otherwise compute every signature in a single task (measured at
+    sf0.1: 15 s serial vs ~1 s spread over the cores; at sf1.0
+    q_embed_neardup's whole 20k x 20k GEMM ran serially, ~27 s) — and a
+    serial stage is also maximally exposed to single-core noisy-neighbor
+    slowdowns.  The repartition shuffles only the projection, and only
+    when needed; a large input already split into >= cores/2 tasks
+    passes through untouched (no extra Exchange at 100 TB, where inputs
+    arrive in thousands of splits).
 
     The split-count probe (`.rdd.getNumPartitions()`) runs ONLY for
     DIRECT file-scan inputs: on a derived plan (anything downstream of
@@ -255,7 +258,7 @@ def _spread_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     files — ADVICE r4); `_is_direct_file_scan` inspects the optimized
     logical plan for wide/generating operators instead."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    narrow = df.select(*cols)
     if _is_direct_file_scan(df) and narrow.rdd.getNumPartitions() < max(2, par // 2):
         narrow = narrow.repartition(par)
     return narrow
@@ -309,7 +312,7 @@ def _minhash_banded(
 ) -> DataFrame:
     """(id, band, band_hash) — one row per document per band."""
     rows_per_band = num_hashes // bands
-    sig = _spread_text(df, id_col, text_col).select(
+    sig = _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t")).select(
         "id", minhash_signature_np("_t", num_hashes, shingle_n, seed).alias("sig"))
     return sig.select(
         "id",
@@ -376,7 +379,7 @@ def minhash_near_dups(
     # can grow without bound, and a shuffle join of (id, text) still
     # moves each text at most once — strictly fewer bytes than the old
     # all-docs shingle-array shuffle.
-    txt = _spread_text(df, id_col, text_col)
+    txt = _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
     melted = cand.select(
         F.struct(F.col("id_a"), F.col("id_b")).alias("pid"),
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("id"),
@@ -446,16 +449,14 @@ def ngram_jaccard_pairs(
     union) while the array path compares each row on its own, so
     duplicate ids give different pairs and scores on the two paths.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(
+    # _spread: never run the shingle HOF at input-FILE parallelism (a
+    # single-row-group parquet file = one serial task)
+    narrow = _spread(
+        df,
         F.col(id_col).alias("id"),
         (F.col(block_col) if block_col else F.lit(0)).alias("blk"),
         F.col(text_col).alias("_t"),
     )
-    # same guard as _spread_text: never run the shingle HOF at input-FILE
-    # parallelism (a single-row-group parquet file = one serial task)
-    if _is_direct_file_scan(df) and narrow.rdd.getNumPartitions() < max(2, par // 2):
-        narrow = narrow.repartition(par)
     sh = narrow.select(
         "id", "blk", word_shingles(F.col("_t"), shingle_n).alias("sh"),
     ).localCheckpoint()  # shingle HOF would otherwise run once per join side
@@ -679,7 +680,7 @@ def simhash_sql(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
     hv = F.conv(F.substring(F.md5(F.col("word")), 1, 15), 16, 10).cast("bigint")
     exploded = (
-        _spread_text(df, id_col, text_col)
+        _spread(df, F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         .select("id", F.explode(words).alias("word"))
         .withColumn("hv", hv)
     )
@@ -764,14 +765,6 @@ def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
 def embedding_near_dups(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -789,11 +782,13 @@ def embedding_near_dups(
     `round_to` rounds the cosine before thresholding (set it when
     comparing against an oracle that sums in a different order).
     """
+    from logparse_spark.operators.similarity import cosine, dot
+
     planes = lsh_planes(dim, n_planes, seed)
     # double math end-to-end: float32 sums drift from a DOUBLE[] oracle
-    # and from the float64 GEMM path.  _spread_text: the plane dots are
+    # and from the float64 GEMM path.  _spread: the plane dots are
     # per-row interpreted HOFs — never at input-file parallelism.
-    narrow = _spread_text(df, id_col, vec_col)
+    narrow = _spread(df, F.col(id_col).alias("id"), F.col(vec_col).alias("_t"))
     vec = F.col("_t").cast("array<double>")
     # one F.expr per plane, not one F.lit per scalar: per-literal py4j
     # round-trips are serial DRIVER time (~0.5 s for 12x64 here; see
@@ -806,7 +801,7 @@ def embedding_near_dups(
         for p in planes
     ]
     bits = [
-        F.when(_dot(vec, pc) >= 0, 1).otherwise(0) * (1 << i)
+        F.when(dot(vec, pc) >= 0, 1).otherwise(0) * (1 << i)
         for i, pc in enumerate(plane_cols)
     ]
     bucket = sum(bits[1:], bits[0]).alias("bucket")
@@ -815,7 +810,7 @@ def embedding_near_dups(
     # (executor-local: a lost executor fails the query, module docstring)
     v = narrow.select(F.col("id"), vec.alias("v"), bucket).localCheckpoint()
     a, b = v.alias("a"), v.alias("b")
-    cos = _dot(F.col("a.v"), F.col("b.v")) / (_norm(F.col("a.v")) * _norm(F.col("b.v")))
+    cos = cosine(F.col("a.v"), F.col("b.v"))
     if round_to is not None:
         cos = F.round(cos, round_to)
     return (

@@ -25,14 +25,12 @@ def rules_dim(spark: SparkSession) -> DataFrame:
     return local_frame(spark, rules_dim_rows(), RULES_DIM_SCHEMA)
 
 
-def enrich(parsed: DataFrame, nodes: DataFrame, rules: DataFrame | None = None) -> DataFrame:
+def enrich(parsed: DataFrame, nodes: DataFrame, rules: DataFrame) -> DataFrame:
     """parsed events x nodes dim x rule taxonomy -> enriched events.
 
     Left joins: rows NEVER drop here (unknown sources / rule_id=-1 keep
     flowing — the reference never drops an event).
     """
-    spark = parsed.sparkSession
-    rules = rules if rules is not None else rules_dim(spark)
     out = parsed.join(F.broadcast(nodes), "source", "left")
     out = out.join(
         F.broadcast(rules.select("rule_id", "event_product", "event_category", "event_type")),

@@ -20,25 +20,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Projection of `cols`, repartitioned iff the input under-splits the
-    cluster — the similarity twin of dedup._spread_text.  Every operator
-    here runs a CPU-heavy per-row kernel (GEMM batches, interpreted
-    higher-order cosine) directly over the corpus scan; a small corpus
-    in one parquet row group executes that kernel in ONE task (measured
-    at sf1.0: q_embed_neardup's whole 20k x 20k GEMM + threshold pass ran
-    serially, ~27 s).  The repartition shuffles only the projected
-    columns, and only when the input is a direct under-split file scan;
-    large inputs arriving in >= cores/2 splits pass through untouched
-    (no extra Exchange at 100 TB)."""
-    from logparse_spark.operators.dedup import _is_direct_file_scan
-
-    par = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(*cols)
-    if _is_direct_file_scan(df) and narrow.rdd.getNumPartitions() < max(2, par // 2):
-        narrow = narrow.repartition(par)
-    return narrow
+from logparse_spark.operators.dedup import _spread, embedding_near_dups
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -171,8 +153,6 @@ def all_pairs_cosine(
     n, d = int(row["n"] or 0), int(row["d"] or 0)
     if d and n * d <= max_broadcast_cells:
         return all_pairs_cosine_gemm(df, min_cosine, vec_col, id_col, round_to)
-    from logparse_spark.operators.dedup import embedding_near_dups
-
     return embedding_near_dups(
         df, vec_col=vec_col, id_col=id_col, dim=dim or d,
         n_planes=n_planes, min_cosine=min_cosine, seed=seed, round_to=round_to,

@@ -19,17 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logparse_spark.operators.route import read_sink
-from logparse_spark.rulebook import RULES, Rule
+from logparse_spark.rulebook import RULES
 
 _CONV_TYPE = {"int": "bigint", "comma_int": "bigint", "float": "double"}
 
 
-def family_field_types(family: str, rules: list[Rule] | None = None) -> dict[str, str]:
+def family_field_types(family: str) -> dict[str, str]:
     """Ordered {field: spark_type} union over the family's rules."""
     out: dict[str, str] = {}
     import re
 
-    for r in rules or RULES:
+    for r in RULES:
         if r.family != family:
             continue
         for g in re.compile(r.regex).groupindex:
@@ -39,11 +39,10 @@ def family_field_types(family: str, rules: list[Rule] | None = None) -> dict[str
     return out
 
 
-def typed_view(parsed: DataFrame, family: str,
-               rules: list[Rule] | None = None) -> DataFrame:
+def typed_view(parsed: DataFrame, family: str) -> DataFrame:
     """Promote `fields` map entries to typed columns for one family."""
     df = parsed.where(F.col("family") == family)
-    for fname, typ in family_field_types(family, rules).items():
+    for fname, typ in family_field_types(family).items():
         col = F.element_at(F.col("fields"), fname)
         df = df.withColumn(fname, col.cast(typ) if typ != "string" else col)
     return df.drop("fields")

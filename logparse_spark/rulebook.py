@@ -12,9 +12,10 @@ FIXTURES.md §2):
 - ``systemlog.py §capture_message`` becomes RULES, ordered
   first-match-wins within each class.
 
-At runtime the compiled table is broadcast and interpreted per Arrow
-batch inside one ``mapInArrow`` stage: each class's rules run in order
-over that class's still-unmatched rows (``re`` match) — see engine.py.
+At runtime each Python worker compiles the table once and interprets it
+per Arrow batch inside one ``mapInArrow`` stage: each class's rules run
+in order over that class's still-unmatched rows (``re`` match) — see
+engine.py.
 Captured values convert through :func:`convert`, the one conversion path
 of the engine and the oracle.  This module stays pure-Python /
 picklable: no Spark imports.
@@ -2067,7 +2068,8 @@ PROMOTED_COLUMNS: list[tuple[str, str]] = [
 
 
 def compile_rulebook(rules: list[Rule] | None = None) -> dict:
-    """Compile the declarative table into the picklable broadcast form.
+    """Compile the declarative table into plain dicts of strings (the
+    engine recompiles each regex once per worker).
 
     ``by_class`` preserves declaration order per class: the reference's
     `switch` dispatch (prune to the emitting class's rules) + ordered
@@ -2088,19 +2090,18 @@ def compile_rulebook(rules: list[Rule] | None = None) -> dict:
     return {"by_class": by_class, "headers": HEADER_FORMATS}
 
 
-def rules_dim_rows(rules: list[Rule] | None = None) -> list[tuple]:
-    """Rows for the broadcast `rules_dim` enrichment table (taxonomy join).
+def rules_dim_rows() -> list[tuple]:
+    """Rows for the `rules_dim` enrichment table (taxonomy join).
 
     Includes the unknown fallback (systemlog.py tail rule [R-M]): no rule
     matched -> still emitted, never dropped.
     """
-    rules = RULES if rules is None else rules
     rows = [
         (r.rule_id, i, r.source_class, r.family, r.regex,
          r.event_product, r.event_category, r.event_type)
-        for i, r in enumerate(rules)
+        for i, r in enumerate(RULES)
     ]
-    rows.append((UNKNOWN_RULE_ID, len(rules), "", UNKNOWN_FAMILY, "",
+    rows.append((UNKNOWN_RULE_ID, len(RULES), "", UNKNOWN_FAMILY, "",
                  "cassandra", "unknown", "unknown"))
     return rows
 

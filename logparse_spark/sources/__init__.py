@@ -1,2 +1,1 @@
-"""Sources: synthetic sequence datagen + table catalog (Parquet now,
-Iceberg behind a capability probe)."""
+"""Sources: synthetic sequence datagen and the raw-log fold."""

@@ -227,7 +227,7 @@ def test_spread_text_spreads_single_file_input(spark, tmp_path):
     ).coalesce(1).write.parquet(path)
     one = spark.read.parquet(path)
     assert one.rdd.getNumPartitions() == 1
-    spread = dd._spread_text(one, "doc_id", "text")
+    spread = dd._spread(one, "doc_id", "text")
     assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
@@ -243,7 +243,7 @@ def test_spread_text_skips_derived_plans(spark):
         .groupBy("doc_id").agg({"text": "max", "g": "max"})
         .withColumnRenamed("max(text)", "text")
     )
-    spread = dd._spread_text(derived, "doc_id", "text")
+    spread = dd._spread(derived, "doc_id", "text")
     plan = spread._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" not in plan
 
@@ -266,7 +266,7 @@ def test_spread_text_skips_parquet_backed_derived_plans(spark, tmp_path):
     assert derived.inputFiles()  # the old heuristic would have probed this
     assert not dd._is_direct_file_scan(derived)
     plan = (
-        dd._spread_text(derived, "doc_id", "text")
+        dd._spread(derived, "doc_id", "text")
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "Repartition" not in plan
@@ -304,16 +304,16 @@ def test_direct_scan_detection_rejects_rebalance_and_offset(spark, tmp_path):
 
 
 def test_spread_text_leaves_well_split_input_alone(spark):
-    # a well-split input keeps its plan — _spread_text adds no Exchange
+    # a well-split input keeps its plan — _spread adds no Exchange
     # of its own beyond whatever the input already contains
     par = spark.sparkContext.defaultParallelism
     many = spark.createDataFrame(
         [(f"d{i}", f"text {i}") for i in range(50)], "doc_id string, text string"
     ).repartition(par)
-    spread = dd._spread_text(many, "doc_id", "text")
+    spread = dd._spread(many, "doc_id", "text")
     assert spread.rdd.getNumPartitions() == par
     # logical plan (no AQE initial/final duplication): only the input's
-    # own Repartition node, none added by _spread_text
+    # own Repartition node, none added by _spread
     def n_repart(df):
         return df._jdf.queryExecution().optimizedPlan().toString().count("Repartition")
     assert n_repart(spread) == n_repart(many) == 1

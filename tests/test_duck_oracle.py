@@ -11,6 +11,7 @@ import pytest
 
 from logparse_spark.duck_oracle import (
     HEADER_SQL_REGEX,
+    _re2,
     capture_sql,
     family_case_sql,
     materialize_corpus,
@@ -108,47 +109,69 @@ def test_promoted_cast_is_null_where_the_engine_is_null(duck):
     assert got == [(11, d) for d in eng["promoted"]["duration_ms"]]
 
 
-def test_non_ascii_digits_miss_in_the_engine_as_in_the_sql_replica(duck):
-    """`\\d` and `\\w` are ASCII in all three implementations (`re.ASCII`
-    in the engine and the oracle, RE2 in the replica): a non-ASCII digit
-    in a shipped rule's `\\d` capture, or in the header's line number, is
-    the same rule_id and fields everywhere."""
-    gc = "GC for {t}: {d} ms for 1 collections, 43 used; max is 8000634880"
-    texts = [
-        HDR20.format(thread="T:1", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
-        HDR20.format(thread="T:2", cls="GCInspector", msg=gc.format(t="ParNew", d="24٣")),
-        HDR21.format(thread="T:3", cls="GCInspector", msg=gc.format(t="ParNew", d="２41")),
-        HDR21.format(thread="T:4", cls="GCInspector", msg=gc.format(t="ParNéw", d="241")),
-        HDR20.replace("(line 116)", "(line 4٣)").format(
-            thread="T:5", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
-    ]
-    eng = parse_texts(texts, compile_rulebook())
-    assert eng["rule_id"][0] == 1  # the ASCII control line is a hit
-    assert [parse_text(t)["rule_id"] for t in texts] == eng["rule_id"]
+def test_re2_spelling_refuses_a_space_class_inside_brackets():
+    assert _re2(r"^a\s+[^\]]\S$") == r"^a[\t\n\v\f\r ]+[^\]][^\t\n\v\f\r ]$"
+    for regex in (r"[\s,]", r"[^a\S]", r"[]\s]"):
+        with pytest.raises(ValueError):
+            _re2(regex)
 
-    rule = next(r for r in RULES if r.rule_id == 1)
-    groups = list(re.compile(rule.regex).groupindex)
-    duck.execute("CREATE OR REPLACE TABLE nonascii(i INT, text VARCHAR)")
-    duck.executemany("INSERT INTO nonascii VALUES (?, ?)", list(enumerate(texts)))
+
+def test_non_ascii_digits_miss_in_the_engine_as_in_the_sql_replica(duck):
+    """`\\d`, `\\w` and `\\s` are ASCII in all three implementations
+    (`re.ASCII` in the engine and the oracle, RE2 in the replica, whose
+    `\\s`/`\\S` are spelled out because RE2's `\\s` omits the vertical
+    tab): a non-ASCII digit in a shipped rule's `\\d` capture or in the
+    header's line number, and a `\\v` in a `\\s` run, in a `\\S`
+    capture or in the header, give the same rule_id and fields
+    everywhere."""
+    gc = "GC for {t}: {d} ms for 1 collections, 43 used; max is 8000634880"
+    cms = ("ParNew GC in 374ms.{sp}CMS Old Gen: 4265719304 -> 4460986184; "
+           "Par Eden Space: 671088640 -> 0")
+    cases = {  # rule_id -> texts, the first of which hits that rule
+        1: [
+            HDR20.format(thread="T:1", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
+            HDR20.format(thread="T:2", cls="GCInspector", msg=gc.format(t="ParNew", d="24٣")),
+            HDR21.format(thread="T:3", cls="GCInspector", msg=gc.format(t="ParNew", d="２41")),
+            HDR21.format(thread="T:4", cls="GCInspector", msg=gc.format(t="ParNéw", d="241")),
+            HDR20.replace("(line 116)", "(line 4٣)").format(
+                thread="T:5", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
+            HDR21.replace("WARN ", "WARN\v").format(
+                thread="T:6", cls="GCInspector", msg=gc.format(t="ParNew", d="241")),
+        ],
+        2: [HDR20.format(thread="T:7", cls="GCInspector", msg=cms.format(sp=sp))
+            for sp in ("  ", " \v")],
+        100: [HDR21.format(thread="T:8", cls="CommitLogReplayer", msg=f"Replaying {f}")
+              for f in ("a.log", "a\vb.log")],
+    }
     hdr = HEADER_SQL_REGEX.replace("'", "''")
-    got = duck.execute(f"""
-        WITH hdr AS (
-            SELECT i, regexp_matches(text, '{hdr}') AS hdr_ok,
-                   regexp_extract(text, '{hdr}', 2) AS cls,
-                   regexp_extract(text, '{hdr}', 3) AS msg
-            FROM nonascii
-        ), ruled AS (
-            SELECT i, msg, CASE WHEN hdr_ok THEN {rule_case_sql("msg", "cls")}
-                                ELSE -1 END AS rid
-            FROM hdr
-        )
-        SELECT rid, {", ".join(capture_sql(rule, g, "msg") for g in groups)}
-        FROM ruled ORDER BY i
-    """).fetchall()
-    sql_fields = [
-        {g: convert(rule.converters[g], v) if g in rule.converters else v
-         for g, v in zip(groups, caps)} if rid == 1 else {}
-        for rid, *caps in got
-    ]
-    assert [rid for rid, *_ in got] == eng["rule_id"]
-    assert sql_fields == eng["fields"]
+    for rule_id, texts in cases.items():
+        eng = parse_texts(texts, compile_rulebook())
+        assert eng["rule_id"][0] == rule_id  # the ASCII control line is a hit
+        assert [parse_text(t)["rule_id"] for t in texts] == eng["rule_id"]
+
+        rule = next(r for r in RULES if r.rule_id == rule_id)
+        groups = list(re.compile(rule.regex).groupindex)
+        duck.execute("CREATE OR REPLACE TABLE ascii_cases(i INT, text VARCHAR)")
+        duck.executemany("INSERT INTO ascii_cases VALUES (?, ?)", list(enumerate(texts)))
+        got = duck.execute(f"""
+            WITH hdr AS (
+                SELECT i, regexp_matches(text, '{hdr}') AS hdr_ok,
+                       regexp_extract(text, '{hdr}', 2) AS cls,
+                       regexp_extract(text, '{hdr}', 3) AS msg
+                FROM ascii_cases
+            ), ruled AS (
+                SELECT i, msg, CASE WHEN hdr_ok THEN {rule_case_sql("msg", "cls")}
+                                    ELSE -1 END AS rid
+                FROM hdr
+            )
+            SELECT rid, {", ".join(capture_sql(rule, g, "msg") for g in groups)}
+            FROM ruled ORDER BY i
+        """).fetchall()
+        sql_fields = [
+            {g: convert(rule.converters[g], v) if g in rule.converters else v
+             for g, v in zip(groups, caps)} if rid == rule_id else None
+            for rid, *caps in got
+        ]
+        assert [rid for rid, *_ in got] == eng["rule_id"], rule_id
+        assert sql_fields == [f if r == rule_id else None
+                              for r, f in zip(eng["rule_id"], eng["fields"])], rule_id

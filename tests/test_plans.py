@@ -1,10 +1,12 @@
 """Physical-plan discipline tests: the properties that make the
 pipeline survive a 100x scale-up, pinned as assertions."""
 
+from pyspark import SparkContext
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from logparse_spark import main
-from logparse_spark.engine import parse_sequences
+from logparse_spark.engine import PARSED_ARROW_SCHEMA, parse_batch_arrow, parse_sequences
 from logparse_spark.ledger import Ledger
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.plans import (
@@ -14,7 +16,7 @@ from logparse_spark.plans import (
     assert_pushed_filters,
     assert_wholestage_codegen,
 )
-from logparse_spark.rulebook import rules_dim_rows
+from logparse_spark.rulebook import compile_rulebook, rules_dim_rows
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim
 
 SF = "/root/testdata/sf0.001"
@@ -79,6 +81,24 @@ def test_resumed_run_builds_its_frontier_as_a_local_relation(spark, tmp_path, mo
     assert [df.columns for df in built] == [["source", "bucket"]]
     assert _optimized(built[0]).startswith("LocalRelation")
     assert len(routed) == 1 and "LogicalRDD" not in routed[0], routed
+
+
+def test_parse_stage_ships_no_broadcast(spark, monkeypatch):
+    """Only the batch crosses into the parse stage: each worker compiles
+    the rulebook itself, so building and running the stage broadcasts
+    nothing; the Spark schema it declares is the Arrow schema its kernel
+    builds."""
+    seq = generate_sequences(spark, 200)
+    calls = []
+    real = SparkContext.broadcast
+    monkeypatch.setattr(SparkContext, "broadcast",
+                        lambda sc, value: calls.append(value) or real(sc, value))
+    parsed = parse_sequences(seq)
+    assert parsed.count() == 200
+    assert calls == []
+    batch = seq.limit(20).toArrow().combine_chunks().to_batches()[0]
+    built = parse_batch_arrow(batch, compile_rulebook(), PARSED_ARROW_SCHEMA).schema
+    assert to_arrow_schema(parsed.schema) == built == PARSED_ARROW_SCHEMA
 
 
 def test_parse_stage_has_no_shuffle(spark):

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from logparse_spark.engine import _arrow_output_schema, parse_batch_arrow
+from logparse_spark.engine import PARSED_ARROW_SCHEMA, parse_batch_arrow
 from logparse_spark.oracle import parse_event, parse_text
 from logparse_spark.rulebook import (
     PROMOTED_COLUMNS,
@@ -28,7 +28,6 @@ from logparse_spark.sources.datagen import make_event
 from logparse_spark.tokenizer import decode, encode
 
 _COMPILED = compile_rulebook()
-_SCHEMA = _arrow_output_schema("UTC")
 _PROMOTES = {r.rule_id: r.promote for r in RULES}
 _SAME_COLS = ("level", "thread_name", "thread_id", "ts", "source_file", "message",
               "extra", "rule_id", "family", "fields", "tokens", "n_tok")
@@ -70,7 +69,7 @@ def _assert_engine_matches_oracle(texts: list[str]) -> None:
         "tokens": pa.array([r[2] for r in rows], type=pa.list_(pa.int32())),
         "n_tok": [len(r[2]) for r in rows],
     })
-    got = parse_batch_arrow(batch, _COMPILED, _SCHEMA).to_pylist()
+    got = parse_batch_arrow(batch, _COMPILED, PARSED_ARROW_SCHEMA).to_pylist()
     for (doc_id, source, tokens), g in zip(rows, got):
         g["fields"] = dict(g["fields"])
         if g["ts"] is not None:

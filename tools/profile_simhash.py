@@ -1,7 +1,7 @@
 """Stage decomposition of q_dedup_simhash (noop-isolated, warm).
 
 Legs:
-  A  _spread_text + explode words + md5/conv hv   -> noop
+  A  _spread + explode words + md5/conv hv   -> noop
   B  A + 60-counter bitsum groupBy(id)            -> noop
   C  B + sh reconstruction (simhash_sql output)   -> noop
   D  full simhash_near_dups (localCheckpoint + chunk self-join + verify)
@@ -38,7 +38,7 @@ def main() -> None:
         words = F.filter(
             F.split(F.lower(F.trim(F.col("_t"))), r"\s+"), lambda w: w != "")
         hv = F.conv(F.substring(F.md5(F.col("word")), 1, 15), 16, 10).cast("bigint")
-        return (dedup._spread_text(docs, "doc_id", "text")
+        return (dedup._spread(docs, F.col("doc_id").alias("id"), F.col("text").alias("_t"))
                 .select("id", F.explode(words).alias("word"))
                 .withColumn("hv", hv))
 
