@@ -1048,10 +1048,10 @@ def _promoted_oracle() -> str:
     from logparse_spark.rulebook import PROMOTED_COLUMNS
 
     proj = ",\n".join(
-        f"{promoted_case_sql(c)} AS {c}" for c, _ in PROMOTED_COLUMNS
+        f"{promoted_case_sql(c)} AS {c}" for c in PROMOTED_COLUMNS
     )
     sums = ",\n".join(
-        f'CAST(sum("{c}") AS BIGINT) AS sum_{c}' for c, _ in PROMOTED_COLUMNS
+        f'CAST(sum("{c}") AS BIGINT) AS sum_{c}' for c in PROMOTED_COLUMNS
     )
     return parsed_cte(5000, 42) + f"""
         SELECT family, count(*) AS cnt, {sums}

@@ -67,7 +67,7 @@ PARSED_ARROW_SCHEMA = pa.schema(
         ("family", pa.string()),
         ("fields", pa.map_(pa.string(), pa.string())),
     ]
-    + [(c, pa.int64()) for c, _ in PROMOTED_COLUMNS]
+    + [(c, pa.int64()) for c in PROMOTED_COLUMNS]
 )
 PARSED_SCHEMA = from_arrow_schema(PARSED_ARROW_SCHEMA)
 
@@ -155,7 +155,7 @@ def parse_texts(texts: Iterable[str], compiled: dict) -> dict:
     rule_id = [UNKNOWN_RULE_ID] * n
     family = [UNKNOWN_FAMILY] * n
     fields: list[dict] = [{} for _ in range(n)]
-    promoted = {c: [None] * n for c, _ in PROMOTED_COLUMNS}
+    promoted = {c: [None] * n for c in PROMOTED_COLUMNS}
     for cls, rows in rows_by_class.items():
         for rule in compiled["by_class"].get(cls, ()):
             pat = _pat(rule["regex"], re.ASCII)

@@ -4,7 +4,8 @@ A tiny append-only parquet log keyed by (source, bucket), one row per
 committed quantum with its row count.  On start, pending = the input's
 per-quantum row counts LEFT ANTI JOIN the latest committed count of each
 quantum, so a quantum whose input gained or lost rows since its commit
-runs again; after the sink write succeeds, one commit batch is appended.
+runs again; after the sink write succeeds, one commit batch is appended
+as one parquet file, written on the driver.
 Re-running a quantum is an idempotent overwrite at the sink level
 (dynamic partition overwrite replaces its one dir whole).  An edit that
 keeps a quantum's row count is not detected.
@@ -19,12 +20,15 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logparse_spark.session import local_frame
+from logparse_spark.session import arrow_table, local_frame, write_local
 
-LEDGER_SCHEMA = "source string, bucket int, status string, rows long, committed_at double, run_id string"
+# the commit's own columns are NOT NULL, as Spark's writer stored them
+LEDGER_SCHEMA = ("source string, bucket int, status string not null, rows long, "
+                 "committed_at double not null, run_id string not null")
 
 
 class Ledger:
@@ -33,8 +37,12 @@ class Ledger:
         self.path = path
 
     def _exists(self) -> bool:
+        """A committed file is in the ledger dir; dot- and underscore-
+        prefixed names (a crashed commit's temp file, ``_meta.json``) are
+        skipped, as Spark's and pyarrow's readers skip them."""
         return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for f in os.listdir(self.path)
         )
 
     def done(self) -> DataFrame:
@@ -57,13 +65,18 @@ class Ledger:
             F.broadcast(self.done()), ["source", "bucket", "rows"], "left_anti"
         ).select("source", "bucket")
 
-    def commit(self, partition_counts: DataFrame, run_id: str) -> None:
-        """Append done-markers (one row per partition) AFTER sinks landed."""
-        rows = (
-            partition_counts.select("source", "bucket", "rows")
-            .withColumn("status", F.lit("done"))
-            .withColumn("committed_at", F.lit(time.time()))
-            .withColumn("run_id", F.lit(run_id))
-            .select("source", "bucket", "status", "rows", "committed_at", "run_id")
-        )
-        rows.coalesce(1).write.mode("append").parquet(self.path)
+    def commit(self, partition_counts: DataFrame | pa.Table, run_id: str) -> None:
+        """Append done-markers, one row per (source, bucket, rows) of
+        ``partition_counts``, AFTER the sinks landed.
+
+        A commit has at most one row per quantum the run wrote (sources x
+        buckets), so it is collected (a DataFrame, with ``toArrow``) and
+        appended as one ``LEDGER_SCHEMA`` parquet file from the driver
+        (``session.write_local``): a crash before the file's rename
+        leaves only a dot-prefixed temp file, and its quanta pending."""
+        if isinstance(partition_counts, DataFrame):
+            partition_counts = partition_counts.select("source", "bucket", "rows").toArrow()
+        now = time.time()
+        cols = (partition_counts[c].to_pylist() for c in ("source", "bucket", "rows"))
+        rows = [(s, b, "done", n, now, run_id) for s, b, n in zip(*cols)]
+        write_local(arrow_table(rows, LEDGER_SCHEMA), self.path, append=True)

@@ -10,9 +10,12 @@ Local / sandbox:
     python -m logparse_spark.main --rows 200000 --out /tmp/lp_out --cores 32
 
 Driver-side logic is deliberately thin: build the plan declaratively,
-trigger ONE write action per output, and collect only the per-quantum
-manifest rows (at most sources x buckets) the run's counts are summed
-from.  No .collect() over data.
+run ONE distributed write (the sinks) and ONE distributed read-back
+aggregation of what it wrote (the metric grain), and collect only the
+driver-sized results derived from that grain: the three metric tables
+and the per-quantum manifest rows (at most sources x buckets).  Those,
+and the ledger commit, are written from Arrow on the driver
+(``session.write_local``).  No .collect() over data.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ import os
 import time
 import uuid
 
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from logparse_spark.engine import parse_sequences
@@ -112,13 +116,16 @@ def run_pipeline(
     """Run the full pipeline; returns the run's counts and timings.
 
     Every number the run reports derives from a column-pruned read-back
-    of the `(source, bucket)` sink dirs this run wrote: the metric
-    tables, and the per-quantum manifest rows, which are evaluated once
-    and feed the manifests, the ledger commit and the returned
-    `routed_rows` / `total_tokens` / `unknown_rows` sums.  A fresh
-    run's static overwrite truncated the tree, so that is the whole
-    tree; a resumed run's dynamic overwrite replaced exactly its
-    pending dirs, so it reads those.
+    of the `(source, bucket)` sink dirs this run wrote.  A fresh run's
+    static overwrite truncated the tree, so that is the whole tree; a
+    resumed run's dynamic overwrite replaced exactly its pending dirs,
+    so it reads those.  The read-back is aggregated once into the
+    metric grain, cached as one partition; the metric tables and the
+    per-quantum manifest rows are summed from it with no further
+    shuffle, and each is collected once with ``toArrow``.  The driver
+    writes the metric tables, the manifests and the ledger commit, and
+    sums the manifest rows for the returned `routed_rows` /
+    `total_tokens` / `unknown_rows`.
     """
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
@@ -171,23 +178,24 @@ def run_pipeline(
     metric_src = (spark.read.schema(narrow).option("basePath", sinks)
                   .parquet(*read_paths))
     t_metrics = time.time()
-    grain = grain_counts(metric_src).cache()
-    manifests = partition_manifests(metric_src, grain=grain).cache()
+    grain = grain_counts(metric_src).repartition(1).cache()
     try:
+        # plans over a materialized single-partition cache need no
+        # Exchange; planned before it is filled, they still shuffle
+        grain.count()
         write_metrics(metric_src, f"{out}/metrics", grain=grain)
-        save_manifests(manifests, f"{out}/manifests")
-        ledger.commit(manifests.select(
-            "source", "bucket", F.col("routed_rows").alias("rows")), run_id)
         # one row per quantum this run wrote (<= the pending set); an
         # empty run has none and sums to 0s
-        totals = manifests.select(*_TOTALS).collect()
+        manifests = partition_manifests(metric_src, grain=grain).toArrow()
     finally:
-        manifests.unpersist()
         grain.unpersist()
+    save_manifests(manifests, f"{out}/manifests")
+    ledger.commit(manifests.select(["source", "bucket", "routed_rows"])
+                  .rename_columns(["source", "bucket", "rows"]), run_id)
     metrics_sec = round(time.time() - t_metrics, 2)
 
     return {
-        **{k: sum(r[k] or 0 for r in totals) for k in _TOTALS},
+        **{k: pc.sum(manifests[k]).as_py() or 0 for k in _TOTALS},
         "wall_sec": time.time() - t0, "run_id": run_id,
         "route_sec": route_sec, "metrics_sec": metrics_sec,
     }

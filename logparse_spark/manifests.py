@@ -6,16 +6,21 @@ content checksum — enough to audit that every input row landed in
 exactly one sink and to diff two runs without re-reading the sinks.
 
 The manifest rows are also the run's global counters: ``run_pipeline``
-sums them for the counts it returns and commits them to the ledger, so
-every number a run reports comes from the read-back of what it wrote.
+collects them once (``toArrow``), writes them, commits them to the
+ledger and sums them for the counts it returns, so every number a run
+reports comes from the read-back of what it wrote.  There is at most one
+row per (source, bucket) quantum the run wrote — sources x buckets, ~50k
+at the 1024-bucket cap — so the driver writes them (``save_manifests``).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logparse_spark.operators.aggregate import grain_counts
+from logparse_spark.session import write_local
 
 
 def partition_manifests(parsed: DataFrame, grain: DataFrame | None = None) -> DataFrame:
@@ -46,13 +51,13 @@ def partition_manifests(parsed: DataFrame, grain: DataFrame | None = None) -> Da
     )
 
 
-def save_manifests(mf: DataFrame, path: str) -> None:
-    """Write partition_manifests rows as JSON lines: small (one row per
-    partition key), human-auditable."""
-    mf.select(F.to_json(F.struct(*mf.columns)).alias("manifest")).coalesce(1).write.mode(
-        "overwrite"
-    ).text(path)
+def save_manifests(mf: pa.Table, path: str) -> None:
+    """Write collected partition_manifests rows as one JSON-lines file,
+    sorted by (source, bucket), each line as Spark's
+    ``to_json(struct(*cols))`` spells it: small (one row per partition
+    key), human-auditable, diffable between runs."""
+    write_local(mf.sort_by([("source", "ascending"), ("bucket", "ascending")]), path, fmt="json")
 
 
 def write_manifests(parsed: DataFrame, path: str, grain: DataFrame | None = None) -> None:
-    save_manifests(partition_manifests(parsed, grain), path)
+    save_manifests(partition_manifests(parsed, grain).toArrow(), path)

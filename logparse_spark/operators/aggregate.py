@@ -1,17 +1,27 @@
 """P6 aggregate: per-sink counts that must equal the reference parser's
 outputs — rule-hit histograms and per-source/per-level rollups.
 
-All built-in hash aggregation: partial (map-side) + final after one
-shuffle, whole-stage codegen, AQE-coalesced.  At 100 TB the histogram
-grain (family x rule_id: ~dozens of groups) and the rollup grain
-(source x level: thousands) are both tiny outputs — the shuffle moves
-only partial aggregates, never rows.
+One distributed aggregation reads the routed data: ``grain_counts``,
+partial (map-side) + final hash aggregation after one shuffle, which
+moves only partial aggregates, never rows.  Everything else is summed
+from that grain.  At 100 TB the histogram (family x rule_id: ~dozens of
+groups) and the rollup (source x level: thousands) are tiny, so
+``write_metrics`` collects each with ``toArrow`` and writes it on the
+driver (``session.write_local``).  ``run_pipeline`` caches the grain as
+one partition, over which the histogram and the manifests plan with no
+Exchange.  The rollup keeps one, above its Expand (whose output
+partitioning is unknown): spelling it as a union of its three grouping
+sets avoids it but measured no faster over one partition (~95 vs ~90 ms
+a call, 3,000-row corpus, local[4]) and 2.4x slower over a
+multi-partition grain.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from logparse_spark.session import write_local
 
 
 def grain_counts(parsed: DataFrame) -> DataFrame:
@@ -64,11 +74,17 @@ def family_metrics(parsed: DataFrame) -> DataFrame:
 
 def write_metrics(parsed: DataFrame, metrics_path: str,
                   grain: DataFrame | None = None) -> None:
-    """Materialize the three aggregate tables under one metrics root.
+    """Write the three aggregate tables under one metrics root, each
+    collected once with ``toArrow`` and written as one parquet file on
+    the driver (``session.write_local``), replacing the previous one.
 
-    With `grain` supplied, histogram+rollup reuse the cached grain; only
+    The tables are driver-sized: the histogram has at most one row per
+    (family, rule_id), i.e. rules + 1; the rollup sources x levels +
+    sources + 1; family_metrics one row per family.  With `grain`
+    supplied, histogram+rollup reuse the cached grain; only
     family_metrics re-scans (column-pruned: it needs raw duration_ms for
-    the percentile sketch).  Outputs are driver-tiny -> coalesce(1)."""
-    rule_histogram(parsed, grain).coalesce(1).write.mode("overwrite").parquet(f"{metrics_path}/rule_histogram")
-    source_level_rollup(parsed, grain).coalesce(1).write.mode("overwrite").parquet(f"{metrics_path}/source_level_rollup")
-    family_metrics(parsed).coalesce(1).write.mode("overwrite").parquet(f"{metrics_path}/family_metrics")
+    the percentile sketch)."""
+    for name, table in (("rule_histogram", rule_histogram(parsed, grain)),
+                        ("source_level_rollup", source_level_rollup(parsed, grain)),
+                        ("family_metrics", family_metrics(parsed))):
+        write_local(table.toArrow(), f"{metrics_path}/{name}")

@@ -2058,13 +2058,10 @@ RULES: list[Rule] = [
 
 FAMILIES: list[str] = sorted({r.family for r in RULES} | {UNKNOWN_FAMILY})
 
-# Typed columns promoted out of the sparse `fields` map (queryable fast path).
-PROMOTED_COLUMNS: list[tuple[str, str]] = [
-    ("duration_ms", "long"),
-    ("bytes_in", "long"),
-    ("bytes_out", "long"),
-    ("count", "long"),
-]
+# Typed columns promoted out of the sparse `fields` map (queryable fast
+# path); each is int64 (`engine.PARSED_ARROW_SCHEMA`, BIGINT in the
+# DuckDB replica).
+PROMOTED_COLUMNS: tuple[str, ...] = ("duration_ms", "bytes_in", "bytes_out", "count")
 
 
 def compile_rulebook(rules: list[Rule] | None = None) -> dict:

@@ -53,7 +53,7 @@ def _expected(ev: dict) -> dict:
     its column type (naive ts as UTC, ints outside the type as null)."""
     exp = {k: ev[k] for k in _SAME_COLS}
     exp["source_line"] = _fits(ev["source_line"], 32)
-    for col, _ in PROMOTED_COLUMNS:
+    for col in PROMOTED_COLUMNS:
         exp[col] = None
     for name, col in _PROMOTES.get(ev["rule_id"], {}).items():
         if name in ev["fields"]:
