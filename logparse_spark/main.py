@@ -11,10 +11,12 @@ Local / sandbox:
 
 Driver-side logic is deliberately thin: build the plan declaratively,
 run ONE distributed write (the sinks) and ONE distributed read-back
-aggregation of what it wrote (the metric grain), and collect only the
-driver-sized results derived from that grain: the three metric tables
-and the per-quantum manifest rows (at most sources x buckets).  Those,
-and the ledger commit, are written from Arrow on the driver
+aggregation of what it wrote (the metric grain), collect that grain
+once, and derive the histogram, the rollup and the per-quantum manifest
+rows (at most sources x buckets) from it on the driver with pyarrow.
+The one other query over the read-back is ``family_metrics`` (its p99
+needs the raw durations).  The metric tables, the manifests and the
+ledger commit are written from Arrow on the driver
 (``session.write_local``).  No .collect() over data.
 """
 
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 
 from logparse_spark.engine import parse_sequences
 from logparse_spark.ledger import Ledger
-from logparse_spark.manifests import partition_manifests, save_manifests
+from logparse_spark.manifests import manifest_rows, save_manifests
 from logparse_spark.operators.aggregate import grain_counts, write_metrics
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.operators.route import _route_clustering, quantum_dir, route, with_bucket
@@ -119,13 +121,13 @@ def run_pipeline(
     of the `(source, bucket)` sink dirs this run wrote.  A fresh run's
     static overwrite truncated the tree, so that is the whole tree; a
     resumed run's dynamic overwrite replaced exactly its pending dirs,
-    so it reads those.  The read-back is aggregated once into the
-    metric grain, cached as one partition; the metric tables and the
-    per-quantum manifest rows are summed from it with no further
-    shuffle, and each is collected once with ``toArrow``.  The driver
-    writes the metric tables, the manifests and the ledger commit, and
-    sums the manifest rows for the returned `routed_rows` /
-    `total_tokens` / `unknown_rows`.
+    so it reads those.  Two Spark queries read it: the metric grain
+    (``grain_counts``), collected once with ``toArrow``, and
+    ``family_metrics``.  Nothing is cached.  The histogram, the rollup
+    and the per-quantum manifest rows are summed from the collected
+    grain with pyarrow.  The driver writes the metric tables, the
+    manifests and the ledger commit, and sums the manifest rows for the
+    returned `routed_rows` / `total_tokens` / `unknown_rows`.
     """
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
@@ -178,17 +180,11 @@ def run_pipeline(
     metric_src = (spark.read.schema(narrow).option("basePath", sinks)
                   .parquet(*read_paths))
     t_metrics = time.time()
-    grain = grain_counts(metric_src).repartition(1).cache()
-    try:
-        # plans over a materialized single-partition cache need no
-        # Exchange; planned before it is filled, they still shuffle
-        grain.count()
-        write_metrics(metric_src, f"{out}/metrics", grain=grain)
-        # one row per quantum this run wrote (<= the pending set); an
-        # empty run has none and sums to 0s
-        manifests = partition_manifests(metric_src, grain=grain).toArrow()
-    finally:
-        grain.unpersist()
+    grain = grain_counts(metric_src).toArrow()
+    write_metrics(metric_src, f"{out}/metrics", grain=grain)
+    # one row per quantum this run wrote (<= the pending set); an empty
+    # run has none and sums to 0s
+    manifests = manifest_rows(grain)
     save_manifests(manifests, f"{out}/manifests")
     ledger.commit(manifests.select(["source", "bucket", "routed_rows"])
                   .rename_columns(["source", "bucket", "rows"]), run_id)

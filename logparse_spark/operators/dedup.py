@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logparse_spark.session import local_frame
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -429,10 +431,11 @@ def ngram_jaccard_pairs(
     quadratic and refuses to pretend otherwise.
 
     Per-pair cost: when the runtime shingle vocabulary fits in
-    `max_mask_words` distinct values (counted per invocation, one tiny
-    aggregate job), each doc's shingle SET is packed into
-    ceil(V/64) bigint bitmask lanes and the pair check collapses to
-    bit_count(a&b) / bit_count(a|b) — O(V/64) machine ops in
+    `max_mask_words` distinct values (collected per invocation, at most
+    `max_mask_words` + 1 of them, one tiny aggregate job), each doc's
+    shingle SET is packed into ceil(V/64) bigint bitmask lanes and the
+    pair check collapses to bit_count(a&b) / bit_count(a|b) — O(V/64)
+    machine ops in
     whole-stage codegen instead of a per-pair array_intersect hash
     build (measured 75 s -> ~2 s on the sf0.1 documents corpus, whose
     31-word vocab makes every doc pair a candidate; prefix filtering
@@ -462,12 +465,13 @@ def ngram_jaccard_pairs(
     ).localCheckpoint()  # shingle HOF would otherwise run once per join side
     # (executor-local: a lost executor fails the query, module docstring)
     if threshold > 0:
-        vocab = sh.select(F.explode("sh").alias("w")).distinct()
-        # the gate stops counting at the cap: a large vocabulary is never
-        # counted in full just to be rejected
-        n_words = vocab.limit(max_mask_words + 1).count()
-        if 0 < n_words <= max_mask_words:
-            return _jaccard_pairs_masked(sh, vocab, n_words, threshold)
+        # one evaluation of the vocabulary, stopped at the cap: a large
+        # one is never collected in full just to be rejected, and a small
+        # one is the rank table's input
+        words = [r[0] for r in sh.select(F.explode("sh").alias("w")).distinct()
+                 .limit(max_mask_words + 1).collect()]
+        if 0 < len(words) <= max_mask_words:
+            return _jaccard_pairs_masked(sh, words, threshold)
     a, b = sh.alias("a"), sh.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
@@ -482,22 +486,22 @@ def ngram_jaccard_pairs(
     )
 
 
-def _jaccard_pairs_masked(sh: DataFrame, vocab: DataFrame, n_words: int,
+def _jaccard_pairs_masked(sh: DataFrame, words: list[str | None],
                           threshold: float) -> DataFrame:
     """Bitmask-lane jaccard: docs as ceil(V/64) bigint set masks.
 
-    Rank every distinct shingle (row_number over a deterministic global
-    order; the rank table is broadcast — V <= max_mask_words), bit_or
-    the per-doc postings into lane columns, then self-join per block
-    with popcount arithmetic.  Null shingles (null input text) rank
-    like any other value via a null-safe join, matching
-    array_intersect's null-element semantics.
+    Rank every distinct shingle of the collected vocabulary ``words``
+    (sorted on the driver, null first, then by code point, which is
+    Spark's UTF-8 byte order; the rank table is a broadcast
+    ``LocalRelation`` — V <= max_mask_words), bit_or the per-doc
+    postings into lane columns, then self-join per block with popcount
+    arithmetic.  Null shingles (null input text) rank like any other
+    value via a null-safe join, matching array_intersect's null-element
+    semantics.
     """
-    from pyspark.sql.window import Window
-
-    lanes = (n_words + 63) // 64
-    ranked = vocab.withColumn(
-        "r", F.row_number().over(Window.orderBy("w")) - 1)
+    lanes = (len(words) + 63) // 64
+    order = sorted(words, key=lambda w: (w is not None, w or ""))
+    ranked = local_frame(sh.sparkSession, list(zip(order, range(len(order)))), "w string, r int")
     post = sh.select("id", "blk", F.explode("sh").alias("w"))
     post = post.join(F.broadcast(ranked), on=post["w"].eqNullSafe(ranked["w"]))
     masks = post.groupBy("id", "blk").agg(*[

@@ -4,6 +4,7 @@ while writing them leaves behind."""
 
 import json
 import os
+import random
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -15,10 +16,11 @@ from pyspark.sql.types import StructType
 from logparse_spark.engine import parse_sequences
 from logparse_spark.ledger import LEDGER_SCHEMA, Ledger
 from logparse_spark.main import run_pipeline
-from logparse_spark.manifests import partition_manifests
+from logparse_spark.manifests import manifest_rows, partition_manifests
+from logparse_spark.operators.aggregate import grain_counts, rule_histogram, source_level_rollup
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.operators.route import with_bucket
-from logparse_spark.session import _json_lines
+from logparse_spark.session import _json_lines, arrow_table
 from logparse_spark.sources.datagen import generate_sequences, nodes_dim
 
 # the types Spark's writers gave these tables, nullability included
@@ -36,6 +38,48 @@ METRIC_SCHEMAS = {
 MANIFEST_KEYS = ["source", "bucket", "routed_rows", "total_tokens", "unknown_rows",
                  "rule_histogram", "checksum"]
 SOURCES = ["007", "a/b", "q:r", "naïve", 'say "hi"', "esc\x1bape", "back\\u001bslash"]
+
+
+GRAIN_SCHEMA = ("source string, bucket int, family string, rule_id int, level string, "
+                "cnt bigint not null, tok bigint, chk bigint")
+# a NULL level; rule_ids whose string order (-1, 10, 2) is not their
+# numeric order; quanta of unknown rows only; a quantum with no tokens
+ADVERSARIAL_GRAIN = [
+    ("007", 0, "gc", 2, "INFO", 3, 30, 111),
+    ("007", 0, "gc", 2, "WARN", 2, 20, 1234),
+    ("007", 0, "compaction", 10, "WARN", 1, 7, 222),
+    ("007", 0, "unknown", -1, None, 2, 5, 333),
+    ("007", 1, "gc", 2, "INFO", 4, 40, 444),
+    ("a/b", 0, "compaction", 10, "INFO", 5, 50, 555),
+    ("a/b", 0, "gc", 2, "INFO", 1, 11, 666),
+    ("a/b", 0, "unknown", -1, "INFO", 7, 70, 2**40),
+    ("naïve", 3, "unknown", -1, "ERROR", 2, 9, 777),
+    ("naïve", 3, "unknown", -1, None, 1, 1, 888),
+    ("esc\x1bape", 1, "flush", 2, None, 6, 60, 999),
+    ("esc\x1bape", 2, "flush", 10, "INFO", 1, None, 5),
+    ("esc\x1bape", 2, "flush", 10, "DEBUG", 3, None, 6),
+]
+
+# enough quanta, in shuffled order, that pyarrow's group_by returns its
+# groups out of (source, bucket) order
+WIDE_GRAIN = [(f"node-{s:03d}", b, "gc", r, lvl, 1 + s % 3, s, s * 31 + r)
+              for s in range(50) for b in (0, 1) for r in (-1, 2, 10, 939)[s % 3:]
+              for lvl in ("INFO", "WARN")]
+random.Random(7).shuffle(WIDE_GRAIN)
+
+
+def _spark_manifests(grain):
+    """The manifest rows as Spark SQL aggregates them from the grain."""
+    per_rule = grain.groupBy("source", "bucket", "rule_id").agg(
+        F.sum("cnt").alias("cnt"), F.sum("tok").alias("tok"), F.sum("chk").alias("chk"))
+    return per_rule.groupBy("source", "bucket").agg(
+        F.sum("cnt").alias("routed_rows"),
+        F.sum("tok").alias("total_tokens"),
+        F.sum(F.when(F.col("rule_id") == -1, F.col("cnt")).otherwise(0)).alias("unknown_rows"),
+        F.map_from_entries(F.array_sort(F.collect_list(
+            F.struct(F.col("rule_id").cast("string"), F.col("cnt"))))).alias("rule_histogram"),
+        F.sum("chk").alias("checksum"),
+    )
 
 
 def _with_sources(spark, n, sources):
@@ -61,6 +105,35 @@ def test_json_lines_are_spark_to_json(spark):
     assert [line.rstrip("\n") for line in _json_lines(df.toArrow())] == want
 
 
+def _rows(table):
+    return sorted(table.to_pylist(), key=repr)
+
+
+@pytest.mark.parametrize("rows", [ADVERSARIAL_GRAIN, WIDE_GRAIN, []],
+                         ids=["adversarial", "wide", "empty"])
+def test_driver_derivations_equal_spark_sql(spark, rows):
+    """The histogram, the rollup and the manifest rows summed from the
+    grain with pyarrow equal Spark SQL's groupBy / rollup /
+    map_from_entries(array_sort(collect_list(...))) over the same grain:
+    rows (map entries in order) and Arrow schemas."""
+    grain = arrow_table(rows, GRAIN_SCHEMA)
+    df = spark.createDataFrame(grain, GRAIN_SCHEMA)
+    hist = df.groupBy("family", "rule_id").agg(F.sum("cnt").alias("cnt")).toArrow()
+    rollup = df.rollup("source", "level").agg(F.sum("cnt").alias("cnt")).toArrow()
+    mf = _spark_manifests(df).toArrow()
+    for got, want in ((rule_histogram(grain), hist), (source_level_rollup(grain), rollup),
+                      (manifest_rows(grain), mf)):
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+    got = manifest_rows(grain)
+    assert got.select(["source", "bucket"]).to_pylist() == sorted(
+        got.select(["source", "bucket"]).to_pylist(), key=lambda r: (r["source"], r["bucket"]))
+    # the DataFrame call shape: the same rows, planned from local data
+    frame = partition_manifests(df, grain=df)
+    assert frame._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+    assert frame.toArrow() == got
+
+
 def test_outputs_keep_their_format_and_read_back(spark, tmp_path):
     seq = _with_sources(spark, 600, SOURCES)
     out = str(tmp_path / "out")
@@ -78,9 +151,10 @@ def test_outputs_keep_their_format_and_read_back(spark, tmp_path):
     assert ledger.schema.field("bucket").type == pa.int32()
     assert spark.read.parquet(f"{out}/ledger").count() == ledger.num_rows
 
-    # the manifests: Spark's to_json of each row, sorted by (source, bucket)
+    # the manifests: Spark's to_json of each row as Spark SQL aggregates
+    # it, sorted by (source, bucket)
     direct = with_bucket(enrich(parse_sequences(seq), nodes_dim(spark), rules_dim(spark)), 2)
-    mf = partition_manifests(direct).orderBy("source", "bucket")
+    mf = _spark_manifests(grain_counts(direct)).orderBy("source", "bucket")
     want = [r[0] for r in mf.select(F.to_json(F.struct(*mf.columns))).collect()]
     [name] = _visible(f"{out}/manifests")
     with open(f"{out}/manifests/{name}", encoding="utf-8") as f:

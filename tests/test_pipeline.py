@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logparse_spark.main import run_pipeline
-from logparse_spark.operators.aggregate import rule_histogram, source_level_rollup
+from logparse_spark.operators.aggregate import grain_counts, rule_histogram, source_level_rollup
 from logparse_spark.operators.route import read_sink
 from logparse_spark.oracle import parse_event
 from logparse_spark.sources.datagen import generate_pdf, generate_sequences
@@ -97,7 +97,8 @@ def test_token_equality_every_routed_row(spark, pipeline_out, oracle_events):
 def test_rule_histogram_equals_oracle(spark, pipeline_out, oracle_events):
     out, _ = pipeline_out
     routed = read_sink(spark, f"{out}/sinks")
-    got = {(r["family"], r["rule_id"]): r["cnt"] for r in rule_histogram(routed).collect()}
+    hist = rule_histogram(grain_counts(routed).toArrow()).to_pylist()
+    got = {(r["family"], r["rule_id"]): r["cnt"] for r in hist}
     want = Counter((e["family"], e["rule_id"]) for e in oracle_events)
     assert got == dict(want)
 
@@ -105,7 +106,8 @@ def test_rule_histogram_equals_oracle(spark, pipeline_out, oracle_events):
 def test_source_level_rollup_equals_oracle(spark, pipeline_out, oracle_events):
     out, _ = pipeline_out
     routed = read_sink(spark, f"{out}/sinks")
-    got = {(r["source"], r["level"]): r["cnt"] for r in source_level_rollup(routed).collect()}
+    rollup = source_level_rollup(grain_counts(routed).toArrow()).to_pylist()
+    got = {(r["source"], r["level"]): r["cnt"] for r in rollup}
     want = Counter()
     for e in oracle_events:
         want[(e["source"], e["level"])] += 1

@@ -8,8 +8,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from logparse_spark import main
 from logparse_spark.engine import PARSED_ARROW_SCHEMA, parse_batch_arrow, parse_sequences
 from logparse_spark.ledger import Ledger
-from logparse_spark.manifests import partition_manifests
-from logparse_spark.operators.aggregate import rule_histogram, source_level_rollup
+from logparse_spark.operators import aggregate
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.plans import (
     assert_broadcast_join,
@@ -85,44 +84,41 @@ def test_resumed_run_builds_its_frontier_as_a_local_relation(spark, tmp_path, mo
     assert len(routed) == 1 and "LogicalRDD" not in routed[0], routed
 
 
-def _own_operators(df) -> str:
-    """The executed plan without the subtrees of cached relations: a
-    cache's plan runs once, when the cache is filled."""
-    keep, cached_at = [], None
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
-        indent = len(line) - len(line.lstrip(" +-:"))
-        if cached_at is not None and indent > cached_at:
-            continue
-        cached_at = indent if "InMemoryRelation" in line else None
-        if cached_at is None:
-            keep.append(line)
-    return "\n".join(keep)
+def test_metric_pass_is_two_queries_over_the_read_back_and_caches_nothing(spark, tmp_path, monkeypatch):
+    """The metric pass runs two Spark queries over the read-back, the
+    grain and family_metrics, each collected once with toArrow; the
+    histogram, the rollup and the manifests are summed from the
+    collected grain on the driver.  Nothing is cached."""
+    built, calls = {}, []
 
+    def spy_build(module, name):
+        real = getattr(module, name)
 
-def test_metric_pass_over_the_one_partition_grain_shuffles_only_the_rollup(spark, tmp_path, monkeypatch):
-    """The run's one read-back aggregation is the grain, cached as one
-    partition: the histogram and the manifests summed from it shuffle
-    nothing, and the rollup shuffles only above its Expand."""
-    seen = []
-    real = main.write_metrics
+        def build(*args, **kwargs):
+            built[name] = real(*args, **kwargs)
+            return built[name]
+        monkeypatch.setattr(module, name, build)
 
-    def spy(parsed, path, grain=None):
-        seen.append((grain.rdd.getNumPartitions(), {
-            f.__name__: _own_operators(f(parsed, grain=grain))
-            for f in (rule_histogram, source_level_rollup, partition_manifests)}))
-        return real(parsed, path, grain=grain)
+    def spy_call(cls, name):
+        real = getattr(cls, name)
+        monkeypatch.setattr(cls, name, lambda df, *a, **kw: calls.append((name, df)) or real(df, *a, **kw))
 
-    monkeypatch.setattr(main, "write_metrics", spy)
     seq = _parquet_input(spark, str(tmp_path / "seq"), n=300)
-    main.run_pipeline(spark, seq, str(tmp_path / "out"), n_buckets=2, resume=False)
-    [(partitions, plans)] = seen
-    assert partitions == 1
-    assert all("InMemoryTableScan" in plan for plan in plans.values()), plans
-    assert "Exchange" not in plans["rule_histogram"], plans["rule_histogram"]
-    assert "Exchange" not in plans["partition_manifests"], plans["partition_manifests"]
-    rollup = plans["source_level_rollup"].splitlines()
-    [exchange] = [i for i, line in enumerate(rollup) if "Exchange" in line]
-    assert any("Expand" in line for line in rollup[exchange:]), rollup
+    persisted = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    spy_build(main, "grain_counts")
+    spy_build(aggregate, "family_metrics")
+    for name in ("toArrow", "collect", "count", "toPandas", "cache", "persist"):
+        spy_call(type(seq), name)
+    out = str(tmp_path / "out")
+    m = main.run_pipeline(spark, seq, out, n_buckets=2, resume=False)
+    assert m["routed_rows"] == 300
+    assert [name for name, _ in calls] == ["toArrow", "toArrow"], calls
+    assert calls[0][1] is built["grain_counts"] and calls[1][1] is built["family_metrics"]
+    for df in built.values():
+        files = df.inputFiles()
+        assert files and all(f.startswith(f"file://{out}/sinks/") for f in files), files
+        assert "InMemoryRelation" not in df._jdf.queryExecution().executedPlan().toString()
+    assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) <= persisted
 
 
 def test_parse_stage_ships_no_broadcast(spark, monkeypatch):

@@ -1,9 +1,10 @@
 """P10 packaging: build dist/logparse_spark.zip for
 ``spark-submit --py-files dist/logparse_spark.zip logparse_spark/main.py ...``.
 
-The package is pure-Python, driver-state-free, with all task-side state
-travelling via closures/broadcasts — so the zip is the whole deploy
-artifact.
+The package is pure-Python and driver-state-free: a task pickles its
+function by reference to a package module, and each Python worker
+compiles the rulebook from the package itself — so the zip is the
+whole deploy artifact.
 """
 
 from __future__ import annotations
