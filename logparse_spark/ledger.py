@@ -7,7 +7,7 @@ quantum, so a quantum whose input gained or lost rows since its commit
 runs again; after the sink write succeeds, one commit batch is appended
 as one parquet file, written on the driver.
 Re-running a quantum is an idempotent overwrite at the sink level
-(dynamic partition overwrite replaces its one dir whole).  An edit that
+(a resumed ``route`` replaces every file of its one dir).  An edit that
 keeps a quantum's row count is not detected.
 
 Scale: at 10^12 rows with (50 sources x 1024 buckets) the ledger is

@@ -120,10 +120,10 @@ def run_pipeline(
     Every number the run reports derives from a column-pruned read-back
     of the `(source, bucket)` sink dirs this run wrote.  A fresh run's
     static overwrite truncated the tree, so that is the whole tree; a
-    resumed run's dynamic overwrite replaced exactly its pending dirs,
-    so it reads those.  Two Spark queries read it: the metric grain
-    (``grain_counts``), collected once with ``toArrow``, and
-    ``family_metrics``.  Nothing is cached.  The histogram, the rollup
+    resumed run's dynamic write replaced the files of exactly its
+    pending dirs, so it reads those.  Two Spark queries read it: the
+    metric grain (``grain_counts``), collected once with ``toArrow``,
+    and ``family_metrics``.  Nothing is cached.  The histogram, the rollup
     and the per-quantum manifest rows are summed from the collected
     grain with pyarrow.  The driver writes the metric tables, the
     manifests and the ledger commit, and sums the manifest rows for the
@@ -164,8 +164,8 @@ def run_pipeline(
     write_salt, cluster_mode = _route_clustering(scan_bytes)
 
     t_route = time.time()
-    # fresh full runs (resume off) take the cheaper static-overwrite
-    # commit; resumed runs need dynamic for partial idempotent rewrite
+    # fresh full runs (resume off) truncate the tree with one static
+    # overwrite; resumed runs replace only their pending quanta's files
     route(enriched, sinks, n_buckets=n_buckets,
           cluster=cluster_mode, write_salt=write_salt,
           overwrite_mode="dynamic" if resume else "static")  # the one big action

@@ -9,15 +9,16 @@ Design: ONE single-pass write partitioned by the resume quantum
 each file.  A family sink is a ``family = x`` filter that parquet
 row-group statistics prune, so the fan-out costs one file per
 ``(source, bucket)`` dir rather than one per ``(family, source,
-bucket)`` dir.  The unit of dynamic partition overwrite is then the
-ledger's resume quantum: re-running a pending ``(source, bucket)``
-replaces its one dir whole, so a row whose family changed between runs
-leaves no stale copy behind -> idempotent resume (P9).
+bucket)`` dir.  The unit a resumed write replaces is then the ledger's
+resume quantum: re-running a pending ``(source, bucket)`` replaces every
+file of its one dir, so a row whose family changed between runs leaves
+no stale copy behind -> idempotent resume (P9).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,21 +43,67 @@ def quantum_dir(sinks_path: str, source: str, bucket: int) -> str:
     return f"{sinks_path}/source={_escape(source)}/bucket={bucket}"
 
 
-def _check_sink_layout(sinks_path: str, overwrite_mode: str) -> None:
+def _local_path(spark: SparkSession, sinks_path: str) -> str:
+    """The local directory ``sinks_path`` names: itself when it has no
+    scheme and ``fs.defaultFS`` is ``file:``, or the path of a ``file:``
+    URI without an authority (``file:/p``, ``file:///p``).  A resumed
+    write swaps its files in with ``os`` calls, like every other
+    driver-side writer, so any other file system raises ValueError.  As
+    in Hadoop's ``Path``, a scheme is the text before a colon that comes
+    before the first slash."""
+    colon, slash = sinks_path.find(":"), sinks_path.find("/")
+    if colon == -1 or -1 < slash < colon:
+        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
+            "fs.defaultFS", "file:///")
+        if default_fs.startswith("file:"):
+            return sinks_path
+    elif sinks_path.startswith("file:///"):
+        return sinks_path[len("file://"):]
+    elif sinks_path.startswith("file:/") and not sinks_path.startswith("file://"):
+        return sinks_path[len("file:"):]
+    raise ValueError(
+        f"{sinks_path} is not on the local file system; a resumed "
+        "(dynamic) sink write replaces quantum files with local renames")
+
+
+def _check_sink_layout(sinks_dir: str) -> None:
     """Refuse a dynamic overwrite into a tree laid out by the old
     ``(family, source, bucket)`` partitioning: the rewritten
     ``(source, bucket)`` dirs would sit beside ``family=*`` dirs still
     holding the same rows, so every resumed row would read back twice.
     A static write truncates the tree, so it may replace any layout."""
-    if overwrite_mode != "dynamic" or not os.path.isdir(sinks_path):
-        return
-    if any(d.startswith("family=") for d in os.listdir(sinks_path)):
+    if os.path.isdir(sinks_dir) and any(
+            d.startswith("family=") for d in os.listdir(sinks_dir)):
         raise ValueError(
-            f"{sinks_path} holds family=* partition dirs from the old "
+            f"{sinks_dir} holds family=* partition dirs from the old "
             "(family, source, bucket) sink layout; a dynamic overwrite would "
             "duplicate every rewritten row - rerun fresh (resume=False) or "
             "write to a new output dir"
         )
+
+
+def _swap_in(staging: str, sinks_dir: str) -> None:
+    """Move each staged ``source=*/bucket=*`` dir's files into the sink
+    tree, then remove ``staging``.  A quantum dir that exists keeps its
+    inode: its entries are unlinked and the staged ones renamed in, so
+    no old file survives.  A new quantum's staged dir is renamed into
+    place.  On a discard-mounted file system, freeing a dir whose blocks
+    are on disk costs tens of ms, so the dirs stay."""
+    for source in os.listdir(staging):
+        if not source.startswith("source="):
+            continue  # the write's _SUCCESS marker and its .crc
+        for bucket in os.listdir(os.path.join(staging, source)):
+            new = os.path.join(staging, source, bucket)
+            dest = os.path.join(sinks_dir, source, bucket)
+            if os.path.isdir(dest):
+                for name in os.listdir(dest):
+                    os.remove(os.path.join(dest, name))
+                for name in os.listdir(new):
+                    os.rename(os.path.join(new, name), os.path.join(dest, name))
+            else:
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(new, dest)
+    shutil.rmtree(staging)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -123,17 +170,32 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     when the whole input fits in a handful of advisory chunks.
     `write_salt` is ignored in rebalance mode.
 
-    `overwrite_mode` is passed as this write's `partitionOverwriteMode`
-    option; the session conf is left alone.  "dynamic" (default) is what
-    makes PARTIAL reruns idempotent — re-writing a pending (source,
-    bucket) subset replaces exactly those dirs (P9 resume).  A FRESH
-    full run should pass "static": dynamic's commit stages every
-    partition dir and the driver moves them one by one, which static
-    (truncate once, normal committer) does not pay.  Callers that resume
-    keep dynamic.  A dynamic write into a tree of the old (family,
-    source, bucket) layout raises ValueError.
+    `overwrite_mode` says what the write replaces.  "static" (fresh full
+    runs) truncates the whole tree, as one Spark static overwrite.
+    "dynamic" (default; resumed runs) replaces exactly the (source,
+    bucket) dirs the rows fall in, which makes PARTIAL reruns idempotent
+    (P9 resume): the rows are written as a static write into the sibling
+    dir ``<sinks_path>__staging`` (which truncates a stale one a crashed
+    run left), then the driver swaps each staged dir's files in
+    (:func:`_swap_in`).  A crash during the write leaves the sinks
+    untouched; a crash mid-swap leaves a quantum empty, and its ledger
+    row uncommitted, until the next resume.  Spark's dynamic partition
+    overwrite is not used: it deletes each replaced dir and renames a
+    staged one into its place, and on a discard-mounted file system
+    freeing the old dir's blocks costs tens of ms per quantum.  Both
+    modes pass ``partitionOverwriteMode=static`` as a per-write option;
+    the session conf is left alone.  A dynamic write needs `sinks_path`
+    on the local file system (:func:`_local_path`) and raises ValueError
+    into a tree of the old (family, source, bucket) layout, both before
+    any Spark job.
     """
-    _check_sink_layout(sinks_path, overwrite_mode)
+    if overwrite_mode not in ("static", "dynamic"):
+        raise ValueError(f"overwrite_mode must be 'static' or 'dynamic', not {overwrite_mode!r}")
+    target = sinks_path
+    if overwrite_mode == "dynamic":
+        sinks_dir = _local_path(df.sparkSession, sinks_path)
+        _check_sink_layout(sinks_dir)
+        target = sinks_path.rstrip("/") + "__staging"
     if "bucket" not in df.columns:
         df = with_bucket(df, n_buckets)
     if cluster == "rebalance":
@@ -154,9 +216,11 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     # ordering, so the plan holds one local sort, not two
     (df.sortWithinPartitions(*SINK_PARTITIONS, "family")
      .write.mode("overwrite")
-     .option("partitionOverwriteMode", overwrite_mode)
+     .option("partitionOverwriteMode", "static")
      .partitionBy(*SINK_PARTITIONS)
-     .parquet(sinks_path))
+     .parquet(target))
+    if overwrite_mode == "dynamic":
+        _swap_in(sinks_dir.rstrip("/") + "__staging", sinks_dir)
 
 
 def _data_files(sinks_path: str) -> list[str]:
@@ -190,8 +254,6 @@ def compact_sinks(spark: SparkSession, sinks_path: str) -> dict:
 
     Returns {files_before, files_after, rows}.
     """
-    import shutil
-
     files = _data_files(sinks_path)
     write_salt, cluster = _route_clustering(sum(map(os.path.getsize, files)))
     df = read_sink(spark, sinks_path)

@@ -4,6 +4,7 @@ uninterrupted run; re-running a completed pipeline is a no-op."""
 import json
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -192,19 +193,44 @@ def _route_rows(spark, rows):
         rows, "doc_id string, source string, family string, tokens array<int>")
 
 
+def _inodes(root):
+    """relative path -> inode of every file and dir under ``root``."""
+    out = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(d, name)
+            out[os.path.relpath(path, root)] = os.stat(path).st_ino
+    return out
+
+
 def test_dynamic_rewrite_replaces_quantum_after_family_change(spark, tmp_path):
-    """A resumed (source, bucket) replaces its one sink dir whole: a row
-    whose family changed between runs is read back exactly once, with
-    its new family, and other quanta are untouched."""
+    """A resumed (source, bucket) replaces every file of its one sink
+    dir: a row whose family changed between runs is read back exactly
+    once, with its new family.  The dir itself stays (same inode) and
+    holds only the new write's data and .crc files; other quanta keep
+    their files' inodes, and no staging dir is left beside the sinks."""
     sinks = str(tmp_path / "sinks")
-    rows = [("d1", "s1", "gc", [1]), ("d2", "s1", "flush", [2]), ("d3", "s2", "gc", [3])]
+    rows = [("d1", "s1", "gc", [1]), ("d2", "s1", "flush", [2]),
+            ("d3", "s2", "gc", [3]), ("d4", "s3", "flush", [4])]
     route(_route_rows(spark, rows), sinks, n_buckets=1, overwrite_mode="static")
-    redo = [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2])]
-    route(_route_rows(spark, redo), sinks, n_buckets=1, overwrite_mode="dynamic")
+    before = _inodes(sinks)
+    redo = os.path.relpath(quantum_dir(sinks, "s1", 0), sinks)
+    old_files = set(os.listdir(os.path.join(sinks, redo)))
+    redo_rows = [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2])]
+    route(_route_rows(spark, redo_rows), sinks, n_buckets=1, overwrite_mode="dynamic")
+
+    after = _inodes(sinks)
+    assert after[redo] == before[redo]
+    new_files = set(os.listdir(os.path.join(sinks, redo)))
+    data = {f for f in new_files if f.endswith(".parquet")}
+    assert data and new_files == data | {f".{f}.crc" for f in data}
+    assert not new_files & old_files
+    untouched = {p: i for p, i in before.items() if not p.startswith(redo)}
+    assert {p: after[p] for p in untouched} == untouched
+    assert os.listdir(tmp_path) == ["sinks"]
     got = sorted(map(tuple, read_sink(spark, sinks).select(
         "doc_id", "source", "family", "tokens").collect()))
-    assert got == [("d1", "s1", "compaction", [1]), ("d2", "s1", "flush", [2]),
-                   ("d3", "s2", "gc", [3])]
+    assert got == sorted(redo_rows + rows[2:])
     assert [r["doc_id"] for r in read_sink(spark, sinks, "gc").collect()] == ["d3"]
 
 
@@ -225,15 +251,82 @@ def test_quantum_dir_names_the_dir_route_writes(spark, tmp_path):
 def test_dynamic_write_refuses_family_partitioned_tree(spark, tmp_path):
     """A tree laid out by (family, source, bucket) must not take a
     dynamic (resume) overwrite — its family=* dirs would keep a second
-    copy of every rewritten row; a static (fresh) write replaces it."""
+    copy of every rewritten row — whether named by a path or a file:
+    URI; a static (fresh) write replaces it."""
     sinks = str(tmp_path / "old_layout")
     df = with_bucket(_route_rows(spark, [("d1", "s1", "gc", [1]), ("d2", "s2", "flush", [2])]), 1)
     df.write.partitionBy("family", "source", "bucket").parquet(sinks)
-    with pytest.raises(ValueError, match=re.escape(sinks)):
-        route(df, sinks, n_buckets=1, overwrite_mode="dynamic")
+    for path in (sinks, f"file://{sinks}", f"file:{sinks}"):
+        with pytest.raises(ValueError, match=re.escape(sinks)):
+            route(df, path, n_buckets=1, overwrite_mode="dynamic")
+    assert os.listdir(tmp_path) == ["old_layout"]
     route(df, sinks, n_buckets=1, overwrite_mode="static")
     assert not any(d.startswith("family=") for d in os.listdir(sinks))
     assert sorted(r["doc_id"] for r in read_sink(spark, sinks).collect()) == ["d1", "d2"]
+
+
+def test_dynamic_write_refuses_a_non_local_path(spark, tmp_path):
+    """A resumed write swaps files in with local renames, so a path on
+    another file system raises ValueError before any Spark job: a
+    non-file scheme, or a bare path while fs.defaultFS is not file:."""
+    df = _route_rows(spark, [("d1", "s1", "gc", [1])])
+    sc = spark.sparkContext
+    sc.setJobGroup("route-non-local", "route-non-local")
+    try:
+        with pytest.raises(ValueError, match=re.escape("s3a://b/x")):
+            route(df, "s3a://b/x", n_buckets=1, overwrite_mode="dynamic")
+        spark.conf.set("fs.defaultFS", "s3a://b")
+        try:
+            with pytest.raises(ValueError, match=re.escape(str(tmp_path / "sinks"))):
+                route(df, str(tmp_path / "sinks"), n_buckets=1, overwrite_mode="dynamic")
+        finally:
+            spark.conf.unset("fs.defaultFS")
+        assert list(sc.statusTracker().getJobIdsForGroup("route-non-local")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert os.listdir(tmp_path) == []
+
+
+def test_failed_resume_write_leaves_sinks_and_next_resume_recovers(spark, tmp_path, monkeypatch):
+    """Crash mid sink write: a resumed run whose write job fails on one
+    row raises and leaves every sink file in place; the next resume,
+    over a stale staging dir, equals an uninterrupted run."""
+    import logparse_spark.main as mainmod
+
+    seq = generate_sequences(spark, 600, partitions=2)
+    full, out = str(tmp_path / "full"), str(tmp_path / "out")
+    run_pipeline(spark, seq, full, n_buckets=2)
+    _run_crashing_after(monkeypatch, 3, spark, seq, out)
+    sinks = f"{out}/sinks"
+    pending = Ledger(spark, f"{out}/ledger").pending(with_bucket(seq, 2))
+    victim = with_bucket(seq, 2).join(pending, ["source", "bucket"], "left_semi").first()["doc_id"]
+
+    real_route = mainmod.route
+
+    def failing_route(df, sinks_path, **kw):
+        bad = F.when(F.col("doc_id") == victim, F.raise_error(F.lit("injected sink-write failure")))
+        return real_route(df.withColumn("family", bad.otherwise(F.col("family"))), sinks_path, **kw)
+
+    before = _inodes(sinks)
+    ledger_before = _ledger_rows(spark, out)
+    with monkeypatch.context() as m:
+        m.setattr(mainmod, "route", failing_route)
+        with pytest.raises(Exception, match="injected sink-write failure"):
+            run_pipeline(spark, seq, out, n_buckets=2)
+    assert _inodes(sinks) == before
+    assert _ledger_rows(spark, out) == ledger_before
+
+    # a stale staged quantum the failed write did not truncate would be
+    # swapped in by the next resume and read back as extra rows
+    stale = os.path.join(f"{sinks}__staging", "source=stale", "bucket=0")
+    os.makedirs(stale, exist_ok=True)
+    some_file = next(p for p in before if p.endswith(".parquet"))
+    shutil.copy(os.path.join(sinks, some_file), stale)
+
+    run_pipeline(spark, seq, out, n_buckets=2)
+    assert sorted(os.listdir(out)) == sorted(os.listdir(full))
+    assert _fingerprint(spark, out) == _fingerprint(spark, full)
+    assert _ledger_rows(spark, out) == _ledger_rows(spark, full)
 
 
 def test_auto_n_buckets_resolution(spark, tmp_path):

@@ -16,15 +16,21 @@ and ``<dest>/resume`` get:
                          (source, bucket, status, rows) rows, sorted
     counts.json          the routed_rows / total_tokens / unknown_rows
                          the run returned
+    sinks.txt            the names beside the sinks dir and at its root,
+                         then one line per source=*/bucket=* dir: its
+                         data and .crc file counts and a sha256 of its
+                         sorted (doc_id, family, rule_id, tokens) rows
 
 Everything that legitimately differs between runs (run ids, commit
 times, wall times, file names) is left out, so comparing two commits
-on one seed is ``diff -r <dest A> <dest B>``.  The runs' own output
+on one seed is ``diff -r <dest A> <dest B>``; a staging dir a write
+left beside the sinks shows in ``sinks.txt``.  The runs' own output
 trees are written under ``<dest>`` and removed at the end.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -54,6 +60,26 @@ def _dataset(path: str):
     return ds.dataset(path, format="parquet").to_table()
 
 
+def _sinks_text(out: str) -> str:
+    """The names beside and at the root of ``out``'s sinks dir, then per
+    quantum dir its file counts and a hash of its rows."""
+    sinks = os.path.join(out, "sinks")
+    lines = [f"beside: {sorted(os.listdir(out))}", f"root: {sorted(os.listdir(sinks))}"]
+    for source in sorted(d for d in os.listdir(sinks) if d.startswith("source=")):
+        for bucket in sorted(os.listdir(os.path.join(sinks, source))):
+            qdir = os.path.join(sinks, source, bucket)
+            names = os.listdir(qdir)
+            data = sorted(os.path.join(qdir, n) for n in names
+                          if not n.startswith((".", "_")) and n.endswith(".parquet"))
+            crc = sum(n.endswith(".crc") for n in names)
+            t = ds.dataset(data, format="parquet").to_table(
+                columns=["doc_id", "family", "rule_id", "tokens"])
+            rows = sorted(zip(*(t[c].to_pylist() for c in t.column_names)), key=repr)
+            sha = hashlib.sha256("".join(f"{r!r}\n" for r in rows).encode()).hexdigest()
+            lines.append(f"{source}/{bucket} data={len(data)} crc={crc} rows={len(rows)} {sha}")
+    return "".join(f"{line}\n" for line in lines)
+
+
 def digest(out: str, counts: dict, dest: str) -> None:
     """Write the digest of the run output ``out`` under ``dest``."""
     os.makedirs(os.path.join(dest, "metrics"))
@@ -72,6 +98,8 @@ def digest(out: str, counts: dict, dest: str) -> None:
                             ["source", "bucket", "status", "rows"]))
     with open(os.path.join(dest, "counts.json"), "w") as f:
         json.dump({k: counts[k] for k in COUNTS}, f, indent=1, sort_keys=True)
+    with open(os.path.join(dest, "sinks.txt"), "w") as f:
+        f.write(_sinks_text(out))
 
 
 def main() -> None:
