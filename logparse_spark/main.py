@@ -5,6 +5,9 @@ resume.
     spark-submit --py-files logparse_spark.zip -m logparse_spark.main \
         --input /data/sequences --out /data/pipeline_out
 
+``--out`` is a directory on the driver's local file system
+(``session.local_path``); any other output raises before the run starts.
+
 Local / sandbox:
 
     python -m logparse_spark.main --rows 200000 --out /tmp/lp_out --cores 32
@@ -37,8 +40,8 @@ from logparse_spark.manifests import manifest_rows, save_manifests
 from logparse_spark.operators.aggregate import grain_counts, write_metrics
 from logparse_spark.operators.enrich import enrich, rules_dim
 from logparse_spark.operators.route import _route_clustering, quantum_dir, route, with_bucket
-from logparse_spark.session import get_spark, local_frame
-from logparse_spark.sources.datagen import generate_sequences, nodes_dim, write_sequences
+from logparse_spark.session import get_spark, local_frame, local_path
+from logparse_spark.sources.datagen import nodes_dim, write_sequences
 
 
 # the counts run_pipeline returns: sums over the run's manifest rows
@@ -128,9 +131,16 @@ def run_pipeline(
     grain with pyarrow.  The driver writes the metric tables, the
     manifests and the ledger commit, and sums the manifest rows for the
     returned `routed_rows` / `total_tokens` / `unknown_rows`.
+
+    `out` is resolved once (``session.local_path``), before any Spark
+    job or write, and that one local root holds every output: the
+    sinks, ``ledger/`` with ``_meta.json``, ``metrics/`` and
+    ``manifests/``.  An output that is not on the local file system
+    raises ValueError.
     """
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
+    out = local_path(spark, out)
 
     scan_bytes = _input_bytes(sequences_df)
     n_buckets = resolve_n_buckets(scan_bytes, out, n_buckets)
@@ -213,6 +223,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark(cores=args.cores)
+    out = local_path(spark, args.out)
     if args.raw_logs:
         from logparse_spark.sources.rawlog import raw_logs_to_sequences
 
@@ -222,14 +233,14 @@ def main() -> None:
         if "bucket" in seq.columns:
             seq = seq.drop("bucket")  # recomputed from doc_id (layout-independent)
     else:
-        data_path = f"{args.out}/sequences"
+        data_path = f"{out}/sequences"
         if not os.path.isdir(data_path):
             write_sequences(spark, data_path, args.rows, seed=args.seed,
                             n_buckets=args.buckets or 4)
         seq = spark.read.parquet(data_path).drop("bucket")
 
     metrics = run_pipeline(
-        spark, seq, args.out, n_buckets=args.buckets,
+        spark, seq, out, n_buckets=args.buckets,
         resume=not args.no_resume,
     )
     print(json.dumps(metrics, default=str))

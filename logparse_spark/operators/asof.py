@@ -1,77 +1,15 @@
 """As-of join (SURVEY.md §2.3 theta/range/as-of row): for each left row,
 the latest right row with right.ts <= left.ts within the same key.
 
-Two implementations, trading generality for plan shape:
-
-1. ``asof_join_union``: pure DataFrame composition — union the two
-   sides tagged, one window pass carries the last right value forward.
-   One shuffle on (key), no UDF, scales like any window.
-2. ``asof_join_pandas``: ``applyInPandas`` + ``pd.merge_asof`` per key
-   group — the escape hatch shape for semantics Spark can't compose
-   (tolerance bands, nearest-direction, multi-column asof).
+``asof_join_pandas`` runs ``pd.merge_asof`` per cogrouped key bucket
+(``applyInPandas``), the shape that also carries semantics Spark can't
+compose (tolerance bands, nearest-direction, multi-column asof).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def asof_join_union(
-    left: DataFrame, right: DataFrame, key: str, ts: str,
-    right_val: str, out_col: str | None = None,
-) -> DataFrame:
-    """left rows + latest-prior `right_val`; pure window composition.
-
-    The left payload rides THROUGH the union and window packed into ONE
-    struct column (right rows carry a single null struct instead of
-    |left| typed nulls), so there is no join back at all — one shuffle,
-    the window input schema stays at 5 columns however wide the left
-    side is (tokens and friends never appear as top-level window
-    columns), and duplicate left (key, ts) rows cannot cross-product
-    (they each keep their own row).  A surrogate-id join is not an
-    option: monotonically_increasing_id is not stable across two AQE
-    evaluations of the same subtree.
-    """
-    out_col = out_col or f"asof_{right_val}"
-    rv_type = right.schema[right_val].dataType
-    payload = [f.name for f in left.schema.fields if f.name not in (key, ts)]
-    reserved = {"_pl", "_side", "_rv"} & {f.name for f in left.schema.fields}
-    if reserved:
-        raise ValueError(f"left columns collide with internals: {sorted(reserved)}")
-    l_tag = left.select(
-        F.col(key), F.col(ts), F.lit(1).alias("_side"),
-        F.lit(None).cast(rv_type).alias("_rv"),
-        # left[name] resolves the attribute exactly (dot-safe), unlike a
-        # bare string which F.struct would parse as a nested path
-        *([F.struct(*[left[c].alias(c) for c in payload]).alias("_pl")]
-          if payload else []),
-    )
-    r_tag = right.select(
-        F.col(key), F.col(ts),
-        F.lit(0).alias("_side"), F.col(right_val).alias("_rv"),
-        *([F.lit(None).cast(l_tag.schema["_pl"].dataType).alias("_pl")]
-          if payload else []),
-    )
-    merged = l_tag.unionByName(r_tag)
-    # right rows sort before left at equal ts (_side 0 < 1) -> "<=" semantics
-    w = (
-        Window.partitionBy(key).orderBy(ts, "_side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = merged.withColumn(out_col, F.last("_rv", ignorenulls=True).over(w))
-    kept = carried.where(F.col("_side") == 1)
-    # restore the left column order, unpacking the payload struct via
-    # getField (NOT a "_pl.name" string path, which would parse dotted
-    # column names as nested access)
-    return kept.select(
-        *[
-            F.col(f.name) if f.name in (key, ts)
-            else F.col("_pl").getField(f.name).alias(f.name)
-            for f in left.schema.fields
-        ],
-        F.col(out_col),
-    )
 
 
 def asof_join_pandas(

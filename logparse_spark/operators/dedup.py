@@ -8,7 +8,6 @@ LSH band/bucket joins and every verify step are JVM built-ins
 bit-for-bit.
 
 Scale design:
-- exact: one hash-shuffle on a 256-bit content hash (not the text);
 - MinHash-LSH: candidates come from an equi-join on (band, band_hash)
   buckets — never an O(n^2) cross join; verification touches only
   bucket collisions;
@@ -30,25 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logparse_spark.session import local_frame
-
-# ---------------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------------
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative per exact (normalized) text.
-
-    groupBy on a 256-bit content hash: the shuffle key is 32 bytes
-    regardless of document size, and the full text never shuffles.
-    """
-    h = F.sha2(F.col(text_col), 256).alias("content_hash")
-    return (
-        df.select(F.col(id_col), h)
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dupes"))
-    )
-
 
 # ---------------------------------------------------------------------------
 # shingling + MinHash + LSH
@@ -177,7 +157,7 @@ def minhash_lsh_candidates(
     bucket of B ids contributes B^2 candidate pairs, so one degenerate
     bucket (boilerplate/empty docs) dominates the whole job.  Members of
     dropped buckets still pair through their other `bands-1` buckets;
-    exact duplicates should be collapsed by :func:`exact_dedup` first.
+    collapse exact duplicates first.
     NOT silent: monitor `minhash_dropped_buckets` with the same args.
 
     Signatures come from :func:`minhash_signature_np`.
@@ -355,8 +335,8 @@ def minhash_near_dups(
     generator): a cap breaks ground-truth equality on duplicate-heavy
     corpora — docs above the cap share ALL their band buckets, so every
     bucket overflows and their pairs vanish while a quadratic oracle
-    keeps them.  Set it only when you accept cap semantics (and run
-    exact_dedup first so identical docs never form giant buckets).
+    keeps them.  Set it only when you accept cap semantics (and collapse
+    exact duplicates first so identical docs never form giant buckets).
     """
     cand = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n, seed,
@@ -677,7 +657,8 @@ def simhash_sql(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     stay in its input partition, so partial aggregation collapses each
     doc map-side and the shuffle carries ONE row of `bits` counters per
     document (~8*bits bytes), not the text.  Docs with zero words get no
-    simhash (they have no near-dup signal; exact_dedup owns them).
+    simhash (they have no near-dup signal; collapsing exact duplicates
+    first covers them).
     """
     words = F.filter(
         F.split(F.lower(F.trim(F.col("_t"))), r"\s+"), lambda w: w != ""

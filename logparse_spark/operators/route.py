@@ -23,6 +23,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logparse_spark.session import local_path
+
 SINK_PARTITIONS = ["source", "bucket"]
 
 # the characters Spark's ExternalCatalogUtils.escapePathName writes as
@@ -41,29 +43,6 @@ def _escape(value: str | None) -> str:
 def quantum_dir(sinks_path: str, source: str, bucket: int) -> str:
     """The sink dir route() writes for one (source, bucket) quantum."""
     return f"{sinks_path}/source={_escape(source)}/bucket={bucket}"
-
-
-def _local_path(spark: SparkSession, sinks_path: str) -> str:
-    """The local directory ``sinks_path`` names: itself when it has no
-    scheme and ``fs.defaultFS`` is ``file:``, or the path of a ``file:``
-    URI without an authority (``file:/p``, ``file:///p``).  A resumed
-    write swaps its files in with ``os`` calls, like every other
-    driver-side writer, so any other file system raises ValueError.  As
-    in Hadoop's ``Path``, a scheme is the text before a colon that comes
-    before the first slash."""
-    colon, slash = sinks_path.find(":"), sinks_path.find("/")
-    if colon == -1 or -1 < slash < colon:
-        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
-            "fs.defaultFS", "file:///")
-        if default_fs.startswith("file:"):
-            return sinks_path
-    elif sinks_path.startswith("file:///"):
-        return sinks_path[len("file://"):]
-    elif sinks_path.startswith("file:/") and not sinks_path.startswith("file://"):
-        return sinks_path[len("file:"):]
-    raise ValueError(
-        f"{sinks_path} is not on the local file system; a resumed "
-        "(dynamic) sink write replaces quantum files with local renames")
 
 
 def _check_sink_layout(sinks_dir: str) -> None:
@@ -150,7 +129,8 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     difference between a working table and a small-files meltdown.  The
     explicit partition count keeps AQE from coalescing the exchange
     toward a handful of 64 MB write tasks (measured 13% slower at
-    local[32] on 2M rows).
+    local[32] on 2M rows).  So there is no unclustered write: `cluster`
+    is True or "rebalance", and any other value raises ValueError.
 
     `cluster="rebalance"` replaces the fixed salt with AQE's REBALANCE
     shuffle on the partition keys: runtime statistics split any dir
@@ -185,15 +165,17 @@ def route(df: DataFrame, sinks_path: str, n_buckets: int = 4,
     freeing the old dir's blocks costs tens of ms per quantum.  Both
     modes pass ``partitionOverwriteMode=static`` as a per-write option;
     the session conf is left alone.  A dynamic write needs `sinks_path`
-    on the local file system (:func:`_local_path`) and raises ValueError
+    on the local file system (``session.local_path``) and raises ValueError
     into a tree of the old (family, source, bucket) layout, both before
     any Spark job.
     """
     if overwrite_mode not in ("static", "dynamic"):
         raise ValueError(f"overwrite_mode must be 'static' or 'dynamic', not {overwrite_mode!r}")
+    if cluster is not True and cluster != "rebalance":
+        raise ValueError(f"cluster must be True or 'rebalance', not {cluster!r}")
     target = sinks_path
     if overwrite_mode == "dynamic":
-        sinks_dir = _local_path(df.sparkSession, sinks_path)
+        sinks_dir = local_path(df.sparkSession, sinks_path)
         _check_sink_layout(sinks_dir)
         target = sinks_path.rstrip("/") + "__staging"
     if "bucket" not in df.columns:
@@ -227,52 +209,6 @@ def _data_files(sinks_path: str) -> list[str]:
     """Paths of the sink tree's data files (no _SUCCESS/.crc markers)."""
     return [os.path.join(root, f) for root, _, fs in os.walk(sinks_path)
             for f in fs if not f.startswith(("_", "."))]
-
-
-def compact_sinks(spark: SparkSession, sinks_path: str) -> dict:
-    """Post-ingest small-file compaction — the maintenance job every
-    partitioned production table needs: N streaming/incremental writes
-    leave `salt x runs` files per (source, bucket) dir; this rewrites
-    each dir's files, family-sorted as route() writes them, without
-    changing a single row.  The clustering is :func:`_route_clustering`
-    of the tree's data bytes: up to 512 MB, one file per dir; above it,
-    AQE rebalance, so files-per-dir tracks each dir's bytes.  Partition
-    values are read as written (see :func:`read_sink`), so every dir
-    keeps its name.
-
-    Mechanics: one clustered read-rewrite into a staging dir (the same
-    single-pass partitionBy shape as route(), static overwrite — this
-    is a full rewrite), then a two-rename directory swap.  Readers see
-    a consistent tree — old or new, never a mix — but POSIX rename
-    cannot exchange two paths atomically, so there is a brief window
-    where `sinks_path` is absent (a concurrent reader errors rather
-    than reads garbage), and a crash inside the window leaves the data
-    intact under `<path>__precompact` for manual recovery.  At 100 TB
-    this is the Iceberg `rewrite_data_files` action, whose metadata
-    commit closes exactly this gap; on plain parquet dirs the swap is
-    the best available transactional boundary.
-
-    Returns {files_before, files_after, rows}.
-    """
-    files = _data_files(sinks_path)
-    write_salt, cluster = _route_clustering(sum(map(os.path.getsize, files)))
-    df = read_sink(spark, sinks_path)
-    rows = df.count()
-    staging = sinks_path.rstrip("/") + "__compacting"
-    shutil.rmtree(staging, ignore_errors=True)
-    route(df, staging, write_salt=write_salt, cluster=cluster, overwrite_mode="static")
-    old = sinks_path.rstrip("/") + "__precompact"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(sinks_path, old)
-    try:
-        os.rename(staging, sinks_path)
-    except OSError:
-        os.rename(old, sinks_path)  # roll back: old tree restored
-        shutil.rmtree(staging, ignore_errors=True)  # no stranded staging
-        raise
-    shutil.rmtree(old, ignore_errors=True)
-    return {"files_before": len(files), "files_after": len(_data_files(sinks_path)),
-            "rows": rows}
 
 
 def read_sink(spark: SparkSession, sinks_path: str, family: str | None = None) -> DataFrame:

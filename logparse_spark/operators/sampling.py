@@ -1,17 +1,17 @@
-"""Deterministic sampling operators (training-data pipeline staples).
+"""Deterministic per-stratum quota sampling (a training-data pipeline
+staple).
 
-A 100 TB corpus is sampled constantly — eval splits, ablation subsets,
-per-domain quotas.  Production sampling must be DETERMINISTIC (re-runs
-and audits see the same subset — `df.sample()` is seed-stable only for
-a fixed partitioning, which a cluster does not guarantee) and
-CHEAP (no extra shuffle for Bernoulli; one bounded shuffle for
-per-stratum quotas).  Everything here keys off a content hash, never
+A 100 TB corpus is sampled constantly — per-domain and per-language
+quotas.  Production sampling must be DETERMINISTIC (re-runs and audits
+see the same subset — `df.sample()` is seed-stable only for a fixed
+partitioning, which a cluster does not guarantee) and CHEAP (one
+bounded shuffle per quota).  The sample keys off a content hash, never
 off partition-dependent randomness, so results are identical across
 partitionings, core counts, and AQE re-plans.
 
 Hash choice: the md5-prefix BIGINT (first 15 hex chars) — the same
 construction simhash_sql uses — because DuckDB computes the identical
-value, which makes every operator exactly oracle-checkable:
+value, which makes the operator exactly oracle-checkable:
 ``CAST(CAST('0x' || substring(md5(x), 1, 15) AS BIGINT) ...``.
 xxhash64 would be cheaper per row but has no DuckDB twin; sampling is
 never the hot stage, exactness wins.
@@ -22,17 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# 60-bit hash space (15 hex chars) — fits BIGINT exactly, same as simhash
-_HASH_SPACE = 1 << 60
-
-
 def _hash60(col, seed: int):
     """Deterministic uniform BIGINT in [0, 2^60) from (value, seed).
 
     NULL policy: `F.concat` (unlike concat_ws) propagates NULL, so a
     NULL key hashes to NULL and every comparison against it is NULL —
-    null-key rows are EXCLUDED from every sample and from BOTH sides of
-    a split, identically to the DuckDB twin
+    null-key rows are EXCLUDED from every sample, identically to the
+    DuckDB twin
     ``md5(key || chr(31) || seed)`` (`||` is null-propagating).  The
     alternative (concat_ws skipping nulls) would silently keep or drop
     ALL null-key rows as one block and diverge from the oracle.
@@ -41,26 +37,6 @@ def _hash60(col, seed: int):
         F.substring(F.md5(F.concat(col.cast("string"), F.lit("\x1f"), F.lit(str(seed)))), 1, 15),
         16, 10,
     ).cast("bigint")
-
-
-def hash_sample(
-    df: DataFrame, fraction: float, key_col: str = "doc_id", seed: int = 42,
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep rows whose key hashes below
-    `fraction` of the hash space.
-
-    Pure map-side filter — no shuffle, no state; pushes down past
-    column pruning like any predicate.  The same (key, seed) is kept or
-    dropped identically on every run, partitioning, and engine (the
-    DuckDB oracle computes the same hash), which is what makes the
-    sample auditable.  Disjoint seeds give independent samples; the
-    same seed with a larger fraction gives a SUPERSET (nested samples
-    for scaling-law ladders: 1% ⊂ 5% ⊂ 25%).
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    threshold = int(fraction * _HASH_SPACE)
-    return df.where(_hash60(F.col(key_col), seed) < F.lit(threshold))
 
 
 def stratified_sample(
@@ -103,24 +79,3 @@ def stratified_sample(
         .where(F.col("_rk") <= k)
         .drop("_rk")
     )
-
-
-def split_train_holdout(
-    df: DataFrame, holdout_fraction: float = 0.01, key_col: str = "doc_id",
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic disjoint (train, holdout) split by content hash.
-
-    The holdout is the hash interval [0, f); train is [f, 1).  Because
-    membership is a pure function of the key, a document can NEVER
-    migrate between splits across runs or repartitionings — the
-    contamination guarantee an eval split needs.  Both sides are plain
-    filters over one scan (no shuffle, no materialized split table).
-    NULL keys land in NEITHER side (see `_hash60`): a row with no
-    identity cannot be given a stable split assignment.
-    """
-    if not 0.0 < holdout_fraction < 1.0:
-        raise ValueError(f"holdout_fraction must be in (0,1), got {holdout_fraction}")
-    h = _hash60(F.col(key_col), seed)
-    threshold = int(holdout_fraction * _HASH_SPACE)
-    return df.where(h >= F.lit(threshold)), df.where(h < F.lit(threshold))

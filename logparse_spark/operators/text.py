@@ -2,9 +2,9 @@
 column expressions (whole-stage codegen; zero Python in the hot path).
 
 - language ID: stopword-profile n-gram heuristic;
-- quality scoring: length / punctuation / stopword-ratio features;
 - token counting: whitespace and BPE-ish regex segmentations;
-- document fingerprinting: content hash + winnowing-style shingle min.
+- document fingerprinting: content hash of whitespace-normalized text;
+- chunking and sequence packing for training contexts.
 """
 
 from __future__ import annotations
@@ -58,53 +58,10 @@ def bpe_token_count(text: Column) -> Column:
     return F.coalesce(F.regexp_count(text, F.lit(BPE_REGEX)), F.lit(0))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach quality-signal columns (composable with a threshold filter)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_words = whitespace_token_count(t)
-    stop_hits = F.greatest(*lang_scores(t).values())
-    return df.withColumns(
-        {
-            "q_n_chars": n_chars,
-            "q_n_words": n_words,
-            "q_mean_word_len": F.when(n_words > 0, n_chars / n_words),
-            "q_punct_ratio": F.when(
-                n_chars > 0, F.regexp_count(t, F.lit(r"[^\w\s]")) / n_chars
-            ),
-            "q_stopword_hits": stop_hits,
-            "q_upper_ratio": F.when(
-                n_chars > 0, F.regexp_count(t, F.lit(r"[A-Z]")) / n_chars
-            ),
-        }
-    )
-
-
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Single [0,1] quality score from the features (simple monotone mix)."""
-    qf = quality_features(df, text_col)
-    score = (
-        F.least(F.col("q_n_words") / 50.0, F.lit(1.0)) * 0.4
-        + F.least(F.col("q_stopword_hits") / 5.0, F.lit(1.0)) * 0.4
-        + (1.0 - F.least(F.coalesce(F.col("q_punct_ratio"), F.lit(0.0)) * 4.0, F.lit(1.0))) * 0.2
-    )
-    return qf.withColumn("quality", F.round(score, 6))
-
-
 def fingerprint(text: Column) -> Column:
     """Deterministic content fingerprint of whitespace-normalized text."""
     normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
     return F.md5(normalized)
-
-
-def shingle_fingerprint(text: Column, n: int = 4) -> Column:
-    """Winnowing-flavored rolling fingerprint: min xxhash64 over char
-    n-gram shingles — robust to local edits, pure SQL."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.length(text) - n, F.lit(0))),
-        lambda i: text.substr(i + 1, F.lit(n)),
-    )
-    return F.array_min(F.transform(grams, lambda g: F.abs(F.xxhash64(g))))
 
 
 def chunk_documents(

@@ -126,6 +126,33 @@ def _json_lines(table: pa.Table) -> list[str]:
     return lines
 
 
+def local_path(spark: SparkSession, path: str) -> str:
+    """The local directory ``path`` names, for the driver's own file
+    calls (the resumed sink swap, ``_meta.json``, the ledger, the metric
+    tables and manifests) beside Spark's reads and writes of the same
+    tree: ``path`` itself when it has no scheme, or the path of a
+    ``file:`` URI without an authority (``file:/p``, ``file:///p``).
+    Spark resolves a path without a scheme against ``fs.defaultFS``, so
+    that must be ``file:`` as well; anything else (another scheme, a
+    ``file://host/...`` authority, another default file system) raises
+    ValueError.  As in Hadoop's ``Path``, a scheme is the text before a
+    colon that comes before the first slash."""
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
+        "fs.defaultFS", "file:///")
+    colon, slash = path.find(":"), path.find("/")
+    if default_fs.startswith("file:"):
+        if colon == -1 or -1 < slash < colon:
+            return path
+        if path.startswith("file:///"):
+            return path[len("file://"):]
+        if path.startswith("file:/") and not path.startswith("file://"):
+            return path[len("file:"):]
+    raise ValueError(
+        f"{path} is not on the local file system (fs.defaultFS {default_fs}); "
+        "the driver writes the resumed sinks' swap, _meta.json, the ledger, "
+        "the metric tables and the manifests with local file calls")
+
+
 def write_local(table: pa.Table, path: str, fmt: str = "parquet",
                 append: bool = False) -> None:
     """Write a driver-held Arrow table as one file in the directory
@@ -147,8 +174,8 @@ def write_local(table: pa.Table, path: str, fmt: str = "parquet",
     close even that gap, but ext4 (``auto_da_alloc``) flushes the new
     file's data on a rename that replaces one: ~50 ms a file measured.
 
-    ``path`` is a directory on the local file system, as
-    ``Ledger._exists`` and ``main.resolve_n_buckets`` also assume.
+    ``path`` is a directory on the local file system (``local_path``),
+    as ``Ledger._exists`` and ``main.resolve_n_buckets`` also assume.
     """
     os.makedirs(path, exist_ok=True)
     tmp_name = f".part-{uuid.uuid4().hex}.{fmt}"

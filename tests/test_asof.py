@@ -1,11 +1,12 @@
-"""As-of join: both implementations must agree with each other and with
-a hand-computed expectation, including ties and missing-right keys."""
+"""As-of join: ``asof_join_pandas`` must agree with a hand-computed
+expectation, including ties and missing-right keys, and with a
+plain-Python latest-prior reference on random rows."""
 
 from datetime import datetime
 
 import pytest
 
-from logparse_spark.operators.asof import asof_join_pandas, asof_join_union
+from logparse_spark.operators.asof import asof_join_pandas
 
 
 def _t(m):
@@ -38,43 +39,18 @@ def _check(rows):
     assert got == EXPECT, got
 
 
-def test_asof_union(spark, sides):
-    left, right = sides
-    _check(asof_join_union(left, right, "k", "ts", "price").collect())
-
-
 def test_asof_pandas(spark, sides):
     left, right = sides
     _check(asof_join_pandas(left, right, "k", "ts", "price").collect())
 
 
-def test_asof_union_wide_left_payload_rides_as_one_struct(spark, sides):
-    """A wide/heavy left schema (tokens!) must not appear as top-level
-    window columns — the payload rides packed in one struct, so the
-    window shuffle schema stays at 5 columns (VERDICT r2 #6)."""
-    from pyspark.sql import functions as F
-
-    left, right = sides
-    wide = left.select(
-        "*",
-        F.array(F.lit(1), F.lit(2), F.lit(3)).alias("tokens"),
-        F.lit("payload").alias("c1"),
-        F.lit(2.5).alias("c2"),
-    )
-    out = asof_join_union(wide, right, "k", "ts", "price")
-    assert out.columns == ["k", "ts", "name", "tokens", "c1", "c2", "asof_price"]
-    rows = out.collect()
-    got = {(r["k"], r["ts"].minute): r["asof_price"] for r in rows}
-    assert got == EXPECT, got
-    assert all(r["tokens"] == [1, 2, 3] and r["c1"] == "payload" for r in rows)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    win_lines = [ln for ln in plan.splitlines() if "Window " in ln]
-    assert win_lines, plan
-    assert all("tokens#" not in ln for ln in win_lines), win_lines
-
-
 def test_both_impls_agree_on_larger_data(spark):
+    """The join against a plain-Python reference on random rows: per
+    key, bisect the sorted right timestamps for the latest one <= the
+    left ts (ties match)."""
     import random
+    from bisect import bisect_right
+    from collections import defaultdict
 
     rnd = random.Random(7)
     left = spark.createDataFrame(
@@ -85,8 +61,17 @@ def test_both_impls_agree_on_larger_data(spark):
         [(rnd.randint(1, 5), _t(rnd.randint(0, 59)), float(i)) for i in range(100)],
         "k int, ts timestamp, price double",
     ).dropDuplicates(["k", "ts"])
-    a = {(r["k"], r["ts"]): r["asof_price"]
-         for r in asof_join_union(left, right, "k", "ts", "price").collect()}
-    b = {(r["k"], r["ts"]): r["asof_price"]
-         for r in asof_join_pandas(left, right, "k", "ts", "price").collect()}
-    assert a == b
+    by_key = defaultdict(list)
+    for r in right.collect():
+        by_key[r["k"]].append((r["ts"], r["price"]))
+    for rows in by_key.values():
+        rows.sort()
+    want = {}
+    for r in left.collect():
+        rows = by_key[r["k"]]
+        i = bisect_right([ts for ts, _ in rows], r["ts"])
+        want[(r["k"], r["ts"])] = rows[i - 1][1] if i else None
+    got = {(r["k"], r["ts"]): r["asof_price"]
+           for r in asof_join_pandas(left, right, "k", "ts", "price").collect()}
+    assert got == want
+    assert any(v is None for v in want.values()) and any(v is not None for v in want.values())

@@ -18,13 +18,6 @@ def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id string, text string")
 
 
-def test_exact_dedup(spark):
-    out = dd.exact_dedup(_docs(spark)).collect()
-    assert len(out) == 4  # d1/d2 collapse
-    by_keep = {r["keep_id"]: r["dupes"] for r in out}
-    assert by_keep["d1"] == 2
-
-
 def test_minhash_lsh_finds_planted_pair(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in
              dd.minhash_lsh_candidates(

@@ -134,53 +134,6 @@ def test_fields_map_matches_oracle(spark, pipeline_out, oracle_events):
         assert (r["fields"] or {}) == exp[r["doc_id"]], r["doc_id"]
 
 
-def test_compact_sinks_preserves_rows_and_reduces_files(spark, tmp_path):
-    """compact_sinks must rewrite the (source, bucket) tree into fewer
-    files without changing a single row — tokens bit-identical,
-    partition dirs preserved, old tree gone."""
-    import os
-    import re
-
-    from logparse_spark.operators.route import compact_sinks, read_sink
-
-    from logparse_spark.engine import parse_sequences
-    from logparse_spark.operators.enrich import enrich, rules_dim
-    from logparse_spark.operators.route import route, with_bucket
-    from logparse_spark.sources.datagen import nodes_dim
-
-    seq = generate_sequences(spark, 2500, partitions=8)
-    enriched = with_bucket(
-        enrich(parse_sequences(with_bucket(seq, 2)), nodes_dim(spark), rules_dim(spark)), 2)
-    sinks = str(tmp_path / "compact_sinks")
-    # salt=3: the multi-writer tree a hot-dir layout (or N incremental
-    # ingests) leaves behind — the thing compaction exists to fix
-    route(enriched, sinks, n_buckets=2, write_salt=3)
-    before = {
-        r["doc_id"]: r["tokens"]
-        for r in read_sink(spark, sinks).select("doc_id", "tokens").collect()
-    }
-    stats = compact_sinks(spark, sinks)
-    assert stats["rows"] == len(before) == 2500
-    assert stats["files_after"] < stats["files_before"]
-    after_df = read_sink(spark, sinks)
-    after = {r["doc_id"]: r["tokens"]
-             for r in after_df.select("doc_id", "tokens").collect()}
-    assert after == before  # bit-identical tokens, no row lost or duped
-    # partition tree shape preserved: source=*/bucket=* dirs, one file
-    # each, and the unknown family still readable from its sorted runs
-    files_per_dir = {}
-    for root, _, files in os.walk(sinks):
-        n = sum(f.endswith(".parquet") for f in files)
-        if n:
-            files_per_dir[os.path.relpath(root, sinks)] = n
-    assert files_per_dir and all(re.fullmatch(r"source=[^/]+/bucket=\d+", d)
-                                 for d in files_per_dir), sorted(files_per_dir)
-    assert set(files_per_dir.values()) == {1}, files_per_dir
-    assert read_sink(spark, sinks, "unknown").count() > 0
-    assert not os.path.exists(sinks + "__compacting")
-    assert not os.path.exists(sinks + "__precompact")
-
-
 def test_route_rebalance_mode_bytes_proportional(spark, tmp_path):
     """cluster='rebalance': AQE runtime stats size files-per-dir by each
     dir's bytes — hot dirs split past the advisory size, the cold tail

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from logparse_spark.ledger import Ledger
 from logparse_spark.main import run_pipeline
-from logparse_spark.operators.route import compact_sinks, quantum_dir, read_sink, route, with_bucket
+from logparse_spark.operators.route import quantum_dir, read_sink, route, with_bucket
 from logparse_spark.operators.views import sink_view
 from logparse_spark.sources.datagen import generate_sequences
 
@@ -99,14 +99,11 @@ def test_source_names_round_trip(spark, tmp_path, monkeypatch, sources):
     assert sorted(map(tuple, routed.groupBy("source", "bucket").count().collect())) == expected
     gc = {r["source"] for r in sink_view(spark, sinks, "gc").select("source").distinct().collect()}
     assert gc and gc <= set(sources)
-    # ...so compaction keeps every quantum's dir name, and a resume
-    # finds every ledger quantum already done
-    compact_sinks(spark, sinks)
+    # ...every quantum's dir has the name quantum_dir gives it, and a
+    # resume finds every ledger quantum already done
     dirs = {os.path.relpath(root, sinks) for root, _, files in os.walk(sinks)
             if any(f.endswith(".parquet") for f in files)}
     assert dirs == {os.path.relpath(quantum_dir(sinks, s, b), sinks) for s, b in quanta}
-    assert sorted(map(tuple, read_sink(spark, sinks).groupBy("source", "bucket").count()
-                      .collect())) == expected
     assert Ledger(spark, f"{resumed}/ledger").pending(with_bucket(seq, 2)).count() == 0
     assert run_pipeline(spark, seq, resumed, n_buckets=2)["routed_rows"] == 0
 
@@ -282,6 +279,61 @@ def test_dynamic_write_refuses_a_non_local_path(spark, tmp_path):
         finally:
             spark.conf.unset("fs.defaultFS")
         assert list(sc.statusTracker().getJobIdsForGroup("route-non-local")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert os.listdir(tmp_path) == []
+
+
+def test_route_refuses_an_unclustered_write(spark, tmp_path):
+    """Clustering is mandatory (route's file-count discipline):
+    `cluster` other than True or "rebalance" raises before any write."""
+    df = _route_rows(spark, [("d1", "s1", "gc", [1])])
+    for cluster in (False, None, "salt", 1):
+        with pytest.raises(ValueError, match="cluster"):
+            route(df, str(tmp_path / "sinks"), n_buckets=1, cluster=cluster,
+                  overwrite_mode="static")
+    assert os.listdir(tmp_path) == []
+
+
+def _manifest_lines(out):
+    with open(os.path.join(out, "manifests", "part-00000.json"), encoding="utf-8") as f:
+        return sorted(f)
+
+
+def test_file_uri_output_lands_under_one_root(spark, tmp_path, monkeypatch):
+    """A file:// output is resolved once: the sinks, the ledger with
+    _meta.json, the metrics and the manifests all land under its one
+    root, nothing lands in the cwd, a resume reads the same ledger, and
+    the run equals a bare-path run."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    seq = generate_sequences(spark, 300, partitions=2)
+    uri_root, bare = str(tmp_path / "uri"), str(tmp_path / "bare")
+    run_pipeline(spark, seq, f"file://{uri_root}", n_buckets=2, resume=False)
+    run_pipeline(spark, seq, bare, n_buckets=2, resume=False)
+    assert os.listdir(cwd) == []
+    for out in (uri_root, bare):
+        assert sorted(os.listdir(out)) == ["ledger", "manifests", "metrics", "sinks"]
+        assert os.path.isfile(os.path.join(out, "ledger", "_meta.json"))
+    assert _fingerprint(spark, uri_root) == _fingerprint(spark, bare)
+    assert _ledger_rows(spark, uri_root) == _ledger_rows(spark, bare)
+    assert _manifest_lines(uri_root) == _manifest_lines(bare)
+    assert run_pipeline(spark, seq, f"file:{uri_root}", n_buckets=2)["routed_rows"] == 0
+    assert os.listdir(cwd) == []
+
+
+def test_non_local_output_raises_before_any_job(spark, tmp_path, monkeypatch):
+    """An output the driver cannot write with local file calls raises
+    ValueError before any Spark job or write."""
+    monkeypatch.chdir(tmp_path)
+    seq = generate_sequences(spark, 100, partitions=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-non-local", "pipeline-non-local")
+    try:
+        with pytest.raises(ValueError, match=re.escape("s3a://b/x")):
+            run_pipeline(spark, seq, "s3a://b/x", n_buckets=2)
+        assert list(sc.statusTracker().getJobIdsForGroup("pipeline-non-local")) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert os.listdir(tmp_path) == []

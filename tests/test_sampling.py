@@ -27,32 +27,6 @@ _HASH_SQL = (
 )
 
 
-def test_hash_sample_matches_duckdb_oracle(docs):
-    frac, seed = 0.25, 7
-    got = {r["doc_id"] for r in sp.hash_sample(docs, frac, seed=seed).collect()}
-    threshold = int(frac * (1 << 60))
-    want = {
-        r[0] for r in _duck().execute(
-            f"SELECT doc_id FROM documents WHERE {_HASH_SQL.format(seed=seed)}"
-            f" < {threshold}"
-        ).fetchall()
-    }
-    assert got == want
-    assert 0 < len(got) < docs.count()
-
-
-def test_hash_sample_nested_supersets(docs):
-    small = {r["doc_id"] for r in sp.hash_sample(docs, 0.05, seed=7).collect()}
-    big = {r["doc_id"] for r in sp.hash_sample(docs, 0.25, seed=7).collect()}
-    assert small <= big  # same seed, larger fraction => superset
-
-
-def test_hash_sample_partitioning_invariant(docs):
-    a = {r["doc_id"] for r in sp.hash_sample(docs, 0.2).collect()}
-    b = {r["doc_id"] for r in sp.hash_sample(docs.repartition(7), 0.2).collect()}
-    assert a == b
-
-
 def test_stratified_sample_matches_duckdb_oracle(docs):
     k, seed = 3, 42
     got = {r["doc_id"] for r in sp.stratified_sample(docs, "lang", k, seed=seed).collect()}
@@ -87,31 +61,13 @@ def test_stratified_plan_has_window_group_limit(docs):
     assert "WindowGroupLimit" in plan
 
 
-def test_split_train_holdout_disjoint_and_total(docs):
-    train, hold = sp.split_train_holdout(docs, 0.1)
-    t = {r["doc_id"] for r in train.collect()}
-    h = {r["doc_id"] for r in hold.collect()}
-    assert t.isdisjoint(h)
-    assert len(t) + len(h) == docs.count()
-    # determinism across partitionings (the contamination guarantee)
-    train2, hold2 = sp.split_train_holdout(docs.repartition(5), 0.1)
-    assert {r["doc_id"] for r in hold2.collect()} == h
-
-
 def test_null_keys_excluded_everywhere(spark):
     """NULL-key policy (ADVICE r4): null keys hash to NULL (F.concat
-    propagates), so they are excluded from samples and from BOTH split
-    sides — exactly like the DuckDB twin's null-propagating `||`."""
-    df = spark.createDataFrame(
-        [("a",), ("b",), (None,)], "doc_id string")
-    kept = {r["doc_id"] for r in sp.hash_sample(df, 1.0).collect()}
-    assert None not in kept and kept == {"a", "b"}  # frac=1.0 keeps all non-null
-    train, hold = sp.split_train_holdout(df, 0.5)
-    both = {r["doc_id"] for r in train.collect()} | {r["doc_id"] for r in hold.collect()}
-    assert None not in both and both == {"a", "b"}
-    # ADVICE r5: stratified_sample too — under Spark's ASC nulls-first
-    # default a NULL _hash60 took rank 1 and DISPLACED a real doc
-    # (keys [a,b,c,NULL] with k=2 returned [b, NULL])
+    propagates), so they are excluded from samples — exactly like the
+    DuckDB twin's null-propagating `||`."""
+    # ADVICE r5: under Spark's ASC nulls-first default a NULL _hash60
+    # took rank 1 and DISPLACED a real doc (keys [a,b,c,NULL] with k=2
+    # returned [b, NULL])
     strat = spark.createDataFrame(
         [("a", "en"), ("b", "en"), ("c", "en"), (None, "en")],
         "doc_id string, lang string")
@@ -126,8 +82,3 @@ def test_stratified_sample_rejects_rk_collision(spark):
     df = spark.createDataFrame([("a", "en", 1)], "doc_id string, lang string, _rk int")
     with pytest.raises(ValueError, match="_rk"):
         sp.stratified_sample(df, "lang", 2)
-
-
-def test_hash_sample_no_shuffle(docs):
-    plan = sp.hash_sample(docs, 0.5)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # pure map-side filter

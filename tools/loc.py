@@ -6,8 +6,21 @@ module, class or function body, found with ``ast``).  Comments are
 found with ``tokenize``, so a ``#`` inside a string is code.
 
 Usage:  python tools/loc.py [dir ...]     (default: logparse_spark tests)
+        python tools/loc.py --unreached
 
 Prints one line per module and a total per directory.
+
+``--unreached`` prints, with their raw line counts, the top-level
+functions and classes of ``logparse_spark/`` that only tests call: no
+non-test code reaches them and no other library def names them, so
+each can be deleted alone.  The roots are the entry points
+(``__spark_entry__.py``, ``bench*.py``, ``perfbench/`` and ``tools/``,
+outside any ``tests`` dir) and the module-level code of every library
+module.  A def is reached when a reached body names it, as a name, an
+attribute or an identifier string; names are matched without their
+module, so the walk errs toward reached.  Imports alone reach nothing.
+An unreached def that another unreached def names (a helper of a
+test-only operator) is listed once the caller is deleted.
 """
 
 from __future__ import annotations
@@ -56,7 +69,73 @@ def count_dir(root: str) -> dict[str, int]:
     return out
 
 
+def _names(nodes) -> set[str]:
+    """Identifiers the nodes use: names, attributes and identifier-like
+    string constants, not counting import statements."""
+    out: set[str] = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and node.value.isidentifier():
+                out.add(node.value)
+    return out
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh:
+        return ast.parse(fh.read(), path)
+
+
+def _py_files(root: str):
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if x != "tests")
+        yield from (os.path.join(d, f) for f in sorted(files) if f.endswith(".py"))
+
+
+def unreached(repo: str = ".", package: str = "logparse_spark") -> dict[str, int]:
+    """{"module.py:name": raw lines} of the package's top-level defs that
+    only tests call (see the module docstring)."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: list[ast.AST] = []
+    for path in _py_files(os.path.join(repo, package)):
+        rel = os.path.relpath(path, repo)
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append((rel, node))
+                roots.extend(node.decorator_list)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots.append(node)
+    entry = [os.path.join(repo, f) for f in sorted(os.listdir(repo))
+             if f == "__spark_entry__.py" or (f.startswith("bench") and f.endswith(".py"))]
+    for d in ("perfbench", "tools"):
+        entry.extend(_py_files(os.path.join(repo, d)))
+    roots.extend(_parse(path) for path in entry)
+
+    uses = {name: _names(node for _, node in nodes) - {name} for name, nodes in defs.items()}
+    todo, seen = _names(roots), set()
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in defs:
+            continue
+        seen.add(name)
+        todo |= uses[name] - seen
+    named = set().union(*uses.values())
+    return {f"{rel}:{name}": node.end_lineno - node.lineno + 1
+            for name, nodes in sorted(defs.items()) if name not in seen | named
+            for rel, node in nodes}
+
+
 def main(argv: list[str]) -> int:
+    if argv == ["--unreached"]:
+        found = unreached()
+        for key, n in found.items():
+            print(f"{n:6d}  {key}")
+        print(f"{sum(found.values()):6d}  raw lines in {len(found)} defs only tests call")
+        return 0
     for root in argv or ["logparse_spark", "tests"]:
         per = count_dir(root)
         for path, n in per.items():
