@@ -4,11 +4,17 @@ A tiny append-only parquet log keyed by (source, bucket), one row per
 committed quantum with its row count.  On start, pending = the input's
 per-quantum row counts LEFT ANTI JOIN the latest committed count of each
 quantum, so a quantum whose input gained or lost rows since its commit
-runs again; after the sink write succeeds, one commit batch is appended
-as one parquet file, written on the driver.
-Re-running a quantum is an idempotent overwrite at the sink level
-(a resumed ``route`` replaces every file of its one dir).  An edit that
-keeps a quantum's row count is not detected.
+runs again; after the sink commit (``route``'s staged write and swap)
+succeeds, one commit batch is appended as one parquet file, written on
+the driver.  Re-running a quantum is an idempotent overwrite at the
+sink level (a resumed ``route`` replaces every file of its one dir).
+An edit that keeps a quantum's row count is not detected.
+
+A fresh run replaces the whole sink tree, so ``run_pipeline`` clears
+the ledger (:meth:`Ledger.reset`) before it changes any sink: a crash
+mid-reset leaves old commits that still describe the untouched old
+sinks, and a crash at any later point leaves every quantum pending, so
+the next resume redoes them.
 
 Scale: at 10^12 rows with (50 sources x 1024 buckets) the ledger is
 ~50k rows — driver-trivial, broadcast-trivial; the anti-join prunes the
@@ -44,6 +50,13 @@ class Ledger:
             f.endswith(".parquet") and not f.startswith((".", "_"))
             for f in os.listdir(self.path)
         )
+
+    def reset(self) -> None:
+        """Remove every commit file, keeping ``_meta.json`` (the output's
+        bucket count, which ``main.resolve_n_buckets`` writes before any
+        reset, so the dir exists): every quantum is pending again."""
+        for f in set(os.listdir(self.path)) - {"_meta.json"}:
+            os.remove(os.path.join(self.path, f))
 
     def done(self) -> DataFrame:
         """Committed quanta: (source, bucket, rows) of each one's latest

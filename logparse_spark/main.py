@@ -2,8 +2,12 @@
 aggregate pipeline with lineage manifests and ledger-based idempotent
 resume.
 
-    spark-submit --py-files logparse_spark.zip -m logparse_spark.main \
+    spark-submit --py-files dist/logparse_spark.zip logparse_spark/main.py \
         --input /data/sequences --out /data/pipeline_out
+
+(the zip from ``python tools/package.py``; spark-submit has no ``-m``).
+The master is the launch's (``--master``), as ``session.get_spark``
+leaves it.
 
 ``--out`` is a directory on the driver's local file system
 (``session.local_path``); any other output raises before the run starts.
@@ -30,6 +34,7 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 import pyarrow.compute as pc
 from pyspark.sql import functions as F
@@ -49,12 +54,15 @@ _TOTALS = ("routed_rows", "total_tokens", "unknown_rows")
 
 
 def _input_bytes(df) -> int:
-    """Best-effort scanned-input size (local paths; 0 when unknowable)."""
+    """Best-effort scanned-input size (local paths; 0 when unknowable).
+    ``inputFiles()`` gives percent-encoded URIs (a space as ``%20``), so
+    a ``file:`` URI's path is decoded; other schemes count 0."""
     try:
         total = 0
         for f in df.inputFiles():
-            p = f.replace("file:", "")
-            if os.path.isfile(p):
+            uri = urlparse(f)
+            p = unquote(uri.path)
+            if uri.scheme == "file" and os.path.isfile(p):
                 total += os.path.getsize(p)
         return total
     except Exception:  # noqa: BLE001 - non-file sources
@@ -120,17 +128,20 @@ def run_pipeline(
 ) -> dict:
     """Run the full pipeline; returns the run's counts and timings.
 
-    Every number the run reports derives from a column-pruned read-back
-    of the `(source, bucket)` sink dirs this run wrote.  A fresh run's
-    static overwrite truncated the tree, so that is the whole tree; a
-    resumed run's dynamic write replaced the files of exactly its
-    pending dirs, so it reads those.  Two Spark queries read it: the
-    metric grain (``grain_counts``), collected once with ``toArrow``,
-    and ``family_metrics``.  Nothing is cached.  The histogram, the rollup
-    and the per-quantum manifest rows are summed from the collected
-    grain with pyarrow.  The driver writes the metric tables, the
-    manifests and the ledger commit, and sums the manifest rows for the
-    returned `routed_rows` / `total_tokens` / `unknown_rows`.
+    Both modes commit the sinks the same way (``route``: a staged write,
+    then a driver-side swap).  A fresh run (``resume=False``) first
+    clears the ledger's commits (``Ledger.reset``), before any sink
+    changes, then replaces the whole tree; a resumed run replaces the
+    files of exactly its pending dirs.  Every number the run reports
+    derives from a column-pruned read-back of the `(source, bucket)`
+    sink dirs this run wrote: the whole tree, or the pending dirs.  Two
+    Spark queries read it: the metric grain (``grain_counts``),
+    collected once with ``toArrow``, and ``family_metrics``.  Nothing is
+    cached.  The histogram, the rollup and the per-quantum manifest rows
+    are summed from the collected grain with pyarrow.  The driver writes
+    the metric tables, the manifests and the ledger commit, and sums the
+    manifest rows for the returned `routed_rows` / `total_tokens` /
+    `unknown_rows`.
 
     `out` is resolved once (``session.local_path``), before any Spark
     job or write, and that one local root holds every output: the
@@ -148,7 +159,9 @@ def run_pipeline(
     ledger = Ledger(spark, f"{out}/ledger")
     sinks = f"{out}/sinks"
     read_paths = [sinks]
-    if resume:
+    if not resume:
+        ledger.reset()  # before any sink changes: a crash from here on leaves every quantum pending
+    else:
         # pending is ledger-small (<= sources x buckets): collect, then
         # broadcast-semi-join — keeps the big side shuffle-free, and at
         # 10^12 rows the same predicate prunes partitions at scan time
@@ -174,8 +187,8 @@ def run_pipeline(
     write_salt, cluster_mode = _route_clustering(scan_bytes)
 
     t_route = time.time()
-    # fresh full runs (resume off) truncate the tree with one static
-    # overwrite; resumed runs replace only their pending quanta's files
+    # fresh runs (resume off) replace the whole tree, resumed runs only
+    # their pending quanta's files; both commit by a staged write + swap
     route(enriched, sinks, n_buckets=n_buckets,
           cluster=cluster_mode, write_salt=write_salt,
           overwrite_mode="dynamic" if resume else "static")  # the one big action

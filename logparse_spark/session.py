@@ -3,7 +3,7 @@
 Scale notes (100 TB / 1000 executors): every config here is either
 cluster-neutral (AQE, Arrow, UTC) or derived from core count at runtime.
 Nothing hard-codes local-mode assumptions except the ``master`` default,
-which spark-submit overrides.
+which applies only when no launcher chose one (``get_spark``).
 """
 
 from __future__ import annotations
@@ -15,9 +15,20 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+def _launch_master() -> str | None:
+    """The master spark-submit gave the JVM this driver was started by,
+    or None under plain ``python``, where PySpark starts the JVM itself
+    from the builder's conf (a master chosen there is never overridden)."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
 
 
 def get_spark(
@@ -38,10 +49,13 @@ def get_spark(
     - The output committer is Spark's default (v1): committer v2 was
       measured slower on the sink write and leaves partial output
       visible when a job fails.
+    - The master is ``SPARK_MASTER``, else the launch's (spark-submit's
+      ``--master``), else ``local[cores]``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    master = os.environ.get("SPARK_MASTER", f"local[{cores}]" if cores else "local[*]")
+    master = (os.environ.get("SPARK_MASTER") or _launch_master()
+              or (f"local[{cores}]" if cores else "local[*]"))
     if shuffle_partitions is None:
         shuffle_partitions = cores if cores else (os.cpu_count() or 8)
 
@@ -128,8 +142,8 @@ def _json_lines(table: pa.Table) -> list[str]:
 
 def local_path(spark: SparkSession, path: str) -> str:
     """The local directory ``path`` names, for the driver's own file
-    calls (the resumed sink swap, ``_meta.json``, the ledger, the metric
-    tables and manifests) beside Spark's reads and writes of the same
+    calls (the sink swap, ``_meta.json``, the ledger, the metric tables
+    and manifests) beside Spark's reads and writes of the same
     tree: ``path`` itself when it has no scheme, or the path of a
     ``file:`` URI without an authority (``file:/p``, ``file:///p``).
     Spark resolves a path without a scheme against ``fs.defaultFS``, so
@@ -149,7 +163,7 @@ def local_path(spark: SparkSession, path: str) -> str:
             return path[len("file:"):]
     raise ValueError(
         f"{path} is not on the local file system (fs.defaultFS {default_fs}); "
-        "the driver writes the resumed sinks' swap, _meta.json, the ledger, "
+        "the driver writes the sinks' swap, _meta.json, the ledger, "
         "the metric tables and the manifests with local file calls")
 
 

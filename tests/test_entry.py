@@ -4,6 +4,9 @@ at sf0.01).  Uses the STRICT comparator from tools/parity.py: normalized
 Arrow dtypes must match exactly and values compare with no tolerance —
 the local stand-in for the driver's type-sensitive value hash."""
 
+import sys
+from types import SimpleNamespace
+
 import duckdb
 import pyarrow as pa
 import pytest
@@ -89,3 +92,25 @@ def test_approx_distinct_bounded_error(spark, duck):
         assert abs(approx - exact_users) <= max(1, 3 * rsd * exact_users), (
             et, approx, exact_users)
         assert vmin <= got[et]["p50_value"] <= vmax, et
+
+
+def test_parity_tool_checks_retired_queries_and_refuses_unknown_names(monkeypatch, capsys):
+    """tools/parity.py resolves a retired query name (checked against its
+    retired oracle) and exits non-zero on a name it does not know,
+    before it opens DuckDB or starts Spark."""
+    import tools.parity as parity
+
+    class Started(Exception):
+        pass
+
+    def started():
+        raise Started
+
+    monkeypatch.setattr(parity, "duckdb", SimpleNamespace(connect=started))
+    monkeypatch.setattr(sys, "argv", ["parity.py", "sf", "q_pricing_summary", "q_no_such_query"])
+    assert parity.main() == 1
+    assert "q_no_such_query" in capsys.readouterr().out
+    for name in entrymod.retired_queries():
+        monkeypatch.setattr(sys, "argv", ["parity.py", "sf", name])
+        with pytest.raises(Started):
+            parity.main()

@@ -158,11 +158,13 @@ def test_resume_routes_rows_appended_to_committed_quanta(spark, tmp_path):
 
 
 def test_overwrite_mode_split_fresh_static_resume_dynamic(spark, tmp_path, monkeypatch):
-    # VERDICT r5 #6: fresh full runs (resume=False) must take the cheap
-    # static-overwrite commit; resume runs must keep dynamic (partial
-    # idempotent partition rewrite).  Spy on route() to pin which mode
-    # each path requests; the mode is a per-write option, so the session
-    # conf must be left at its prior value.
+    # fresh full runs (resume=False) replace the whole sink tree (static:
+    # every quantum dir the write did not stage goes); resume runs
+    # replace only the quanta they write (dynamic: partial idempotent
+    # rewrite).  Both commit by the same staged write and swap.  Spy on
+    # route() to pin which mode each path requests; the mode is a
+    # per-write option, so the session conf must be left at its prior
+    # value.
     import logparse_spark.main as mainmod
     from logparse_spark.operators import route as routemod
 
@@ -379,6 +381,135 @@ def test_failed_resume_write_leaves_sinks_and_next_resume_recovers(spark, tmp_pa
     assert sorted(os.listdir(out)) == sorted(os.listdir(full))
     assert _fingerprint(spark, out) == _fingerprint(spark, full)
     assert _ledger_rows(spark, out) == _ledger_rows(spark, full)
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, tmp_path_factory):
+    """An uninterrupted run over the N-row corpus: (its input, its out dir)."""
+    seq = generate_sequences(spark, N, partitions=4)
+    full = str(tmp_path_factory.mktemp("uncrashed") / "full")
+    run_pipeline(spark, seq, full, n_buckets=2)
+    return seq, full
+
+
+def _quantum_dirs(sinks):
+    """relative path of every source=*/bucket=* dir under ``sinks``."""
+    return {os.path.join(s, b) for s in os.listdir(sinks) if s.startswith("source=")
+            for b in os.listdir(os.path.join(sinks, s))}
+
+
+def test_failed_fresh_write_leaves_sinks_and_next_resume_recovers(spark, full_run, tmp_path, monkeypatch):
+    """Crash mid sink write, fresh run: a resume=False run over a
+    completed output whose write job fails after route's shuffle raises,
+    leaves every sink file and dir in place and every quantum pending;
+    the next resume routes all rows and equals an uninterrupted run."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    seq, full = full_run
+    out = str(tmp_path / "out")
+    run_pipeline(spark, seq, out, n_buckets=2)
+    sinks = f"{out}/sinks"
+    before = _inodes(sinks)
+    victim = seq.first()["doc_id"]
+    real_sort = ClassicDataFrame.sortWithinPartitions
+
+    def failing_sort(self, *cols, **kw):
+        bad = F.when(F.col("doc_id") == victim, F.raise_error(F.lit("injected sink-write failure")))
+        return real_sort(self, *cols, **kw).withColumn("family", bad.otherwise(F.col("family")))
+
+    with monkeypatch.context() as m:
+        m.setattr(ClassicDataFrame, "sortWithinPartitions", failing_sort)
+        with pytest.raises(Exception, match="injected sink-write failure"):
+            run_pipeline(spark, seq, out, n_buckets=2, resume=False)
+    assert _inodes(sinks) == before
+    assert Ledger(spark, f"{out}/ledger").done().count() == 0
+
+    assert run_pipeline(spark, seq, out, n_buckets=2)["routed_rows"] == N
+    assert sorted(os.listdir(out)) == sorted(os.listdir(full))
+    assert _fingerprint(spark, out) == _fingerprint(spark, full)
+    assert _ledger_rows(spark, out) == _ledger_rows(spark, full)
+
+
+def test_narrower_fresh_run_leaves_the_rest_pending(spark, full_run, tmp_path):
+    """A fresh run over half the sources, into a completed output,
+    replaces the whole tree: the sinks keep only its quanta (their dirs
+    keep their inodes) and the ledger only its commits, so a
+    full-input resume routes the other half and equals an uninterrupted
+    run."""
+    seq, full = full_run
+    out = str(tmp_path / "out")
+    run_pipeline(spark, seq, out, n_buckets=2)
+    sinks = f"{out}/sinks"
+    before = _inodes(sinks)
+    sources = sorted(r["source"] for r in seq.select("source").distinct().collect())
+    half = seq.where(F.col("source").isin(sources[::2]))
+    quanta = sorted(map(tuple, with_bucket(half, 2).select("source", "bucket").distinct().collect()))
+    n_half = half.count()
+
+    assert run_pipeline(spark, half, out, n_buckets=2, resume=False)["routed_rows"] == n_half
+    kept = {os.path.relpath(quantum_dir(sinks, s, b), sinks) for s, b in quanta}
+    assert _quantum_dirs(sinks) == kept
+    assert {p: _inodes(sinks)[p] for p in kept} == {p: before[p] for p in kept}
+    assert read_sink(spark, sinks).count() == n_half
+    assert [(s, b) for s, b, _ in _ledger_rows(spark, out)] == quanta
+
+    assert run_pipeline(spark, seq, out, n_buckets=2)["routed_rows"] == N - n_half
+    assert _fingerprint(spark, out) == _fingerprint(spark, full)
+    assert _ledger_rows(spark, out) == _ledger_rows(spark, full)
+
+
+@pytest.mark.parametrize("resume", [False, True], ids=["fresh", "resumed"])
+def test_crash_mid_swap_then_resume_equals_an_uncrashed_run(spark, full_run, tmp_path, monkeypatch, resume):
+    """Crash mid swap: a run whose sink swap fails at its sixth rename,
+    into an output a fresh run completed (or a crashed run left
+    partial), raises from the swap and commits nothing; the next resume
+    equals an uncrashed run in sinks, ledger rows and manifest lines
+    (a resume's manifests: the quanta it redid)."""
+    seq, full = full_run
+    out = str(tmp_path / "out")
+    if resume:
+        _run_crashing_after(monkeypatch, 3, spark, seq, out)
+    else:
+        run_pipeline(spark, seq, out, n_buckets=2)
+    ledger = Ledger(spark, f"{out}/ledger")
+    committed = _ledger_rows(spark, out) if resume else []
+    pending = sorted(map(tuple, ledger.pending(with_bucket(seq, 2)).collect()))
+
+    real_rename, calls = os.rename, []
+
+    def failing_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 6:
+            raise OSError("injected swap failure")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", failing_rename)
+        with pytest.raises(OSError, match="injected swap failure") as crash:
+            run_pipeline(spark, seq, out, n_buckets=2, resume=resume)
+    assert "_swap_in" in {entry.name for entry in crash.traceback}
+    assert sorted(map(tuple, ledger.done().collect())) == committed
+
+    run_pipeline(spark, seq, out, n_buckets=2)
+    assert _fingerprint(spark, out) == _fingerprint(spark, full)
+    assert _ledger_rows(spark, out) == _ledger_rows(spark, full)
+    if resume:
+        assert _manifest_quanta(spark, out) == pending
+    else:
+        assert _manifest_lines(out) == _manifest_lines(full)
+    assert sorted(os.listdir(out)) == sorted(os.listdir(full))
+
+
+@pytest.mark.parametrize("name", ["plain", "with space", "pct%41"])
+def test_input_bytes_decodes_the_input_uris(spark, tmp_path, name):
+    """The scanned-input size counts every data file of a local input,
+    also under a dir name that inputFiles() percent-encodes."""
+    from logparse_spark.main import _input_bytes
+
+    src = str(tmp_path / name)
+    generate_sequences(spark, 100, partitions=2).write.parquet(src)
+    sizes = [os.path.getsize(os.path.join(src, f)) for f in os.listdir(src) if f.endswith(".parquet")]
+    assert _input_bytes(spark.read.parquet(src)) == sum(sizes) > 0
 
 
 def test_auto_n_buckets_resolution(spark, tmp_path):

@@ -13,6 +13,10 @@ DECIMAL(38,2) even with equal values.  This gate therefore compares:
      floats bit-exact, timestamps ISO-formatted including tz).
 
 Usage:  python tools/parity.py [sf_dir] [query ...]
+
+A named query may be a driver query (``queries()``) or a retired one
+(``retired_queries()``, checked against ``retired_oracle_sql()``); any
+other name fails the run before Spark starts.
 """
 
 from __future__ import annotations
@@ -91,12 +95,18 @@ def table_fingerprint(tbl: pa.Table):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    retired = entrymod.retired_queries()
+    qs = entrymod.queries() | {n: f for n, f in retired.items() if n in only}
+    oracles = entrymod.oracle_sql() | entrymod.retired_oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"FAILURES: unknown queries {', '.join(unknown)}")
+        return 1
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     spark = get_spark(app_name="parity", cores=8, shuffle_partitions=8)
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
