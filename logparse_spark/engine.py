@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import functools
 import re
+import sys
+import zipimport
 from collections.abc import Iterable, Iterator
 from datetime import datetime
 
@@ -203,10 +205,31 @@ def _compiled() -> dict:
     return compile_rulebook()
 
 
+def _drop_zip_importers() -> None:
+    """Remove every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    PySpark starts each Python task with ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``), and on Python 3.11 that makes
+    every cached ``zipimporter`` re-read its whole archive (fixed in
+    3.12).  A parse worker holds 16 of them: two for Spark's core jar
+    (5,359 entries, no ``.py``), the rest for ``pyspark.zip`` packages
+    and py4j; the call took 116-212 ms a task at local[4] on a 4-core
+    host, and ~0 ms once they are gone.  An import through a zip entry
+    still works, as ``zipimport._zip_directory_cache`` keeps each
+    archive's index.  ``_parse_batches`` calls this when it ends, after
+    its own first imports, which cache three of them again."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
 def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        if batch.num_rows:
-            yield parse_batch_arrow(batch, _compiled(), PARSED_ARROW_SCHEMA)
+    try:
+        for batch in batches:
+            if batch.num_rows:
+                yield parse_batch_arrow(batch, _compiled(), PARSED_ARROW_SCHEMA)
+    finally:
+        _drop_zip_importers()
 
 
 def parse_sequences(df: DataFrame) -> DataFrame:

@@ -16,9 +16,15 @@ mid-reset leaves old commits that still describe the untouched old
 sinks, and a crash at any later point leaves every quantum pending, so
 the next resume redoes them.
 
+A quantum's source is compared null-safely: ``run_pipeline`` takes a
+"" source as null, and both read back from the sinks as null.
+
 Scale: at 10^12 rows with (50 sources x 1024 buckets) the ledger is
-~50k rows — driver-trivial, broadcast-trivial; the anti-join prunes the
-SCAN via partition pruning on (source, bucket) before any work happens.
+~50k rows — driver-trivial, broadcast-trivial: ``done`` reads the
+commit files on the driver with pyarrow.  The anti-join prunes no
+scan: the per-quantum counts read the whole input, and the resumed
+scan is pruned by ``run_pipeline``'s static filter on the pending
+sources.
 """
 
 from __future__ import annotations
@@ -27,6 +33,7 @@ import os
 import time
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,14 +49,14 @@ class Ledger:
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        """A committed file is in the ledger dir; dot- and underscore-
+    def _commit_files(self) -> list[str]:
+        """The committed files in the ledger dir; dot- and underscore-
         prefixed names (a crashed commit's temp file, ``_meta.json``) are
         skipped, as Spark's and pyarrow's readers skip them."""
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") and not f.startswith((".", "_"))
-            for f in os.listdir(self.path)
-        )
+        if not os.path.isdir(self.path):
+            return []
+        return [os.path.join(self.path, f) for f in sorted(os.listdir(self.path))
+                if f.endswith(".parquet") and not f.startswith((".", "_"))]
 
     def reset(self) -> None:
         """Remove every commit file, keeping ``_meta.json`` (the output's
@@ -60,23 +67,28 @@ class Ledger:
 
     def done(self) -> DataFrame:
         """Committed quanta: (source, bucket, rows) of each one's latest
-        commit; with no ledger yet, an empty ``LocalRelation``."""
-        if not self._exists():
-            return local_frame(self.spark, [], "source string, bucket int, rows long")
-        return (
-            self.spark.read.parquet(self.path)
-            .where(F.col("status") == "done")
-            .groupBy("source", "bucket")
-            .agg(F.max_by("rows", "committed_at").alias("rows"))
-        )
+        commit, as a ``LocalRelation``.  The commit files are ledger-small
+        and read on the driver with pyarrow, as ``commit`` writes them:
+        no Spark job (reading them through Spark cost a schema-inference
+        job and a one-task aggregation, 84-315 ms at local[4])."""
+        commits = []
+        for f in self._commit_files():
+            t = pq.read_table(f, columns=["source", "bucket", "status", "rows", "committed_at"])
+            commits += zip(*(c.to_pylist() for c in t.columns))
+        # the latest commit of each quantum wins
+        latest = {(s, b): n for s, b, st, n, _ in sorted(commits, key=lambda c: c[4]) if st == "done"}
+        return local_frame(self.spark, [(s, b, n) for (s, b), n in latest.items()],
+                           "source string, bucket int, rows long")
 
     def pending(self, all_partitions: DataFrame) -> DataFrame:
         """(source, bucket) of every input quantum not committed with its
         current row count — the resume frontier."""
         counts = all_partitions.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("rows"))
-        return counts.join(
-            F.broadcast(self.done()), ["source", "bucket", "rows"], "left_anti"
-        ).select("source", "bucket")
+        done = self.done()
+        # null-safe on source: a null source's quantum reads back as null
+        same = (counts["source"].eqNullSafe(done["source"])
+                & (counts["bucket"] == done["bucket"]) & (counts["rows"] == done["rows"]))
+        return counts.join(F.broadcast(done), same, "left_anti").select("source", "bucket")
 
     def commit(self, partition_counts: DataFrame | pa.Table, run_id: str) -> None:
         """Append done-markers, one row per (source, bucket, rows) of

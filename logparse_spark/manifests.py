@@ -55,7 +55,8 @@ def manifest_rows(grain: pa.Table) -> pa.Table:
                 .sort_by([*quantum, ("key", "ascending")]))
     # group_by orders its groups arbitrarily: sort them, and cut the
     # sorted per-rule rows into each quantum's entries by its entry count
-    rows = per_rule.group_by(["source", "bucket"], use_threads=False).aggregate(
+    # bucket first, as in sum_by: a null source's group stays whole
+    rows = per_rule.group_by(["bucket", "source"], use_threads=False).aggregate(
         [("cnt", "sum"), ("tok", "sum"), ("unknown", "sum"), ("chk", "sum"),
          ([], "count_all")]).sort_by(quantum)
     offsets = np.concatenate([[0], np.cumsum(rows["count_all"].to_numpy())]).astype(np.int32)

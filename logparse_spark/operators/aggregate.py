@@ -62,9 +62,15 @@ def collect_grain(parsed: DataFrame, grain: DataFrame | pa.Table | None = None) 
 def sum_by(table: pa.Table, keys: list[str], cols: list[str]) -> pa.Table:
     """SUM of ``cols`` per distinct ``keys`` (null a key like any
     value), keys first, columns named as in ``table``, rows in no
-    defined order.  No keys sum the whole table into one row."""
-    out = table.group_by(keys, use_threads=False).aggregate([(c, "sum") for c in cols])
-    return out.rename_columns([*keys, *cols])
+    defined order.  No keys sum the whole table into one row.
+
+    The grouping puts the primitive keys first: pyarrow 16's grouper
+    splits the group of a null string key that a fixed-width key
+    follows (a null source's ("source", "bucket") quantum came out as
+    several partial rows)."""
+    order = sorted(keys, key=lambda k: not pa.types.is_primitive(table.schema.field(k).type))
+    out = table.group_by(order, use_threads=False).aggregate([(c, "sum") for c in cols])
+    return out.rename_columns([*order, *cols]).select([*keys, *cols])
 
 
 def rule_histogram(grain: pa.Table) -> pa.Table:

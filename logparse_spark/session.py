@@ -189,7 +189,7 @@ def write_local(table: pa.Table, path: str, fmt: str = "parquet",
     file's data on a rename that replaces one: ~50 ms a file measured.
 
     ``path`` is a directory on the local file system (``local_path``),
-    as ``Ledger._exists`` and ``main.resolve_n_buckets`` also assume.
+    as ``Ledger._commit_files`` and ``main.resolve_n_buckets`` also assume.
     """
     os.makedirs(path, exist_ok=True)
     tmp_name = f".part-{uuid.uuid4().hex}.{fmt}"

@@ -1,6 +1,7 @@
 """Physical-plan discipline tests: the properties that make the
 pipeline survive a 100x scale-up, pinned as assertions."""
 
+import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -39,12 +40,18 @@ def _parquet_input(spark, path, n=100):
 
 
 def test_driver_local_tables_are_local_relations(spark, tmp_path):
-    """rules_dim and the empty ledger are planned from local rows: a
-    Python-list DataFrame would plan as a LogicalRDD, whose every job
-    runs a second Python worker pool."""
-    for df in (rules_dim(spark), Ledger(spark, str(tmp_path / "no_ledger")).done()):
+    """rules_dim and the ledger's committed quanta, empty or not, are
+    planned from local rows: a Python-list DataFrame would plan as a
+    LogicalRDD, whose every job runs a second Python worker pool, and
+    reading the commit files through Spark runs jobs of its own."""
+    ledger = Ledger(spark, str(tmp_path / "ledger"))
+    frames = [rules_dim(spark), ledger.done()]
+    ledger.commit(pa.table({"source": ["s1"], "bucket": [0], "rows": [3]}), "r1")
+    frames.append(ledger.done())
+    for df in frames:
         plan = _optimized(df)
         assert plan.startswith("LocalRelation"), plan
+    assert [tuple(r) for r in frames[-1].collect()] == [("s1", 0, 3)]
 
 
 def test_rules_dim_rows_survive_the_arrow_conversion(spark):

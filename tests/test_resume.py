@@ -6,14 +6,17 @@ import os
 import re
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import logparse_spark.ledger as ledger_mod
 from logparse_spark.ledger import Ledger
 from logparse_spark.main import run_pipeline
 from logparse_spark.operators.route import quantum_dir, read_sink, route, with_bucket
 from logparse_spark.operators.views import sink_view
-from logparse_spark.sources.datagen import generate_sequences
+from logparse_spark.sources.datagen import generate_sequences, write_sequences
 
 N = 2000
 
@@ -134,6 +137,110 @@ def test_pending_partitions_anti_join(spark, tmp_path):
     ledger.commit(first3.limit(1), "run2")
     assert ledger.pending(seq).count() == n - 3
     first3.unpersist()
+
+
+def test_done_keeps_each_quantums_latest_commit(spark, tmp_path, monkeypatch):
+    """Two commits of one quantum: the one with the later committed_at
+    wins, whichever file was written first; a crashed commit's
+    dot-prefixed temp file and _meta.json are not commits."""
+    path = str(tmp_path / "ledger")
+    ledger = Ledger(spark, path)
+    for at, rows in ((200.0, 9), (100.0, 5)):  # the later commit is written first
+        monkeypatch.setattr(ledger_mod.time, "time", lambda at=at: at)
+        ledger.commit(pa.table({"source": ["s1", "s2"], "bucket": [0, 1], "rows": [rows, 3]}), f"r{rows}")
+    monkeypatch.undo()
+    newest = pq.read_table(os.path.join(path, os.listdir(path)[0]))
+    pq.write_table(newest.set_column(4, "committed_at", pa.array([300.0, 300.0])),
+                   os.path.join(path, ".part-crashed.parquet"))
+    with open(os.path.join(path, "_meta.json"), "w") as f:
+        json.dump({"n_buckets": 2}, f)
+    assert sorted(map(tuple, ledger.done().collect())) == [("s1", 0, 9), ("s2", 1, 3)]
+
+
+@pytest.mark.parametrize("blank", [[""], [None], ["", None]], ids=["empty", "null", "both"])
+def test_blank_sources_reach_done(spark, tmp_path, monkeypatch, blank):
+    """A "" or null source lands in Spark's default partition dir and
+    reads back as null, so run_pipeline takes "" as null: a fresh run
+    writes both as one quantum per bucket, a resume finds them done,
+    and a resume that has them pending routes exactly their rows."""
+    seq = generate_sequences(spark, 400, partitions=2)
+    pick = F.pmod(F.crc32("doc_id"), F.lit(8))
+    for i, s in enumerate(blank):
+        seq = seq.withColumn("source", F.when(pick == i, F.lit(s)).otherwise(F.col("source")))
+    n_blank = seq.where(F.col("source").isNull() | (F.col("source") == "")).count()
+    assert n_blank > 0
+
+    fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    assert run_pipeline(spark, seq, fresh, n_buckets=2, resume=False)["routed_rows"] == 400
+    for _ in range(2):
+        assert run_pipeline(spark, seq, fresh, n_buckets=2)["routed_rows"] == 0
+
+    real = Ledger.pending
+    with monkeypatch.context() as m:  # a run that crashed before the blank quanta
+        m.setattr(Ledger, "pending",
+                  lambda self, parts: real(self, parts).where(F.col("source").isNotNull()))
+        assert run_pipeline(spark, seq, resumed, n_buckets=2)["routed_rows"] == 400 - n_blank
+    assert run_pipeline(spark, seq, resumed, n_buckets=2)["routed_rows"] == n_blank
+    assert run_pipeline(spark, seq, resumed, n_buckets=2)["routed_rows"] == 0
+    for out in (fresh, resumed):
+        back = read_sink(spark, f"{out}/sinks")
+        assert back.count() == back.select("doc_id").distinct().count() == 400
+        assert back.where(F.col("source").isNull()).count() == n_blank
+    assert _fingerprint(spark, resumed) == _fingerprint(spark, fresh)
+
+
+def _scans(plan):
+    """The FileSourceScanExec nodes of an executed plan, through AQE's
+    wrappers."""
+    found, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif name == "FileSourceScanExec":
+            found.append(node)
+        else:
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+def test_resumed_scan_reads_only_the_pending_sources(spark, tmp_path, monkeypatch):
+    """A resume over a source-partitioned input scans only the dirs of
+    the sources with a pending quantum: the FileScan under the rows
+    route writes carries a source partition filter and outputs exactly
+    those sources' rows."""
+    import logparse_spark.main as mainmod
+
+    src = str(tmp_path / "seq")
+    write_sequences(spark, src, 600, n_buckets=2)
+    seq = spark.read.parquet(src).drop("bucket")
+    sources = sorted(r["source"] for r in seq.select("source").distinct().collect())
+    redo = sources[1:3]
+    out = str(tmp_path / "out")
+    real = Ledger.pending
+    with monkeypatch.context() as m:  # a run that crashed before two sources
+        m.setattr(Ledger, "pending",
+                  lambda self, parts: real(self, parts).where(~F.col("source").isin(redo)))
+        run_pipeline(spark, seq, out, n_buckets=2)
+
+    routed, real_route = [], mainmod.route
+
+    def spy(df, *args, **kwargs):
+        routed.append(df)
+        return real_route(df, *args, **kwargs)
+
+    monkeypatch.setattr(mainmod, "route", spy)
+    n_redo = seq.where(F.col("source").isin(redo)).count()
+    assert run_pipeline(spark, seq, out, n_buckets=2)["routed_rows"] == n_redo
+    assert len(routed) == 1
+    routed[0].collect()  # the same plan, executed: its scan's metrics are set
+    (scan,) = _scans(routed[0]._jdf.queryExecution().executedPlan())
+    assert "source" in scan.metadata().apply("PartitionFilters")
+    assert scan.metrics().apply("numOutputRows").value() == n_redo < 600
 
 
 def test_resume_routes_rows_appended_to_committed_quanta(spark, tmp_path):
